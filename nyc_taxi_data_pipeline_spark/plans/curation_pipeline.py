@@ -2,10 +2,10 @@
 `curation_funnel` catalog query (which verifies the same stages against the
 DuckDB oracle without writing anything).
 
-Zone discipline mirrors `plans/pipeline.py`'s taxi star job: every output is
-an immutable versioned snapshot behind a `_CURRENT` pointer, published with
-Write-Audit-Publish (quality metrics observed on the write itself gate the
-pointer flip — one scan per zone, no second audit pass).
+Every output is a versioned zone (sources/io: immutable snapshots named by
+a commit log), published with Write-Audit-Publish: quality metrics observed
+on the write itself gate the commit — one scan per zone, no second audit
+pass.
 
     raw documents
       → clean_documents   gated (lang / quality / token bounds),
@@ -32,7 +32,7 @@ from nyc_taxi_data_pipeline_spark.operators.textstats import content_defined_chu
 from nyc_taxi_data_pipeline_spark.sources.catalog import load_table
 from nyc_taxi_data_pipeline_spark.sources.io import (
     audited_publish_zone,
-    read_published_zone,
+    read_zone_snapshot,
 )
 
 DEFAULT_RATES: dict[str, int] = {f"src{i}": 100 for i in range(5)} | {
@@ -104,8 +104,8 @@ def run_curation_pipeline(
     rates: dict[str, int] | None = None,
 ) -> dict:
     """Run the whole curation job; returns a report of zone versions, row
-    counts, and the observed audit metrics. Reruns publish NEW immutable
-    versions (readers of the old pointer are untouched); content is
+    counts, and the observed audit metrics. Reruns commit NEW immutable
+    versions (readers of older versions are untouched); content is
     deterministic, so rerun row counts are identical."""
     rates = DEFAULT_RATES if rates is None else rates
     docs = load_table(spark, sf_dir, "documents")
@@ -116,7 +116,7 @@ def run_curation_pipeline(
     )
     if v_clean is None:
         return {"published": False, "clean_metrics": m_clean}
-    clean_zone = read_published_zone(spark, f"{out_root}/clean_documents")
+    clean_zone = read_zone_snapshot(spark, f"{out_root}/clean_documents", v_clean)
 
     chunks = content_defined_chunks(clean_zone, min_tokens=4)
     v_chunks, m_chunks = audited_publish_zone(

@@ -2318,10 +2318,10 @@ def bitemporal_zone_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     versions — 'what did we believe on publish 0 vs publish 1 about who
     was in state S at T?' — the audit/backtest query a versioned
     lakehouse exists to answer, impossible without snapshot-isolated
-    versions. Each snapshot read is a plain pruned parquet scan of its
-    immutable v-dir; the valid-time filter is a scan predicate; the
-    final reconciliation is a tiny full-outer join on state
-    (sources/io.publish_zone_version, read_zone_snapshot; reference
+    versions. Each snapshot read is a plain pruned parquet scan of the
+    immutable data dir its log entry names; the valid-time filter is a
+    scan predicate; the final reconciliation is a tiny full-outer join on
+    state (sources/io.publish_zone_version, read_zone_snapshot; reference
     lakehouse intent: scripts/convert_to_delta.py)."""
     import os
     import shutil
@@ -2359,11 +2359,12 @@ def bitemporal_zone_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     try:
         v0 = publish_zone_version(
-            scd(e.filter(F.col("event_type") != "purchase")), zone
+            scd(e.filter(F.col("event_type") != "purchase")), zone, -1
         )
         v1 = publish_zone_version(
             scd(e.filter(~F.col("event_type").isin("purchase", "error"))),
             zone,
+            v0,
         )
         t = F.lit("2024-01-15 00:00:00").cast("timestamp")
 

@@ -9,6 +9,11 @@ environments.
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -213,7 +218,6 @@ def compact_parquet_zone(
     Plain parquet has no transaction, so the rewrite staging-swaps through
     a sibling directory rather than reading and overwriting in place."""
     import math
-    import shutil
     from pathlib import Path
 
     df = spark.read.parquet(path)
@@ -255,41 +259,6 @@ def create_external_table(spark: SparkSession, name: str, path: str, fmt: str = 
     generator (utils/trinp_db.py:8-27) with the session catalog."""
     spark.sql(f"CREATE TABLE IF NOT EXISTS {name} USING {fmt} LOCATION '{path}'")
 
-def publish_zone_version(df: DataFrame, zone: str) -> int:
-    """Atomic zone publish without a table format: write the new snapshot
-    to an immutable `v=<n>` directory, then flip a tiny `_CURRENT` pointer
-    file — the minimal commit protocol Delta/Iceberg provide natively
-    (swap for `write_delta` when the jars are present, SURVEY §2.1 S9).
-
-    Readers that resolved the pointer before the flip keep reading the old
-    immutable version (snapshot isolation); a crashed writer leaves a
-    dangling v-dir but never a half-visible table, because the pointer
-    write is a single small-file rename. Returns the published version."""
-    import os
-
-    os.makedirs(zone, exist_ok=True)
-    versions = [
-        int(d.split("=")[1])
-        for d in os.listdir(zone)
-        if d.startswith("v=") and d.split("=")[1].isdigit()
-    ]
-    version = max(versions, default=-1) + 1
-    df.write.mode("errorifexists").parquet(f"{zone}/v={version}")
-    tmp = f"{zone}/_CURRENT.tmp"
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, f"{zone}/_CURRENT")  # atomic on POSIX
-    return version
-
-
-def read_published_zone(spark: SparkSession, zone: str) -> DataFrame:
-    """Resolve the `_CURRENT` pointer and read that immutable snapshot.
-    CAS-committed versions live at log-recorded staged paths, legacy ones
-    at `v=<n>` — zone_version_path resolves both."""
-    with open(f"{zone}/_CURRENT") as f:
-        version = int(f.read().strip())
-    return spark.read.parquet(zone_version_path(zone, version))
-
 
 def write_bucketed_table(
     df: DataFrame, name: str, key: str, buckets: int = 32, sorted_by_key: bool = True
@@ -307,459 +276,6 @@ def write_bucketed_table(
         writer = writer.sortBy(key)
     writer.saveAsTable(name)
 
-
-def audited_publish_zone(df: DataFrame, zone: str, rules) -> tuple[int | None, dict]:
-    """Write-Audit-Publish: write the snapshot to the next immutable
-    `v=<n>` directory with quality metrics observed ON the write itself
-    (one scan total), and flip the `_CURRENT` pointer ONLY if no rule is
-    violated. A failed audit leaves the pointer untouched — readers keep
-    the last good version and the bad snapshot sits in its v-dir for
-    inspection (delete or republish later). Returns (published version or
-    None, metric dict). This is the WAP commit protocol Iceberg/Delta
-    users build with branches, done with the pointer file."""
-    import os
-
-    from nyc_taxi_data_pipeline_spark.operators.quality import observe_quality
-
-    observed, obs = observe_quality(df, rules)
-    os.makedirs(zone, exist_ok=True)
-    versions = [
-        int(d.split("=")[1])
-        for d in os.listdir(zone)
-        if d.startswith("v=") and d.split("=")[1].isdigit()
-    ]
-    version = max(versions, default=-1) + 1
-    observed.write.mode("errorifexists").parquet(f"{zone}/v={version}")
-    metrics = dict(obs.get)
-    violated = any(v > 0 for k, v in metrics.items() if k != "observed_rows")
-    if violated:
-        return None, metrics
-    tmp = f"{zone}/_CURRENT.tmp"
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, f"{zone}/_CURRENT")
-    return version, metrics
-
-
-def list_zone_versions(zone: str) -> list[int]:
-    """All snapshot versions present in the zone, ascending: legacy `v=<n>`
-    dirs plus CAS-committed log versions (whose data lives at immutable
-    staged paths). The published one is whatever `_CURRENT`/the log names
-    — a superset means rejected WAP audits or rollback history."""
-    import os
-
-    if not os.path.isdir(zone):
-        return []
-    dirs = {
-        int(d.split("=")[1])
-        for d in os.listdir(zone)
-        if d.startswith("v=") and d.split("=")[1].isdigit()
-    }
-    return sorted(dirs | set(read_zone_log(zone)))
-
-
-def rollback_zone(zone: str, version: int) -> None:
-    """Point `_CURRENT` back at an existing immutable snapshot — the
-    recovery path when a published version turns out bad downstream.
-    O(1): a pointer flip, no data movement, same atomic rename as
-    publish. Raises if the version was never written."""
-    import os
-
-    if not os.path.isdir(f"{zone}/v={version}"):
-        raise ValueError(f"zone {zone} has no version {version}")
-    tmp = f"{zone}/_CURRENT.tmp"
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, f"{zone}/_CURRENT")
-
-
-def delete_rows_from_zone(
-    spark: SparkSession, zone: str, predicate
-) -> tuple[int, int]:
-    """Targeted delete (GDPR right-to-be-forgotten shape): publish a NEW
-    immutable version of the zone without the rows matching `predicate`
-    (a Column). Old versions keep the data until retention removes their
-    v-dirs — deletion-by-rewrite is the lakehouse contract (Delta/Iceberg
-    DELETE does the same under a fancier log). Returns (new version,
-    rows deleted). O(zone) rewrite: at 100 TB partition the zone so the
-    rewrite touches only partitions that can contain the targets (pair
-    with partition-level checksums to find them)."""
-    current = read_published_zone(spark, zone)
-    keep = current.filter(~predicate)
-    deleted = current.count() - keep.count()
-    version = publish_zone_version(keep, zone)
-    return version, deleted
-
-
-def zone_group_checksums(df: DataFrame, key: str, cols: list[str]) -> DataFrame:
-    """Per-group order-independent checksum: md5 each row's canonical
-    string, fold 60-bit prefixes with an addition per group key — the
-    anti-entropy primitive for comparing two zone versions (or a replica)
-    WITHOUT shipping rows: groups whose checksum differs are the only
-    ones to re-sync. Same exactness recipe as table_checksum_orderfree."""
-    from pyspark.sql import functions as F
-
-    canonical = F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
-    row_val = F.conv(F.substring(F.md5(canonical), 1, 15), 16, 10).cast(
-        "decimal(38,0)"
-    )
-    return df.groupBy(key).agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(row_val).cast("string").alias("checksum"),
-    )
-
-
-def zone_diff_by_checksum(
-    spark: SparkSession, zone: str, v_old: int, v_new: int, key: str, cols: list[str]
-) -> DataFrame:
-    """Which groups changed between two zone versions — computed from
-    group checksums alone (full-outer join of two tiny checksum tables,
-    never a row-level diff). Returns (key, change) with change in
-    {'added','removed','modified'}; unchanged groups are absent. The
-    row-level reconciliation (full_outer_reconciliation) then runs only
-    on the flagged groups."""
-    from pyspark.sql import functions as F
-
-    old = zone_group_checksums(
-        spark.read.parquet(f"{zone}/v={v_old}"), key, cols
-    ).select(key, F.col("checksum").alias("__old"))
-    new = zone_group_checksums(
-        spark.read.parquet(f"{zone}/v={v_new}"), key, cols
-    ).select(key, F.col("checksum").alias("__new"))
-    return (
-        old.join(new, key, "full_outer")
-        .withColumn(
-            "change",
-            F.when(F.col("__old").isNull(), F.lit("added"))
-            .when(F.col("__new").isNull(), F.lit("removed"))
-            .when(F.col("__old") != F.col("__new"), F.lit("modified")),
-        )
-        .filter(F.col("change").isNotNull())
-        .select(key, "change")
-    )
-
-
-def upsert_rows_to_zone(
-    spark: SparkSession, zone: str, updates: DataFrame, key: str
-) -> tuple[int, int, int]:
-    """MERGE-style batch upsert: publish a new version where rows matching
-    `key` in `updates` replace the current rows and unmatched updates
-    append — the update half of the maintenance pair with
-    `delete_rows_from_zone` (Delta/Iceberg MERGE INTO under the pointer
-    protocol). Returns (version, n_updated, n_inserted). Column sets must
-    match. The current snapshot is read once; updates win via left_anti +
-    union (cheaper and easier to reason about than a full-outer coalesce
-    when updates replace WHOLE rows). At 100 TB: partition the zone on a
-    prefix of the key so the rewrite only touches affected partitions."""
-    current = read_published_zone(spark, zone).select(*updates.columns)
-    matched = current.join(updates.select(key), key, "left_semi").count()
-    survivors = current.join(updates.select(key), key, "left_anti")
-    merged = survivors.unionByName(updates)
-    version = publish_zone_version(merged, zone)
-    return version, matched, updates.count() - matched
-
-
-# --------------------------------------------------------------------------
-# optimistic concurrency for the versioned zone protocol
-# --------------------------------------------------------------------------
-#
-# publish_zone_version is single-writer: two concurrent publishers both
-# compute max(v)+1 and the slower pointer flip silently discards the other
-# writer's snapshot (lost update). The CAS layer below adds the commit
-# protocol Delta Lake gets from its _delta_log (reference consumes it via
-# scripts/convert_to_delta.py:85-88): a commit IS the atomic
-# exclusive-creation of the next NUMBERED log entry — O_CREAT|O_EXCL on a
-# POSIX filesystem, conditional PUT (If-None-Match) on an object store —
-# so exactly one writer can ever own a given version number, with no lock
-# held during the (arbitrarily long) data write. Writers declare the
-# partitions they touched; an interleaved commit on DISJOINT partitions is
-# rebased and retried, an overlapping one raises ZoneConflictError.
-
-
-class ZoneConflictError(RuntimeError):
-    """Another writer committed a conflicting version since this writer's
-    snapshot was taken. Carries the base the writer expected and the
-    version that blocked it."""
-
-    def __init__(self, zone: str, expected: int, blocking: int, why: str):
-        super().__init__(
-            f"zone {zone}: expected to commit on top of v{expected} but "
-            f"v{blocking} committed since ({why})"
-        )
-        self.expected = expected
-        self.blocking = blocking
-
-
-def _zone_log_dir(zone: str) -> str:
-    import os
-
-    return os.path.join(zone, "_log")
-
-
-def read_zone_log(zone: str) -> dict[int, dict]:
-    """Committed transactions, by version. A v-dir or staged dir WITHOUT a
-    log entry is an in-flight or crashed writer — never visible here."""
-    import json
-    import os
-
-    log_dir = _zone_log_dir(zone)
-    if not os.path.isdir(log_dir):
-        return {}
-    out: dict[int, dict] = {}
-    for name in os.listdir(log_dir):
-        if name.endswith(".json") and name[:-5].isdigit():
-            with open(os.path.join(log_dir, name)) as f:
-                out[int(name[:-5])] = json.load(f)
-    return out
-
-
-def current_zone_version(zone: str) -> int | None:
-    """Latest committed version: max log entry when the zone has a commit
-    log, else the legacy `_CURRENT` pointer (zones written only by
-    publish_zone_version). The log is authoritative — `_CURRENT` is a
-    best-effort cache for legacy readers once CAS writers appear."""
-    import os
-
-    log = read_zone_log(zone)
-    if log:
-        return max(log)
-    cur = os.path.join(zone, "_CURRENT")
-    if os.path.isfile(cur):
-        with open(cur) as f:
-            return int(f.read().strip())
-    return None
-
-
-def zone_version_path(zone: str, version: int) -> str:
-    """Data directory of a committed version: the staged dir recorded in
-    the log entry for CAS-committed versions (immutable — never renamed,
-    so a path resolved once stays valid for the life of a lazy plan), or
-    the legacy `v=<n>` dir for versions published by the non-CAS
-    protocol."""
-    import os
-
-    entry = read_zone_log(zone).get(version)
-    if entry is not None:
-        staged = os.path.join(zone, entry["data_dir"])
-        if os.path.isdir(staged):
-            return staged
-    canonical = os.path.join(zone, f"v={version}")
-    if os.path.isdir(canonical):
-        return canonical
-    raise ValueError(f"zone {zone} has no data for version {version}")
-
-
-def read_zone_snapshot(
-    spark: SparkSession, zone: str, version: int | None = None
-) -> DataFrame:
-    """Snapshot-isolated read at `version` (default: latest committed)."""
-    v = current_zone_version(zone) if version is None else version
-    if v is None:
-        raise ValueError(f"zone {zone} has no committed version")
-    return spark.read.parquet(zone_version_path(zone, v))
-
-
-def _refresh_current_pointer(zone: str) -> None:
-    """Best-effort monotonic refresh of the legacy `_CURRENT` cache after
-    a CAS commit so plain read_published_zone keeps working. Races between
-    refreshers can only leave it STALE (pointing at an older committed,
-    still-immutable snapshot), never wrong."""
-    import os
-
-    v = current_zone_version(zone)
-    cur = os.path.join(zone, "_CURRENT")
-    if os.path.isfile(cur):
-        with open(cur) as f:
-            try:
-                if int(f.read().strip()) >= v:
-                    return
-            except ValueError:
-                pass
-    tmp = os.path.join(zone, f"_CURRENT.tmp.{os.getpid()}")
-    with open(tmp, "w") as f:
-        f.write(str(v))
-    os.replace(tmp, cur)
-
-
-def _try_commit(
-    zone: str,
-    expected: int,
-    staged_rel: str,
-    partitions: list | None,
-    partition_col: str | None,
-) -> int:
-    """One CAS attempt: every version is a FULL snapshot baked from the
-    writer's base, so ANY commit after `expected` makes the staged
-    snapshot stale — this always raises ZoneConflictError on interleaving.
-    The `why` distinguishes rebasable staleness (interleaved commits all
-    touched disjoint partitions: the caller can rebuild its snapshot on
-    the new base and retry) from true write-write conflicts (overlap /
-    serializable writers: only re-deriving the update can help). Then
-    exclusive-create the next numbered log entry and return its version."""
-    import json
-    import os
-
-    log_dir = _zone_log_dir(zone)
-    os.makedirs(log_dir, exist_ok=True)
-    while True:
-        log = read_zone_log(zone)
-        latest = max(log, default=expected if expected >= 0 else -1)
-        for v in sorted(log):
-            if v <= expected:
-                continue
-            theirs = log[v].get("partitions")
-            if partitions is None or theirs is None:
-                raise ZoneConflictError(
-                    zone, expected, v, "serializable writers cannot interleave"
-                )
-            if log[v].get("partition_col") != partition_col:
-                raise ZoneConflictError(
-                    zone, expected, v, "different partition columns"
-                )
-            overlap = set(map(str, partitions)) & set(map(str, theirs))
-            if overlap:
-                raise ZoneConflictError(
-                    zone, expected, v, f"overlapping partitions {sorted(overlap)}"
-                )
-            raise ZoneConflictError(
-                zone, expected, v,
-                "disjoint interleaved commit: snapshot stale, rebase and retry",
-            )
-        n = latest + 1
-        entry = {
-            "version": n,
-            "base": expected,
-            "data_dir": staged_rel,
-            "partitions": None
-            if partitions is None
-            else sorted(map(str, partitions)),
-            "partition_col": partition_col,
-        }
-        # unique per ATTEMPT, not per process: two threads in one PID can
-        # race the same n, and a shared tmp path lets the winner's
-        # post-link unlink() delete the loser's pending tmp (observed as
-        # FileNotFoundError instead of the CAS conflict). uuid covers
-        # threads, retries, and PID reuse alike.
-        import uuid as _uuid
-
-        tmp = os.path.join(log_dir, f".{n}.json.{_uuid.uuid4().hex}.tmp")
-        with open(tmp, "w") as f:
-            json.dump(entry, f)
-        try:
-            # exclusive hardlink-style publish: link() fails with EEXIST
-            # atomically, and the tmp file is complete before linking, so
-            # a reader can never observe a torn log entry
-            os.link(tmp, os.path.join(log_dir, f"{n}.json"))
-        except FileExistsError:
-            os.unlink(tmp)
-            continue  # lost the race for n — re-scan, conflict-check v=n too
-        os.unlink(tmp)
-        # NO post-commit rename into a v-dir: a concurrent rebaser may
-        # have already planned a (lazy) scan against the staged path it
-        # resolved from the log, and moving the directory under a live
-        # plan turns a benign rebase into a read failure. Data stays at
-        # its immutable staged path; the log is the naming authority.
-        _refresh_current_pointer(zone)
-        return n
-
-
-def publish_zone_version_cas(
-    df: DataFrame, zone: str, expected_version: int
-) -> int:
-    """Serializable whole-snapshot publish: commit `df` as the next version
-    IF AND ONLY IF no other writer committed after `expected_version`
-    (the version this writer's snapshot/derivation was based on; -1 for a
-    brand-new zone). Any interleaved commit raises ZoneConflictError —
-    whole-snapshot writers cannot rebase mechanically because their new
-    snapshot bakes in the old state of every row. The expensive data write
-    happens BEFORE the commit attempt, unserialized, into a staged dir."""
-    import os
-    import uuid
-
-    import shutil
-
-    os.makedirs(zone, exist_ok=True)
-    staged_rel = os.path.join("_staged", f"tx-{uuid.uuid4().hex}")
-    df.write.mode("errorifexists").parquet(os.path.join(zone, staged_rel))
-    try:
-        return _try_commit(zone, expected_version, staged_rel, None, None)
-    except ZoneConflictError:
-        shutil.rmtree(os.path.join(zone, staged_rel), ignore_errors=True)
-        raise
-
-
-def publish_zone_partitions_cas(
-    spark: SparkSession,
-    zone: str,
-    updates: DataFrame,
-    partition_col: str,
-    expected_version: int,
-    max_rebase: int = 3,
-) -> int:
-    """Partition-scoped optimistic publish with retry-with-rebase: replace
-    the partitions present in `updates` (distinct `partition_col` values),
-    keep every other partition from the base snapshot. If another writer
-    commits first on DISJOINT partitions, the snapshot is rebuilt on top
-    of their commit and the commit retried (bounded by `max_rebase`);
-    overlapping partitions raise ZoneConflictError — the caller must
-    re-derive its update from the new state, which no engine can do
-    mechanically.
-
-    At 100 TB the rebase is metadata-shaped: the base snapshot's untouched
-    partitions re-enter the new version by reference (partition dirs are
-    immutable parquet), so only the updated partitions are rewritten —
-    here the snapshot union rewrites them physically, which is the same
-    plan with copies instead of symlinks."""
-    import os
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    touched = [
-        r[0] for r in updates.select(partition_col).distinct().collect()
-    ]
-    expected = expected_version
-    for _ in range(max_rebase + 1):
-        if expected >= 0:
-            base = read_zone_snapshot(spark, zone, expected).filter(
-                ~F.col(partition_col).isin(touched)
-            )
-            snapshot = base.unionByName(updates)
-        else:
-            snapshot = updates
-        os.makedirs(zone, exist_ok=True)
-        staged_rel = os.path.join("_staged", f"tx-{uuid.uuid4().hex}")
-        snapshot.repartition(partition_col).write.mode(
-            "errorifexists"
-        ).partitionBy(partition_col).parquet(os.path.join(zone, staged_rel))
-        try:
-            return _try_commit(
-                zone, expected, staged_rel, touched, partition_col
-            )
-        except ZoneConflictError:
-            import shutil
-
-            shutil.rmtree(os.path.join(zone, staged_rel), ignore_errors=True)
-            # rebasable only if EVERY interleaved commit is a
-            # partition-scoped write on our partition column whose
-            # partitions are disjoint from ours
-            log = read_zone_log(zone)
-            mine = set(map(str, touched))
-            for v in sorted(log):
-                if v <= expected:
-                    continue
-                theirs = log[v].get("partitions")
-                if (
-                    theirs is None
-                    or log[v].get("partition_col") != partition_col
-                    or mine & set(theirs)
-                ):
-                    raise
-            expected = max(log)  # all disjoint: rebase on top and retry
-    raise ZoneConflictError(
-        zone, expected, current_zone_version(zone) or -1,
-        f"gave up after {max_rebase} rebases",
-    )
 
 
 # --------------------------------------------------------------------------
@@ -783,7 +299,6 @@ def publish_zone_partitions_cas(
 
 def delta_table_versions(path: str) -> list[int]:
     """Commit versions present in the table's _delta_log, ascending."""
-    import os
     import re
 
     log_dir = os.path.join(path, "_delta_log")
@@ -800,8 +315,6 @@ def _delta_active_files(path: str, version: int) -> tuple[list[str], dict]:
     """Replay the Delta log up to `version` (inclusive): newest checkpoint
     at or below it, then the JSON commits after it. Returns (active
     relative file paths, last metaData action seen)."""
-    import json
-    import os
     import re
     import urllib.parse
 
@@ -866,7 +379,6 @@ def read_delta_snapshot(
     hive-style partition dirs: basePath recovers the partition columns.
     Column-mapping / deletion-vector tables (reader protocol v2
     features) are rejected rather than misread."""
-    import os
 
     versions = delta_table_versions(path)
     if not versions and version is None:
@@ -895,90 +407,425 @@ def read_delta_snapshot(
     )
 
 
-def zone_history(zone: str) -> list[dict]:
-    """DESCRIBE HISTORY for a zone: one row per version across BOTH
-    protocols — CAS commits carry their recorded base/partitions, legacy
-    v-dirs appear with base -1 markers. Ascending by version."""
-    import os
 
-    log = read_zone_log(zone)
-    out = []
-    for v in list_zone_versions(zone):
-        e = log.get(v)
-        if e is not None:
-            out.append(
-                {
-                    "version": v,
-                    "base": e.get("base"),
-                    "partition_col": e.get("partition_col"),
-                    "partitions": e.get("partitions"),
-                    "data_dir": e.get("data_dir"),
-                    "protocol": "cas",
-                }
-            )
-        else:
-            out.append(
-                {
-                    "version": v,
-                    "base": None,
-                    "partition_col": None,
-                    "partitions": None,
-                    "data_dir": f"v={v}",
-                    "protocol": "legacy",
-                }
-            )
+# --------------------------------------------------------------------------
+# versioned zones: one commit protocol
+# --------------------------------------------------------------------------
+#
+# A zone is a set of immutable snapshots named by a commit log — the
+# protocol Delta Lake gets from its _delta_log (the reference converts its
+# processed zone with scripts/convert_to_delta.py:85-88). A writer first
+# stages its whole snapshot into a fresh `_staged/tx-<uuid>` dir, with no
+# lock held during the (arbitrarily long) data write, then commits it by
+# exclusively creating the next NUMBERED log entry `_log/<n>.json` —
+# O_CREAT|O_EXCL on a POSIX filesystem, conditional PUT (If-None-Match) on
+# an object store — so exactly one writer ever owns a version number. The
+# entry names the version's data dir; a staged dir no entry names (an
+# in-flight, crashed, conflicted or audit-rejected writer) is invisible
+# until vacuum_zone removes it. Every writer states the version its
+# snapshot was derived from: any commit since then raises
+# ZoneConflictError, except that partition-scoped writers rebase over
+# interleaved commits on DISJOINT partitions and retry.
+
+
+class ZoneConflictError(RuntimeError):
+    """Another writer committed a conflicting version since this writer's
+    snapshot was taken. Carries the base the writer expected and the
+    version that blocked it."""
+
+    def __init__(self, zone: str, expected: int, blocking: int, why: str):
+        super().__init__(
+            f"zone {zone}: expected to commit on top of v{expected} but "
+            f"v{blocking} committed since ({why})"
+        )
+        self.expected = expected
+        self.blocking = blocking
+
+
+def _zone_log_dir(zone: str) -> str:
+    return os.path.join(zone, "_log")
+
+
+def read_zone_log(zone: str) -> dict[int, dict]:
+    """Committed transactions, by version. A staged dir WITHOUT a log
+    entry is an in-flight, crashed or rejected writer — never visible
+    here."""
+    log_dir = _zone_log_dir(zone)
+    if not os.path.isdir(log_dir):
+        return {}
+    out: dict[int, dict] = {}
+    for name in os.listdir(log_dir):
+        if name.endswith(".json") and name[:-5].isdigit():
+            with open(os.path.join(log_dir, name)) as f:
+                out[int(name[:-5])] = json.load(f)
     return out
+
+
+def current_zone_version(zone: str) -> int | None:
+    """Latest committed version (None for a zone with no commits)."""
+    return max(read_zone_log(zone), default=None)
+
+
+def list_zone_versions(zone: str) -> list[int]:
+    """Committed versions still in the log, ascending."""
+    return sorted(read_zone_log(zone))
+
+
+def zone_version_path(zone: str, version: int) -> str:
+    """Data directory of a committed version, as its log entry records it.
+    Data dirs are immutable — never renamed — so a path resolved once stays
+    valid for the life of a lazy plan."""
+    entry = read_zone_log(zone).get(version)
+    if entry is not None:
+        path = os.path.join(zone, entry["data_dir"])
+        if os.path.isdir(path):
+            return path
+    raise ValueError(f"zone {zone} has no data for version {version}")
+
+
+def read_zone_snapshot(
+    spark: SparkSession, zone: str, version: int | None = None
+) -> DataFrame:
+    """Snapshot-isolated read at `version` (default: latest committed)."""
+    v = current_zone_version(zone) if version is None else version
+    if v is None:
+        raise ValueError(f"zone {zone} has no committed version")
+    return spark.read.parquet(zone_version_path(zone, v))
+
+
+def _try_commit(
+    zone: str,
+    expected: int,
+    data_dir: str,
+    partitions: list | None,
+    partition_col: str | None,
+) -> int:
+    """One CAS attempt: every version is a FULL snapshot baked from the
+    writer's base, so ANY commit after `expected` makes the staged
+    snapshot stale — this always raises ZoneConflictError on interleaving.
+    The `why` distinguishes rebasable staleness (interleaved commits all
+    touched disjoint partitions: the caller can rebuild its snapshot on
+    the new base and retry) from true write-write conflicts (overlap /
+    serializable writers: only re-deriving the update can help). Then
+    exclusive-create the next numbered log entry and return its version."""
+    log_dir = _zone_log_dir(zone)
+    os.makedirs(log_dir, exist_ok=True)
+    while True:
+        log = read_zone_log(zone)
+        latest = max(log, default=expected if expected >= 0 else -1)
+        for v in sorted(log):
+            if v <= expected:
+                continue
+            theirs = log[v].get("partitions")
+            if partitions is None or theirs is None:
+                raise ZoneConflictError(
+                    zone, expected, v, "serializable writers cannot interleave"
+                )
+            if log[v].get("partition_col") != partition_col:
+                raise ZoneConflictError(
+                    zone, expected, v, "different partition columns"
+                )
+            overlap = set(map(str, partitions)) & set(map(str, theirs))
+            if overlap:
+                raise ZoneConflictError(
+                    zone, expected, v, f"overlapping partitions {sorted(overlap)}"
+                )
+            raise ZoneConflictError(
+                zone, expected, v,
+                "disjoint interleaved commit: snapshot stale, rebase and retry",
+            )
+        n = latest + 1
+        entry = {
+            "version": n,
+            "base": expected,
+            "data_dir": data_dir,
+            "partitions": None
+            if partitions is None
+            else sorted(map(str, partitions)),
+            "partition_col": partition_col,
+        }
+        # unique per ATTEMPT, not per process: two threads in one PID can
+        # race the same n, and a shared tmp path lets the winner's
+        # post-link unlink() delete the loser's pending tmp (observed as
+        # FileNotFoundError instead of the CAS conflict). uuid covers
+        # threads, retries, and PID reuse alike.
+        tmp = os.path.join(log_dir, f".{n}.json.{uuid.uuid4().hex}.tmp")
+        with open(tmp, "w") as f:
+            json.dump(entry, f)
+        try:
+            # exclusive hardlink-style publish: link() fails with EEXIST
+            # atomically, and the tmp file is complete before linking, so
+            # a reader can never observe a torn log entry
+            os.link(tmp, os.path.join(log_dir, f"{n}.json"))
+        except FileExistsError:
+            os.unlink(tmp)
+            continue  # lost the race for n — re-scan, conflict-check v=n too
+        os.unlink(tmp)
+        # NO post-commit rename of the data dir: a concurrent rebaser may
+        # have already planned a (lazy) scan against the staged path it
+        # resolved from the log, and moving the directory under a live
+        # plan turns a benign rebase into a read failure. Data stays at
+        # its immutable staged path; the log is the naming authority.
+        return n
+
+
+def _new_staged_dir() -> str:
+    """Zone-relative path of a fresh, never-committed data dir."""
+    return os.path.join("_staged", f"tx-{uuid.uuid4().hex}")
+
+
+def _commit_staged(zone: str, staged: str, expected: int) -> int:
+    """Commit a staged whole snapshot on top of `expected`; a conflicted
+    writer removes its staged data before re-raising."""
+    try:
+        return _try_commit(zone, expected, staged, None, None)
+    except ZoneConflictError:
+        shutil.rmtree(os.path.join(zone, staged), ignore_errors=True)
+        raise
+
+
+def publish_zone_version(df: DataFrame, zone: str, expected_version: int) -> int:
+    """Serializable whole-snapshot publish: commit `df` as the next version
+    IF AND ONLY IF no other writer committed after `expected_version`
+    (the version this writer's snapshot/derivation was based on; -1 for a
+    brand-new zone). Any interleaved commit raises ZoneConflictError —
+    whole-snapshot writers cannot rebase mechanically because their new
+    snapshot bakes in the old state of every row. The expensive data write
+    happens BEFORE the commit attempt, unserialized, into a staged dir.
+    Readers holding an older version keep scanning its immutable data
+    (snapshot isolation); a crashed writer leaves an orphaned staged dir
+    but never a half-visible version. Returns the committed version."""
+    staged = _new_staged_dir()
+    df.write.mode("errorifexists").parquet(os.path.join(zone, staged))
+    return _commit_staged(zone, staged, expected_version)
+
+
+def publish_zone_partitions_cas(
+    spark: SparkSession,
+    zone: str,
+    updates: DataFrame,
+    partition_col: str,
+    expected_version: int,
+    max_rebase: int = 3,
+) -> int:
+    """Partition-scoped optimistic publish with retry-with-rebase: replace
+    the partitions present in `updates` (distinct `partition_col` values),
+    keep every other partition from the base snapshot. If another writer
+    commits first on DISJOINT partitions, the snapshot is rebuilt on top
+    of their commit and the commit retried (bounded by `max_rebase`);
+    overlapping partitions raise ZoneConflictError — the caller must
+    re-derive its update from the new state, which no engine can do
+    mechanically.
+
+    At 100 TB the rebase is metadata-shaped: the base snapshot's untouched
+    partitions re-enter the new version by reference (partition dirs are
+    immutable parquet), so only the updated partitions are rewritten —
+    here the snapshot union rewrites them physically, which is the same
+    plan with copies instead of symlinks."""
+    from pyspark.sql import functions as F
+
+    touched = [
+        r[0] for r in updates.select(partition_col).distinct().collect()
+    ]
+    expected = expected_version
+    for _ in range(max_rebase + 1):
+        if expected >= 0:
+            base = read_zone_snapshot(spark, zone, expected).filter(
+                ~F.col(partition_col).isin(touched)
+            )
+            snapshot = base.unionByName(updates)
+        else:
+            snapshot = updates
+        staged = _new_staged_dir()
+        snapshot.repartition(partition_col).write.mode(
+            "errorifexists"
+        ).partitionBy(partition_col).parquet(os.path.join(zone, staged))
+        try:
+            return _try_commit(zone, expected, staged, touched, partition_col)
+        except ZoneConflictError:
+            shutil.rmtree(os.path.join(zone, staged), ignore_errors=True)
+            # rebasable only if EVERY interleaved commit is a
+            # partition-scoped write on our partition column whose
+            # partitions are disjoint from ours
+            log = read_zone_log(zone)
+            mine = set(map(str, touched))
+            for v in sorted(log):
+                if v <= expected:
+                    continue
+                theirs = log[v].get("partitions")
+                if (
+                    theirs is None
+                    or log[v].get("partition_col") != partition_col
+                    or mine & set(theirs)
+                ):
+                    raise
+            expected = max(log)  # all disjoint: rebase on top and retry
+    raise ZoneConflictError(
+        zone, expected, current_zone_version(zone) or -1,
+        f"gave up after {max_rebase} rebases",
+    )
+
+
+def audited_publish_zone(df: DataFrame, zone: str, rules) -> tuple[int | None, dict]:
+    """Write-Audit-Publish: stage the snapshot with quality metrics
+    observed ON the write itself (one scan total) and commit it on top of
+    the current version ONLY if no rule is violated. A rejected snapshot
+    is never committed — readers keep the last good version, and the
+    staged dir stays on disk for inspection until vacuum_zone removes it.
+    Returns (committed version or None, metric dict); a writer that
+    commits in between raises ZoneConflictError. This is the WAP protocol
+    Iceberg/Delta users build with branches, done with the commit log."""
+    from nyc_taxi_data_pipeline_spark.operators.quality import observe_quality
+
+    base = current_zone_version(zone)
+    observed, obs = observe_quality(df, rules)
+    staged = _new_staged_dir()
+    observed.write.mode("errorifexists").parquet(os.path.join(zone, staged))
+    metrics = dict(obs.get)
+    if any(v > 0 for k, v in metrics.items() if k != "observed_rows"):
+        return None, metrics
+    return _commit_staged(zone, staged, -1 if base is None else base), metrics
+
+
+def rollback_zone(zone: str, version: int) -> int:
+    """RESTORE (Delta semantics): commit a new version whose data is
+    `version`'s immutable data dir — the recovery path when a published
+    version turns out bad downstream. O(1): one log entry, no data
+    movement, and the history keeps every version in between. Raises
+    ValueError if the version has no data, ZoneConflictError if another
+    writer commits first. Returns the new version."""
+    zone_version_path(zone, version)  # raises for unknown/vacuumed versions
+    log = read_zone_log(zone)
+    return _try_commit(zone, max(log), log[version]["data_dir"], None, None)
+
+
+def delete_rows_from_zone(
+    spark: SparkSession, zone: str, predicate
+) -> tuple[int, int]:
+    """Targeted delete (GDPR right-to-be-forgotten shape): commit a NEW
+    version of the zone without the rows matching `predicate` (a Column)
+    on top of the current one. Old versions keep the data until
+    vacuum_zone removes them — deletion-by-rewrite is the lakehouse
+    contract (Delta/Iceberg DELETE does the same under a fancier log).
+    Returns (new version, rows deleted); a writer that commits in between
+    raises ZoneConflictError. O(zone) rewrite: at 100 TB partition the
+    zone so the rewrite touches only partitions that can contain the
+    targets (pair with partition-level checksums to find them)."""
+    base = current_zone_version(zone)
+    current = read_zone_snapshot(spark, zone, base)
+    keep = current.filter(~predicate)
+    deleted = current.count() - keep.count()
+    return publish_zone_version(keep, zone, base), deleted
+
+
+def upsert_rows_to_zone(
+    spark: SparkSession, zone: str, updates: DataFrame, key: str
+) -> tuple[int, int, int]:
+    """MERGE-style batch upsert: commit a new version on top of the
+    current one where rows matching `key` in `updates` replace the
+    current rows and unmatched updates append — the update half of the
+    maintenance pair with `delete_rows_from_zone` (Delta/Iceberg MERGE
+    INTO). Returns (version, n_updated, n_inserted); a writer that commits
+    in between raises ZoneConflictError. Column sets must match. The
+    current snapshot is read once; updates win via left_anti + union
+    (cheaper and easier to reason about than a full-outer coalesce when
+    updates replace WHOLE rows). At 100 TB: partition the zone on a prefix
+    of the key so the rewrite only touches affected partitions."""
+    base = current_zone_version(zone)
+    current = read_zone_snapshot(spark, zone, base).select(*updates.columns)
+    matched = current.join(updates.select(key), key, "left_semi").count()
+    survivors = current.join(updates.select(key), key, "left_anti")
+    merged = survivors.unionByName(updates)
+    version = publish_zone_version(merged, zone, base)
+    return version, matched, updates.count() - matched
+
+
+def zone_group_checksums(df: DataFrame, key: str, cols: list[str]) -> DataFrame:
+    """Per-group order-independent checksum: md5 each row's canonical
+    string, fold 60-bit prefixes with an addition per group key — the
+    anti-entropy primitive for comparing two zone versions (or a replica)
+    WITHOUT shipping rows: groups whose checksum differs are the only
+    ones to re-sync. Same exactness recipe as table_checksum_orderfree."""
+    from pyspark.sql import functions as F
+
+    canonical = F.concat_ws("|", *[F.col(c).cast("string") for c in cols])
+    row_val = F.conv(F.substring(F.md5(canonical), 1, 15), 16, 10).cast(
+        "decimal(38,0)"
+    )
+    return df.groupBy(key).agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(row_val).cast("string").alias("checksum"),
+    )
+
+
+def zone_diff_by_checksum(
+    spark: SparkSession, zone: str, v_old: int, v_new: int, key: str, cols: list[str]
+) -> DataFrame:
+    """Which groups changed between two zone versions — computed from
+    group checksums alone (full-outer join of two tiny checksum tables,
+    never a row-level diff). Returns (key, change) with change in
+    {'added','removed','modified'}; unchanged groups are absent. The
+    row-level reconciliation (full_outer_reconciliation) then runs only
+    on the flagged groups."""
+    from pyspark.sql import functions as F
+
+    old = zone_group_checksums(
+        read_zone_snapshot(spark, zone, v_old), key, cols
+    ).select(key, F.col("checksum").alias("__old"))
+    new = zone_group_checksums(
+        read_zone_snapshot(spark, zone, v_new), key, cols
+    ).select(key, F.col("checksum").alias("__new"))
+    return (
+        old.join(new, key, "full_outer")
+        .withColumn(
+            "change",
+            F.when(F.col("__old").isNull(), F.lit("added"))
+            .when(F.col("__new").isNull(), F.lit("removed"))
+            .when(F.col("__old") != F.col("__new"), F.lit("modified")),
+        )
+        .filter(F.col("change").isNotNull())
+        .select(key, "change")
+    )
+
+
+def zone_history(zone: str) -> list[dict]:
+    """DESCRIBE HISTORY for a zone: the log entry of every committed
+    version (version, base, data_dir, partitions, partition_col),
+    ascending. A rollback shows as a new version reusing an older
+    version's data_dir."""
+    log = read_zone_log(zone)
+    return [log[v] for v in sorted(log)]
 
 
 def vacuum_zone(zone: str, keep_last: int = 2) -> dict:
     """VACUUM: reclaim disk from (a) versions older than the newest
-    `keep_last` committed ones — their data dirs AND log entries are
-    removed, so time travel past the horizon fails loudly instead of
-    resolving to missing data — and (b) ORPHANED staged dirs (crashed or
-    conflicted writers whose uuid dir no commit references). The current
-    version is always retained regardless of `keep_last`. Returns
+    `keep_last` committed ones — their log entries are removed, so time
+    travel past the horizon fails loudly instead of resolving to missing
+    data, and so are their data dirs unless a retained version (a
+    rollback) still references them — and (b) ORPHANED staged dirs
+    (crashed, conflicted or audit-rejected writers whose uuid dir no
+    commit references). The current version is always retained. Returns
     {"removed_versions": [...], "removed_orphans": n}.
 
     Safety: readers of a retained version are unaffected (their dirs are
     immutable and untouched); readers holding a lazy plan against a
     vacuumed version fail on next action — the same contract as Delta's
     VACUUM versus long-running time-travel readers."""
-    import os
-    import shutil
-
-    keep_last = max(1, keep_last)
-    versions = list_zone_versions(zone)
-    if not versions:
-        return {"removed_versions": [], "removed_orphans": 0}
-    retained = set(versions[-keep_last:])
-    cur = current_zone_version(zone)
-    if cur is not None:
-        retained.add(cur)
     log = read_zone_log(zone)
-    removed = []
-    for v in versions:
-        if v in retained:
-            continue
-        entry = log.get(v)
-        data = os.path.join(zone, entry["data_dir"]) if entry else os.path.join(
-            zone, f"v={v}"
-        )
-        shutil.rmtree(data, ignore_errors=True)
-        if entry is not None:
-            try:
-                os.unlink(os.path.join(zone, "_log", f"{v}.json"))
-            except OSError:
-                pass
-        removed.append(v)
-    # orphaned staged dirs: present on disk, referenced by no commit
+    versions = sorted(log)
+    retained = versions[-max(1, keep_last):]
+    removed = [v for v in versions if v not in retained]
+    for v in removed:
+        try:
+            os.unlink(os.path.join(_zone_log_dir(zone), f"{v}.json"))
+        except FileNotFoundError:  # a concurrent vacuum removed it first
+            pass
+    committed = {os.path.basename(e["data_dir"]) for e in log.values()}
+    live = {os.path.basename(log[v]["data_dir"]) for v in retained}
     staged_root = os.path.join(zone, "_staged")
     orphans = 0
-    if os.path.isdir(staged_root):
-        live = {
-            os.path.basename(e["data_dir"]) for e in read_zone_log(zone).values()
-        }
-        for d in os.listdir(staged_root):
-            if d not in live:
-                shutil.rmtree(os.path.join(staged_root, d), ignore_errors=True)
-                orphans += 1
+    for d in os.listdir(staged_root) if os.path.isdir(staged_root) else []:
+        if d not in live:
+            shutil.rmtree(os.path.join(staged_root, d), ignore_errors=True)
+            orphans += d not in committed
     return {"removed_versions": removed, "removed_orphans": orphans}

@@ -120,30 +120,33 @@ def run_stream_upsert_parquet(
     order_col: str,
     tiebreak_col: str,
 ) -> DataFrame:
-    """foreachBatch upsert: every micro-batch MERGEs into a keyed parquet
-    zone, keeping the newest row per key by (order_col, tiebreak_col).
+    """foreachBatch upsert: every micro-batch MERGEs into a keyed versioned
+    zone (sources/io), keeping the newest row per key by (order_col,
+    tiebreak_col).
 
     Plain parquet can't transactionally overwrite a path it is reading, so
-    each merge writes a new immutable version directory (v=<batch_id>) —
-    a minimal commit-log, the shape Delta's MERGE provides natively (swap
-    this body for `DeltaTable.merge` when delta-spark is on the classpath).
-    Keep-latest is by EVENT TIME, not batch arrival, so the final state is
-    deterministic under any micro-batch split. Returns the final version
-    as a batch frame."""
-    import os
-
+    each merge reads the zone's current snapshot and commits the merged
+    one as the next version through the zone's commit log — the shape
+    Delta's MERGE provides natively (swap this body for `DeltaTable.merge`
+    when delta-spark is on the classpath). A run on a non-empty zone
+    merges into what earlier runs committed. Keep-latest is by EVENT TIME,
+    not batch arrival, so the final state is deterministic under any
+    micro-batch split. Returns the latest committed version as a batch
+    frame."""
     from pyspark.sql import Window as W
 
+    from nyc_taxi_data_pipeline_spark.sources.io import (
+        current_zone_version,
+        publish_zone_version,
+        read_zone_snapshot,
+    )
+
     def merge(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
+        base = current_zone_version(zone)
         merged = batch
-        versions = sorted(
-            int(d.split("=")[1])
-            for d in (os.listdir(zone) if os.path.isdir(zone) else [])
-            if d.startswith("v=")
-        )
-        if versions:
-            merged = spark.read.parquet(f"{zone}/v={versions[-1]}").unionByName(batch)
+        if base is not None:
+            snapshot = read_zone_snapshot(batch.sparkSession, zone, base)
+            merged = snapshot.unionByName(batch)
         w = W.partitionBy(*key_cols).orderBy(
             F.col(order_col).desc(), F.col(tiebreak_col).desc()
         )
@@ -152,20 +155,14 @@ def run_stream_upsert_parquet(
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        latest.write.mode("overwrite").parquet(f"{zone}/v={batch_id}")
+        publish_zone_version(latest, zone, -1 if base is None else base)
 
     q = stream.writeStream.foreachBatch(merge).outputMode("update").start()
     try:
         q.processAllAvailable()
     finally:
         q.stop()
-    spark = stream.sparkSession
-    import os
-
-    versions = sorted(
-        int(d.split("=")[1]) for d in os.listdir(zone) if d.startswith("v=")
-    )
-    return spark.read.parquet(f"{zone}/v={versions[-1]}")
+    return read_zone_snapshot(stream.sparkSession, zone)
 
 
 def run_stream_to_memory(

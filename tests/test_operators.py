@@ -340,26 +340,26 @@ def test_stream_stream_join_plan_has_bounded_state(spark):
 
 
 def test_zone_publish_snapshot_isolation(spark, tmp_path):
-    """publish_zone_version: versions are immutable, the pointer flips
-    atomically, and a reader holding the old version is unaffected by a
-    new publish (snapshot isolation without a table format)."""
+    """publish_zone_version: versions are immutable, the log commit is
+    atomic, and a reader holding the old version is unaffected by a new
+    publish (snapshot isolation without a table format)."""
     from nyc_taxi_data_pipeline_spark.sources.io import (
         publish_zone_version,
-        read_published_zone,
+        read_zone_snapshot,
     )
 
     zone = str(tmp_path / "dim_zone")
     r = load_table(spark, SF, "region")
-    v0 = publish_zone_version(r, zone)
+    v0 = publish_zone_version(r, zone, -1)
     assert v0 == 0
-    old_reader = read_published_zone(spark, zone)  # resolves v=0
+    old_reader = read_zone_snapshot(spark, zone)  # resolves version 0
     n0 = old_reader.count()
 
-    v1 = publish_zone_version(r.limit(2), zone)
+    v1 = publish_zone_version(r.limit(2), zone, v0)
     assert v1 == 1
     # new readers see the new snapshot
-    assert read_published_zone(spark, zone).count() == 2
-    # the old reader's resolved frame still scans the immutable v=0
+    assert read_zone_snapshot(spark, zone).count() == 2
+    # the old reader's resolved frame still scans the immutable version 0
     assert old_reader.count() == n0
 
 
@@ -587,15 +587,19 @@ def test_udtf_table_argument_melt(spark):
 
 
 def test_audited_publish_blocks_bad_snapshot(spark, tmp_path):
-    """Write-Audit-Publish: a clean snapshot publishes and flips the
-    pointer; a snapshot violating a rule writes its v-dir (for forensics)
-    but does NOT become current — readers keep the last good version. The
-    audit metrics come from the write itself (observe), not a second
-    scan."""
+    """Write-Audit-Publish: a clean snapshot is staged and committed; a
+    snapshot violating a rule is staged (for forensics) but never
+    committed — readers keep the last good version. The audit metrics
+    come from the write itself (observe), not a second scan."""
+    import os
+
     from nyc_taxi_data_pipeline_spark.operators.quality import between_rule
     from nyc_taxi_data_pipeline_spark.sources.io import (
         audited_publish_zone,
-        read_published_zone,
+        current_zone_version,
+        read_zone_log,
+        read_zone_snapshot,
+        vacuum_zone,
     )
 
     zone = str(tmp_path / "zone")
@@ -604,17 +608,25 @@ def test_audited_publish_blocks_bad_snapshot(spark, tmp_path):
     v, metrics = audited_publish_zone(good, zone, rules)
     assert v == 0
     assert metrics["observed_rows"] == good.count()
-    assert read_published_zone(spark, zone).count() == good.count()
+    assert read_zone_snapshot(spark, zone).count() == good.count()
 
     bad_rules = [between_rule("o_totalprice", 0.0, 10.0)]  # everything violates
     v2, metrics2 = audited_publish_zone(good, zone, bad_rules)
     assert v2 is None
     assert metrics2[bad_rules[0].name] > 0
-    # pointer still resolves v=0; the rejected v=1 exists for inspection
-    assert read_published_zone(spark, zone).count() == good.count()
-    import os
-
-    assert os.path.isdir(f"{zone}/v=1")
+    # version 0 is still current; the rejected snapshot sits in an
+    # uncommitted staged dir for inspection until vacuum removes it
+    assert current_zone_version(zone) == 0
+    assert read_zone_snapshot(spark, zone).count() == good.count()
+    committed = {
+        os.path.basename(e["data_dir"]) for e in read_zone_log(zone).values()
+    }
+    rejected = set(os.listdir(os.path.join(zone, "_staged"))) - committed
+    assert len(rejected) == 1
+    staged = os.path.join(zone, "_staged", rejected.pop())
+    assert spark.read.parquet(staged).count() == good.count()
+    assert vacuum_zone(zone)["removed_orphans"] == 1
+    assert not os.path.isdir(staged)
 
 
 def test_zone_rollback_and_schema_evolution(spark, tmp_path):
@@ -622,32 +634,38 @@ def test_zone_rollback_and_schema_evolution(spark, tmp_path):
     column), roll back to v0 in O(1), and read the full history with
     mergeSchema (old snapshots surface the new column as null) — the
     schema-evolution contract a lakehouse table format gives, recreated on
-    the pointer protocol."""
+    the zone commit log. Rollback is Delta's RESTORE: a NEW version that
+    reuses the old version's data."""
     from nyc_taxi_data_pipeline_spark.sources.io import (
         list_zone_versions,
         publish_zone_version,
-        read_published_zone,
+        read_zone_snapshot,
         rollback_zone,
+        zone_version_path,
     )
 
     zone = str(tmp_path / "dim")
     r = load_table(spark, SF, "region")
-    assert publish_zone_version(r, zone) == 0
+    assert publish_zone_version(r, zone, -1) == 0
     evolved = r.withColumn("ingest_tag", F.lit("batch-2"))
-    assert publish_zone_version(evolved, zone) == 1
+    assert publish_zone_version(evolved, zone, 0) == 1
     assert list_zone_versions(zone) == [0, 1]
-    assert "ingest_tag" in read_published_zone(spark, zone).columns
+    assert "ingest_tag" in read_zone_snapshot(spark, zone).columns
 
-    rollback_zone(zone, 0)
-    assert "ingest_tag" not in read_published_zone(spark, zone).columns
-    assert read_published_zone(spark, zone).count() == r.count()
+    assert rollback_zone(zone, 0) == 2
+    assert list_zone_versions(zone) == [0, 1, 2]
+    assert zone_version_path(zone, 2) == zone_version_path(zone, 0)
+    assert "ingest_tag" not in read_zone_snapshot(spark, zone).columns
+    assert read_zone_snapshot(spark, zone).count() == r.count()
 
     import pytest
 
     with pytest.raises(ValueError):
         rollback_zone(zone, 99)
 
-    history = spark.read.option("mergeSchema", True).parquet(f"{zone}/v=*")
+    history = spark.read.option("mergeSchema", True).parquet(
+        *[zone_version_path(zone, v) for v in (0, 1)]
+    )
     assert "ingest_tag" in history.columns
     assert history.count() == 2 * r.count()
     assert history.filter(F.col("ingest_tag").isNull()).count() == r.count()
@@ -661,13 +679,13 @@ def test_delete_rows_and_zone_diff(spark, tmp_path):
     from nyc_taxi_data_pipeline_spark.sources.io import (
         delete_rows_from_zone,
         publish_zone_version,
-        read_published_zone,
+        read_zone_snapshot,
         zone_diff_by_checksum,
     )
 
     zone = str(tmp_path / "orders_zone")
     o = load_table(spark, SF, "orders")
-    assert publish_zone_version(o, zone) == 0
+    assert publish_zone_version(o, zone, -1) == 0
 
     target = F.col("o_custkey") == 7
     n_target = o.filter(target).count()
@@ -675,11 +693,11 @@ def test_delete_rows_and_zone_diff(spark, tmp_path):
     version, deleted = delete_rows_from_zone(spark, zone, target)
     assert version == 1 and deleted == n_target
 
-    now = read_published_zone(spark, zone)
+    now = read_zone_snapshot(spark, zone)
     assert now.filter(target).count() == 0
     assert now.count() == o.count() - n_target
     # v0 untouched
-    assert spark.read.parquet(f"{zone}/v=0").count() == o.count()
+    assert read_zone_snapshot(spark, zone, 0).count() == o.count()
 
     diff = zone_diff_by_checksum(
         spark, zone, 0, 1, key="o_custkey",
@@ -693,7 +711,7 @@ def test_upsert_rows_to_zone(spark, tmp_path):
     append, untouched rows survive byte-for-byte, old version immutable."""
     from nyc_taxi_data_pipeline_spark.sources.io import (
         publish_zone_version,
-        read_published_zone,
+        read_zone_snapshot,
         upsert_rows_to_zone,
     )
 
@@ -701,7 +719,7 @@ def test_upsert_rows_to_zone(spark, tmp_path):
     c = load_table(spark, SF, "customer").select(
         "c_custkey", "c_name", "c_acctbal"
     )
-    publish_zone_version(c, zone)
+    publish_zone_version(c, zone, -1)
 
     updates = spark.createDataFrame(
         [(1, "UPDATED", 999.99), (99_999_999, "BRAND NEW", 1.0)],
@@ -710,7 +728,7 @@ def test_upsert_rows_to_zone(spark, tmp_path):
     version, n_upd, n_ins = upsert_rows_to_zone(spark, zone, updates, "c_custkey")
     assert (version, n_upd, n_ins) == (1, 1, 1)
 
-    now = read_published_zone(spark, zone)
+    now = read_zone_snapshot(spark, zone)
     assert now.count() == c.count() + 1
     assert now.filter(F.col("c_custkey") == 1).first()["c_name"] == "UPDATED"
     assert now.filter(F.col("c_custkey") == 99_999_999).count() == 1
@@ -719,7 +737,7 @@ def test_upsert_rows_to_zone(spark, tmp_path):
         c.filter(F.col("c_custkey") == 99_999_999)
     )
     assert untouched.exceptAll(want).count() == 0
-    assert spark.read.parquet(f"{zone}/v=0").filter(
+    assert read_zone_snapshot(spark, zone, 0).filter(
         F.col("c_custkey") == 1
     ).first()["c_name"] != "UPDATED"
 
@@ -1182,34 +1200,32 @@ def test_zone_cas_two_writer_race(spark, tmp_path):
     """Optimistic concurrency (round-2 VERDICT #3): two writers derive
     from the same base version and race to publish — exactly one wins,
     the loser gets ZoneConflictError instead of silently reverting the
-    winner's commit (the lost update publish_zone_version allows)."""
+    winner's commit (a lost update)."""
     from nyc_taxi_data_pipeline_spark.sources.io import (
         ZoneConflictError,
         current_zone_version,
-        publish_zone_version_cas,
-        read_published_zone,
+        publish_zone_version,
         read_zone_snapshot,
     )
 
     zone = str(tmp_path / "cas_zone")
     base = spark.range(10).withColumnRenamed("id", "k")
-    v0 = publish_zone_version_cas(base, zone, expected_version=-1)
+    v0 = publish_zone_version(base, zone, expected_version=-1)
     assert v0 == 0 and current_zone_version(zone) == 0
 
     writer_a = read_zone_snapshot(spark, zone).filter("k < 5")
     writer_b = read_zone_snapshot(spark, zone).filter("k >= 5")
 
-    v1 = publish_zone_version_cas(writer_a, zone, expected_version=0)
+    v1 = publish_zone_version(writer_a, zone, expected_version=0)
     assert v1 == 1
     with pytest.raises(ZoneConflictError):
-        publish_zone_version_cas(writer_b, zone, expected_version=0)
+        publish_zone_version(writer_b, zone, expected_version=0)
 
-    # winner's snapshot is what readers see — through BOTH read paths
+    # winner's snapshot is what readers see
     assert current_zone_version(zone) == 1
     assert sorted(r.k for r in read_zone_snapshot(spark, zone).collect()) == [
         0, 1, 2, 3, 4,
     ]
-    assert read_published_zone(spark, zone).count() == 5
     # loser's staged data was cleaned up: only the COMMITTED versions'
     # data dirs remain under _staged (v0 + the winner's v1)
     import os
@@ -1232,11 +1248,11 @@ def test_zone_cas_concurrent_threads_exactly_one_wins(spark, tmp_path):
     from nyc_taxi_data_pipeline_spark.sources.io import (
         ZoneConflictError,
         current_zone_version,
-        publish_zone_version_cas,
+        publish_zone_version,
     )
 
     zone = str(tmp_path / "cas_threads")
-    publish_zone_version_cas(
+    publish_zone_version(
         spark.range(4).withColumnRenamed("id", "k"), zone, expected_version=-1
     )
 
@@ -1246,7 +1262,7 @@ def test_zone_cas_concurrent_threads_exactly_one_wins(spark, tmp_path):
     def attempt(tag: int) -> None:
         df = spark.range(tag * 10, tag * 10 + 3).withColumnRenamed("id", "k")
         try:
-            v = publish_zone_version_cas(df, zone, expected_version=0)
+            v = publish_zone_version(df, zone, expected_version=0)
             with lock:
                 results.append(f"won:{v}")
         except ZoneConflictError:
@@ -1333,30 +1349,32 @@ def test_zone_cas_data_dirs_immutable_and_log_resolved(spark, tmp_path):
     """A commit is the LOG ENTRY; committed data stays at its immutable
     staged path forever (no post-commit rename — a rename would yank the
     directory out from under a concurrent rebaser's lazily-planned scan).
-    zone_version_path resolves CAS versions via the log, legacy versions
-    via v-dirs, and list_zone_versions sees both protocols."""
+    zone_version_path resolves every version via its log entry, and
+    list_zone_versions lists the committed versions."""
     import os
 
     from nyc_taxi_data_pipeline_spark.sources.io import (
         list_zone_versions,
         publish_zone_version,
-        publish_zone_version_cas,
         read_zone_log,
         read_zone_snapshot,
         zone_version_path,
     )
 
     zone = str(tmp_path / "cas_immutable")
-    # legacy publish creates v=0; CAS commits land at staged paths
-    publish_zone_version(spark.range(3).withColumnRenamed("id", "k"), zone)
-    v = publish_zone_version_cas(
+    publish_zone_version(spark.range(3).withColumnRenamed("id", "k"), zone, -1)
+    v0_path = zone_version_path(zone, 0)
+    v = publish_zone_version(
         spark.range(7).withColumnRenamed("id", "k"), zone, expected_version=0
     )
     assert v == 1
-    entry = read_zone_log(zone)[1]
-    assert zone_version_path(zone, 1) == os.path.join(zone, entry["data_dir"])
-    assert not os.path.isdir(os.path.join(zone, "v=1"))
-    assert zone_version_path(zone, 0) == os.path.join(zone, "v=0")
+    log = read_zone_log(zone)
+    for n in (0, 1):
+        assert zone_version_path(zone, n) == os.path.join(zone, log[n]["data_dir"])
+        assert log[n]["data_dir"].startswith("_staged" + os.sep)
+    # a later commit never moves an earlier version's data
+    assert zone_version_path(zone, 0) == v0_path
+    assert zone_version_path(zone, 1) != v0_path
     assert read_zone_snapshot(spark, zone, 1).count() == 7
     assert read_zone_snapshot(spark, zone, 0).count() == 3
     assert list_zone_versions(zone) == [0, 1]
@@ -1564,8 +1582,8 @@ def test_zone_cas_partition_threads_race_rebase(spark, tmp_path):
 
 
 def test_zone_history_and_vacuum(spark, tmp_path):
-    """DESCRIBE HISTORY + VACUUM over a mixed-protocol zone: history rows
-    for legacy and CAS versions, vacuum removes pre-horizon versions and
+    """DESCRIBE HISTORY + VACUUM: one history row per committed version
+    with its recorded base, vacuum removes pre-horizon versions and
     orphaned staged dirs while every retained version stays readable,
     and vacuumed time travel fails loudly."""
     import os
@@ -1574,33 +1592,29 @@ def test_zone_history_and_vacuum(spark, tmp_path):
         ZoneConflictError,
         current_zone_version,
         publish_zone_version,
-        publish_zone_version_cas,
         read_zone_snapshot,
         vacuum_zone,
         zone_history,
     )
 
     zone = str(tmp_path / "vac")
-    publish_zone_version(spark.range(2).withColumnRenamed("id", "k"), zone)
-    publish_zone_version_cas(
+    publish_zone_version(spark.range(2).withColumnRenamed("id", "k"), zone, -1)
+    publish_zone_version(
         spark.range(4).withColumnRenamed("id", "k"), zone, expected_version=0
     )
-    publish_zone_version_cas(
+    publish_zone_version(
         spark.range(6).withColumnRenamed("id", "k"), zone, expected_version=1
     )
     # a conflicted writer leaves nothing behind (cleanup on conflict)...
     with pytest.raises(ZoneConflictError):
-        publish_zone_version_cas(
+        publish_zone_version(
             spark.range(9).withColumnRenamed("id", "k"), zone, expected_version=0
         )
     # ...but simulate a CRASHED writer: a staged dir no commit references
     os.makedirs(os.path.join(zone, "_staged", "tx-deadbeef"), exist_ok=True)
 
     hist = zone_history(zone)
-    assert [(h["version"], h["protocol"]) for h in hist] == [
-        (0, "legacy"), (1, "cas"), (2, "cas"),
-    ]
-    assert hist[2]["base"] == 1
+    assert [(h["version"], h["base"]) for h in hist] == [(0, -1), (1, 0), (2, 1)]
 
     rep = vacuum_zone(zone, keep_last=2)
     assert rep["removed_versions"] == [0]
@@ -1611,6 +1625,98 @@ def test_zone_history_and_vacuum(spark, tmp_path):
     with pytest.raises(ValueError, match="no data"):
         read_zone_snapshot(spark, zone, 0)
     assert [h["version"] for h in zone_history(zone)] == [1, 2]
+
+
+def test_zone_maintenance_ops_commit_on_partitioned_zone(spark, tmp_path):
+    """delete_rows_from_zone and upsert_rows_to_zone on a zone written by
+    the partition-scoped writer each commit the NEXT version on top of
+    the current one, and read_zone_snapshot sees it."""
+    from nyc_taxi_data_pipeline_spark.sources.io import (
+        delete_rows_from_zone,
+        publish_zone_partitions_cas,
+        read_zone_snapshot,
+        upsert_rows_to_zone,
+    )
+
+    zone = str(tmp_path / "maint")
+    base = spark.createDataFrame(
+        [("p1", 1), ("p1", 2), ("p2", 3)], "part string, x int"
+    )
+    assert publish_zone_partitions_cas(spark, zone, base, "part", -1) == 0
+
+    def snapshot():
+        return sorted(
+            (r.part, r.x) for r in read_zone_snapshot(spark, zone).collect()
+        )
+
+    assert delete_rows_from_zone(spark, zone, F.col("x") == 2) == (1, 1)
+    assert snapshot() == [("p1", 1), ("p2", 3)]
+    updates = spark.createDataFrame([("p9", 3), ("p2", 4)], "part string, x int")
+    assert upsert_rows_to_zone(spark, zone, updates, "x") == (2, 1, 1)
+    assert snapshot() == [("p1", 1), ("p2", 4), ("p9", 3)]
+
+
+@pytest.mark.parametrize("op", ["delete", "upsert"])
+def test_zone_maintenance_op_conflicts_with_interleaved_commit(
+    spark, tmp_path, monkeypatch, op
+):
+    """A commit that lands between a maintenance op's read of its base and
+    its publish raises ZoneConflictError: the interleaved writer's version
+    stays current instead of being silently overwritten, and the loser
+    leaves no staged data behind."""
+    import os
+
+    from nyc_taxi_data_pipeline_spark.sources import io
+
+    zone = str(tmp_path / f"race_{op}")
+    rows = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+    io.publish_zone_version(rows, zone, -1)
+    read = io.read_zone_snapshot
+
+    def read_then_interleave(spark_, zone_, version=None):
+        snap = read(spark_, zone_, version)
+        io.publish_zone_version(rows.limit(1), zone_, io.current_zone_version(zone_))
+        return snap
+
+    monkeypatch.setattr(io, "read_zone_snapshot", read_then_interleave)
+    with pytest.raises(io.ZoneConflictError):
+        if op == "delete":
+            io.delete_rows_from_zone(spark, zone, F.col("k") == 2)
+        else:
+            updates = spark.createDataFrame([(2, "B")], "k long, v string")
+            io.upsert_rows_to_zone(spark, zone, updates, "k")
+    monkeypatch.undo()
+
+    assert io.current_zone_version(zone) == 1
+    assert io.read_zone_snapshot(spark, zone).count() == 1
+    committed = {
+        os.path.basename(e["data_dir"]) for e in io.read_zone_log(zone).values()
+    }
+    assert set(os.listdir(os.path.join(zone, "_staged"))) == committed
+
+
+def test_vacuum_keeps_data_dir_shared_by_rollback(spark, tmp_path):
+    """A rollback commits a new version that REUSES an old version's data
+    dir; vacuuming that old version away must keep the shared dir, so
+    the retained rollback version stays readable."""
+    from nyc_taxi_data_pipeline_spark.sources.io import (
+        publish_zone_version,
+        read_zone_snapshot,
+        rollback_zone,
+        vacuum_zone,
+    )
+
+    zone = str(tmp_path / "vac_rollback")
+    for n, base in ((2, -1), (4, 0), (6, 1)):
+        publish_zone_version(spark.range(n), zone, base)
+    assert rollback_zone(zone, 0) == 3
+
+    rep = vacuum_zone(zone, keep_last=2)
+    assert rep == {"removed_versions": [0, 1], "removed_orphans": 0}
+    assert read_zone_snapshot(spark, zone).count() == 2  # v3 reuses v0's data
+    assert read_zone_snapshot(spark, zone, 2).count() == 6
+    with pytest.raises(ValueError, match="no data"):
+        read_zone_snapshot(spark, zone, 0)
 
 
 @pytest.mark.parametrize("seed", [7, 23, 99])

@@ -130,7 +130,7 @@ def test_curation_pipeline_end_to_end(spark, tmp_path):
         run_curation_pipeline,
     )
     from nyc_taxi_data_pipeline_spark.sources.catalog import load_table
-    from nyc_taxi_data_pipeline_spark.sources.io import read_published_zone
+    from nyc_taxi_data_pipeline_spark.sources.io import read_zone_snapshot
 
     sf = "/root/testdata/sf0.001"
     out = str(tmp_path / "curated")
@@ -144,9 +144,9 @@ def test_curation_pipeline_end_to_end(spark, tmp_path):
     assert report["rows"]["chunks"] >= want_clean  # every doc chunks >= once
     assert 0 < report["rows"]["mix_manifest"] <= 10
 
-    clean_zone = read_published_zone(spark, f"{out}/clean_documents")
+    clean_zone = read_zone_snapshot(spark, f"{out}/clean_documents")
     assert clean_zone.count() == want_clean
-    chunks_zone = read_published_zone(spark, f"{out}/chunks")
+    chunks_zone = read_zone_snapshot(spark, f"{out}/chunks")
     # chunk reassembly spot check: total chunk tokens == clean corpus tokens
     from pyspark.sql import functions as F
 

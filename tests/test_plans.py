@@ -23,6 +23,7 @@ from __future__ import annotations
 import pytest
 
 from nyc_taxi_data_pipeline_spark.plans.queries import REGISTRY
+from tests.oracle_harness import needs_serial
 
 SF = "/root/testdata/sf0.01"
 
@@ -50,33 +51,20 @@ def _build_plan(spark, name: str) -> str:
 # verify window truncated at 68% in r8). Plan builders are deterministic,
 # so ONE build per entry serves every needle check. The cache is warmed
 # from a small thread pool (Spark schedules concurrent jobs from one
-# session, guide §2.6); entries that mutate session state (conf.set /
-# .register) build serially, streaming entries only ever build inline
-# (the lint tests skip them; building one drains its stream).
+# session, guide §2.6); builders that mutate session state
+# (oracle_harness.needs_serial, which covers every streaming entry) are
+# never pooled — each builds inline, alone, the first time a test asks.
 _PLAN_CACHE: dict[str, object] = {}
-
-
-def _needs_serial_build(name: str) -> bool:
-    import inspect
-
-    try:
-        src = inspect.getsource(REGISTRY[name].spark)
-    except (OSError, TypeError):
-        return True
-    return "conf.set" in src or ".register(" in src
 
 
 def _warm_plan_cache(spark) -> None:
     from concurrent.futures import ThreadPoolExecutor
 
-    todo = [
+    pooled = [
         n
-        for n in REGISTRY
-        if n not in _PLAN_CACHE
-        and not n.startswith(("streaming_", "stream_stream"))
+        for n, q in REGISTRY.items()
+        if n not in _PLAN_CACHE and not needs_serial(q)
     ]
-    pooled = [n for n in todo if not _needs_serial_build(n)]
-    serial = [n for n in todo if _needs_serial_build(n)]
 
     def one(n):
         try:
@@ -87,20 +75,29 @@ def _warm_plan_cache(spark) -> None:
     with ThreadPoolExecutor(max_workers=8) as pool:
         for n, p in pool.map(one, pooled):
             _PLAN_CACHE[n] = p
-    for n in serial:
-        _PLAN_CACHE[n] = one(n)[1]
 
 
 def _plan(spark, name: str) -> str:
     plan = _PLAN_CACHE.get(name)
-    if plan is None:
+    if plan is None and not needs_serial(REGISTRY[name]):
         _warm_plan_cache(spark)
         plan = _PLAN_CACHE.get(name)
-    if plan is None:  # streaming entries: never pooled, build inline
+    if plan is None:  # serial builders: never pooled, build inline
         plan = _PLAN_CACHE[name] = _build_plan(spark, name)
     if isinstance(plan, Exception):
         raise plan
     return plan
+
+
+def test_needs_serial_covers_every_stream_builder():
+    """Builders that start a stream or pin session conf never share the
+    thread pool — including stream_static_enrichment (run_stream_to_memory)
+    and entries that reach readStream only through a module helper — while
+    a plain batch builder stays pooled."""
+    streams = [q for n, q in REGISTRY.items() if n.startswith("stream")]
+    assert "stream_static_enrichment" in {q.name for q in streams}
+    assert all(needs_serial(q) for q in streams)
+    assert not needs_serial(REGISTRY["q01_pricing_summary"])
 
 
 def test_q01_scan_pushdown_and_pruning(spark):

@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 
 from nyc_taxi_data_pipeline_spark.plans.queries import REGISTRY
-from tests.oracle_harness import compare_query
+from tests.oracle_harness import compare_query, needs_serial
 
 ORACLE_QUERIES = [q for q in REGISTRY.values() if q.oracle is not None]
 ROWS_ONLY_QUERIES = [q for q in REGISTRY.values() if q.oracle is None]
@@ -28,23 +28,11 @@ def test_rows_only_query_runs(spark, query):
 # runs concurrent jobs from one session (guide §2.6) and DuckDB runs one
 # connection per thread, so the reports are precomputed once from a small
 # thread pool and each parametrized test asserts its own entry's report —
-# same comparisons, same per-test attribution, same -x semantics.
-# Serial bucket: streaming entries (run_stream_to_memory pins a session
-# conf for the stream's lifetime — not thread-safe) and builders that
-# mutate session state (conf.set / .register).
+# same comparisons, same per-test attribution. Under -x the run still
+# stops at the first failing entry, but only after the first test has
+# computed every entry's report. Builders that mutate session state
+# (oracle_harness.needs_serial) run one at a time after the pool drains.
 _REPORTS: dict[str, object] = {}
-
-
-def _needs_serial(q) -> bool:
-    import inspect
-
-    if q.name.startswith(("streaming_", "stream_stream")):
-        return True
-    try:
-        src = inspect.getsource(q.spark)
-    except (OSError, TypeError):
-        return True
-    return "conf.set" in src or ".register(" in src
 
 
 def _compute_reports(spark) -> None:
@@ -64,8 +52,8 @@ def _compute_reports(spark) -> None:
         except Exception as e:  # noqa: BLE001 — re-raised by the owning test
             return q.name, e
 
-    pooled = [q for q in ORACLE_QUERIES if not _needs_serial(q)]
-    serial = [q for q in ORACLE_QUERIES if _needs_serial(q)]
+    pooled = [q for q in ORACLE_QUERIES if not needs_serial(q)]
+    serial = [q for q in ORACLE_QUERIES if needs_serial(q)]
     with ThreadPoolExecutor(max_workers=8) as pool:
         for name, rep in pool.map(one, pooled):
             _REPORTS[name] = rep

@@ -159,35 +159,50 @@ def test_transform_with_state_v2_plan_construction(spark, events_4_files):
 
 def test_foreachbatch_upsert_converges_across_batches(spark, events_4_files, tmp_path):
     """The versioned upsert zone must end at the same per-key latest state
-    whether the stream arrives as one batch or four."""
+    whether the stream arrives as one batch or four — and a second run on
+    the same zone must merge into what the first run committed."""
     from pyspark.sql import Window as W
 
+    from nyc_taxi_data_pipeline_spark.sources.io import current_zone_version
     from nyc_taxi_data_pipeline_spark.streaming.sinks import run_stream_upsert_parquet
 
     schema = spark.read.parquet(events_4_files).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(events_4_files)
-    )
-    final = run_stream_upsert_parquet(
-        stream,
-        str(tmp_path / "zone"),
-        key_cols=["user_id"],
-        order_col="ts",
-        tiebreak_col="event_id",
-    )
-    got = sorted(
-        (r["user_id"], r["event_id"]) for r in final.select("user_id", "event_id").collect()
-    )
+    zone = str(tmp_path / "zone")
     w = W.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
-    batch = (
-        spark.read.parquet(events_4_files)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+
+    def upsert_run(path):
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(path)
+        )
+        final = run_stream_upsert_parquet(
+            stream, zone, key_cols=["user_id"], order_col="ts", tiebreak_col="event_id"
+        )
+        return sorted(
+            (r["user_id"], r["event_id"])
+            for r in final.select("user_id", "event_id").collect()
+        )
+
+    def latest(events):
+        batch = events.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
+        return sorted((r["user_id"], r["event_id"]) for r in batch.collect())
+
+    events = spark.read.parquet(events_4_files)
+    assert upsert_run(events_4_files) == latest(events)
+    first_version = current_zone_version(zone)
+
+    # newer events for every 7th user, streamed into the same zone
+    more = str(tmp_path / "more")
+    newer = (
+        events.filter(F.col("user_id") % 7 == 0)
+        .withColumn("ts", F.col("ts") + F.expr("INTERVAL 365 DAYS"))
+        .withColumn("event_id", F.col("event_id") + 1_000_000_000)
     )
-    want = sorted((r["user_id"], r["event_id"]) for r in batch.collect())
-    assert got == want
+    assert newer.count() > 0
+    newer.write.parquet(more)
+    assert upsert_run(more) == latest(events.unionByName(spark.read.parquet(more)))
+    assert current_zone_version(zone) > first_version
 
 
 def test_windowed_counts_stream_equals_batch(spark, events_4_files):

@@ -23,9 +23,9 @@ Thread-safety notes (why this is sound):
 - the localCheckpoint/collect interceptions write to THREAD-LOCAL
   lists, installed once around the whole sweep, so concurrent builds
   record their own segments;
-- entries whose builders mutate session state (spark.conf.set,
-  spark.udtf.register) are detected by source inspection and built
-  serially AFTER the pool drains;
+- entries whose builders mutate session state (conf.set, .register,
+  stream starts; tests/oracle_harness.needs_serial) are detected by
+  source inspection and built serially AFTER the pool drains;
 - row-count jobs are memoized on (sf, canonicalized semanticHash,
   schema) under a lock — identical dim/offset frames across entries
   are counted once (the broadcast audit already did this; the window
@@ -34,7 +34,6 @@ Thread-safety notes (why this is sound):
 
 from __future__ import annotations
 
-import inspect
 import os
 import sys
 import threading
@@ -42,6 +41,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from tests.oracle_harness import needs_serial  # noqa: E402
 from tools.audit_broadcasts import (  # noqa: E402
     MIN_ROWS_BROADCAST,
     MIN_ROWS_COLLECT,
@@ -132,14 +132,6 @@ def _suspects(query, spark, sf_dir, memo, lock):
     return wins, hints, collects
 
 
-def _needs_serial(query) -> bool:
-    try:
-        src = inspect.getsource(query.spark)
-    except (OSError, TypeError):
-        return True
-    return "conf.set" in src or ".register(" in src
-
-
 def combined_audit_catalog(spark, names=None, max_workers=8):
     """Run both audits from one build pass; returns
     (window_report, broadcast_report) with the exact shapes the two
@@ -158,8 +150,8 @@ def combined_audit_catalog(spark, names=None, max_workers=8):
         except Exception as e:  # noqa: BLE001 — record, don't abort the sweep
             return name, e
 
-    pooled = [(n, q) for n, q in items if not _needs_serial(q)]
-    serial = [(n, q) for n, q in items if _needs_serial(q)]
+    pooled = [(n, q) for n, q in items if not needs_serial(q)]
+    serial = [(n, q) for n, q in items if needs_serial(q)]
     restore = _install_patches()
     try:
         with ThreadPoolExecutor(max_workers=max_workers) as pool:
@@ -192,8 +184,8 @@ def combined_audit_catalog(spark, names=None, max_workers=8):
                 need_big.append((name, query))
 
         big: dict[str, object] = {}
-        pooled_b = [(n, q) for n, q in need_big if not _needs_serial(q)]
-        serial_b = [(n, q) for n, q in need_big if _needs_serial(q)]
+        pooled_b = [(n, q) for n, q in need_big if not needs_serial(q)]
+        serial_b = [(n, q) for n, q in need_big if needs_serial(q)]
         with ThreadPoolExecutor(max_workers=max_workers) as pool:
             for name, res in pool.map(run_big, pooled_b):
                 big[name] = res
