@@ -6,16 +6,49 @@ keep dbt_utils-0.8.0 byte parity (functions.scalar.surrogate_key); the
 missing dbt decode macros are reconstructed from the public TLC dictionary
 (functions.scalar.*_DESCRIPTIONS).
 
-Scale design: every dim is tiny (≤few hundred rows) → the fact-dim joins
-are all broadcast hash joins, zero shuffle on the fact side.
+Scale design: the fact joins no dim. Each dim it keys into is built from
+the same staging frame, as the distinct ids that pass a predicate on the
+id alone, keyed by a surrogate of the id. So the reference's inner join to
+a dim is that predicate plus `surrogate_key(id)` on the staging row itself
+(`fact_trip`): one filter and three projections over the fact, no dim
+recomputation, no exchange. The code dims are bounded by their domain
+filters or decode maps and sort inside one partition; the location dims
+are data-sized and keep a distributed ORDER BY.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_pipeline_spark.functions import scalar
+
+
+def dim_predicate(key_cols: list[str], domain_filter: Column | None = None) -> Column:
+    """The staging rows a dim keeps: every key not null, and inside the
+    dim's domain when it has one."""
+    cond = F.col(key_cols[0]).isNotNull()
+    for c in key_cols[1:]:
+        cond = cond & F.col(c).isNotNull()
+    return cond if domain_filter is None else cond & domain_filter
+
+
+# The predicates of the three dims the fact keys into, shared by the dim
+# builders and `fact_trip`. Built lazily: Column construction needs an
+# active session.
+def vendor_predicate() -> Column:
+    """dim_vendor.sql:3-23 — domain filter vendor_id < 3."""
+    return dim_predicate(["vendor_id"], F.col("vendor_id").cast("int") < 3)
+
+
+def rate_code_predicate() -> Column:
+    """dim_rate_code.sql:3-23 — domain filter rate_code_id < 7."""
+    return dim_predicate(["rate_code_id"], F.col("rate_code_id").cast("int") < 7)
+
+
+def payment_predicate() -> Column:
+    """dim_payment.sql:3-21 — not null only."""
+    return dim_predicate(["payment_type_id"])
 
 
 def build_dim(
@@ -25,18 +58,17 @@ def build_dim(
     decode_col: str | None = None,
     decode_map: dict | None = None,
     decode_name: str | None = None,
-    domain_filter=None,
-    order_by: str | None = None,
+    predicate: Column | None = None,
 ) -> DataFrame:
-    """Generic dim model: SELECT DISTINCT keys WHERE key IS NOT NULL
-    [AND domain] + surrogate key + optional decode + ORDER BY
-    (reference: dim_vendor.sql / dim_rate_code.sql / dim_payment.sql shape).
-    """
-    cond = F.col(key_cols[0]).isNotNull()
-    for c in key_cols[1:]:
-        cond = cond & F.col(c).isNotNull()
-    if domain_filter is not None:
-        cond = cond & domain_filter
+    """Generic code dim: SELECT DISTINCT keys WHERE `predicate` (default:
+    keys not null) + surrogate key + optional decode + ORDER BY the first
+    key (reference: dim_vendor.sql / dim_rate_code.sql / dim_payment.sql
+    shape).
+
+    A code dim holds at most its domain's few values, so it is sorted
+    inside one partition: no range-partition sampling job, one output
+    file, the same row order as a global ORDER BY."""
+    cond = dim_predicate(key_cols) if predicate is None else predicate
     out = staging.filter(cond).select(*key_cols).distinct()
     out = out.select(
         scalar.surrogate_key(*key_cols).alias(surrogate_name), *key_cols
@@ -46,11 +78,11 @@ def build_dim(
             decode_name or f"{decode_col}_description",
             scalar.decode(decode_col, decode_map),
         )
-    return out.orderBy(order_by or key_cols[0])
+    return out.coalesce(1).sortWithinPartitions(key_cols[0])
 
 
 def dim_vendor(staging: DataFrame) -> DataFrame:
-    """dim_vendor.sql:3-23 — domain filter vendor_id < 3."""
+    """dim_vendor.sql:3-23."""
     return build_dim(
         staging,
         ["vendor_id"],
@@ -58,12 +90,12 @@ def dim_vendor(staging: DataFrame) -> DataFrame:
         decode_col="vendor_id",
         decode_map=scalar.VENDOR_DESCRIPTIONS,
         decode_name="vendor_description",
-        domain_filter=F.col("vendor_id").cast("int") < 3,
+        predicate=vendor_predicate(),
     )
 
 
 def dim_rate_code(staging: DataFrame) -> DataFrame:
-    """dim_rate_code.sql:3-23 — domain filter rate_code_id < 7."""
+    """dim_rate_code.sql:3-23."""
     return build_dim(
         staging,
         ["rate_code_id"],
@@ -71,7 +103,7 @@ def dim_rate_code(staging: DataFrame) -> DataFrame:
         decode_col="rate_code_id",
         decode_map=scalar.RATE_CODE_DESCRIPTIONS,
         decode_name="rate_code_description",
-        domain_filter=F.col("rate_code_id").cast("int") < 7,
+        predicate=rate_code_predicate(),
     )
 
 
@@ -84,6 +116,7 @@ def dim_payment(staging: DataFrame) -> DataFrame:
         decode_col="payment_type_id",
         decode_map=scalar.PAYMENT_DESCRIPTIONS,
         decode_name="payment_description",
+        predicate=payment_predicate(),
     )
 
 
@@ -123,9 +156,6 @@ def dim_location(staging: DataFrame, prefix: str) -> DataFrame:
 
 def fact_trip(
     staging: DataFrame,
-    vendor: DataFrame,
-    rate_code: DataFrame,
-    payment: DataFrame,
     measures: tuple[str, ...] = (
         "passenger_count",
         "trip_distance",
@@ -139,9 +169,17 @@ def fact_trip(
         "congestion_surcharge",
     ),
 ) -> DataFrame:
-    """fact_trip.sql:6-39 — 8-column surrogate trip_id, inner joins to the
-    three filtered dims (inner = the dims' domain filters act as semi-joins,
-    SURVEY.md J2). All three dim joins broadcast."""
+    """fact_trip.sql:6-39 — 8-column surrogate trip_id, keyed to the
+    vendor, rate-code and payment dims.
+
+    The reference inner-joins the three dims. No join is needed: each dim
+    is the distinct ids of staging rows that pass the dim's predicate, and
+    that predicate reads the id alone. So a staging row finds exactly one
+    dim row iff its own id passes the predicate (a null id never equi-joins,
+    and the predicate rejects it too), and that row's key is
+    `surrogate_key(id)` of the same value. The fact is therefore the
+    staging rows that pass all three predicates, with the keys computed in
+    place: the same rows and keys as the join, with no dim recomputed."""
     trip_id = scalar.surrogate_key(
         "vendor_id",
         "rate_code_id",
@@ -152,33 +190,25 @@ def fact_trip(
         "pickup_datetime",
         "dropoff_datetime",
     ).alias("trip_id")
-    joined = (
-        staging.join(F.broadcast(vendor.select("vendor_key", "vendor_id")), "vendor_id")
-        .join(
-            F.broadcast(rate_code.select("rate_code_key", "rate_code_id")),
-            "rate_code_id",
-        )
-        .join(
-            F.broadcast(payment.select("payment_type_key", "payment_type_id")),
-            "payment_type_id",
-        )
+    keyed = staging.filter(
+        vendor_predicate() & rate_code_predicate() & payment_predicate()
     )
     present_measures = [m for m in measures if m in staging.columns]
-    return joined.select(
+    return keyed.select(
         trip_id,
-        "vendor_key",
-        "rate_code_key",
-        "payment_type_key",
+        scalar.surrogate_key("vendor_id").alias("vendor_key"),
+        scalar.surrogate_key("rate_code_id").alias("rate_code_key"),
+        scalar.surrogate_key("payment_type_id").alias("payment_type_key"),
         "pickup_datetime",
         "dropoff_datetime",
         *present_measures,
     )
 
 
-def build_star(staging: DataFrame) -> dict[str, DataFrame]:
-    """Materialize the full star: 6 dims + fact, dbt-DAG order
-    (dims before fact — SURVEY.md §3.3)."""
-    dims = {
+def star_dims(staging: DataFrame) -> dict[str, DataFrame]:
+    """The star's 6 dims, in dbt-DAG order (dims before the fact —
+    SURVEY.md §3.3); the fact is `fact_trip` over the same staging."""
+    return {
         "dim_vendor": dim_vendor(staging),
         "dim_rate_code": dim_rate_code(staging),
         "dim_payment": dim_payment(staging),
@@ -186,10 +216,6 @@ def build_star(staging: DataFrame) -> dict[str, DataFrame]:
         "dim_pickup_location": dim_location(staging, "pickup"),
         "dim_dropoff_location": dim_location(staging, "dropoff"),
     }
-    fact = fact_trip(
-        staging, dims["dim_vendor"], dims["dim_rate_code"], dims["dim_payment"]
-    )
-    return {**dims, "fact_trip": fact}
 
 
 def scd2_from_changelog(

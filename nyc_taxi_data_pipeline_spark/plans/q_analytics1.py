@@ -296,21 +296,12 @@ ORDER BY vendor_key, rate_code_key, payment_type_key
 @_register("star_fact_summary", _FACT_ORACLE)
 def star_fact_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2+F9: fact_trip (fact_trip.sql:6-39) — 8-column surrogate trip_id,
-    three broadcast dim joins whose domain filters act as semi-joins —
-    summarized per dim-key triple."""
-    from nyc_taxi_data_pipeline_spark.operators.warehouse import (
-        dim_payment,
-        dim_rate_code,
-        dim_vendor,
-        fact_trip,
-    )
+    dim keys derived in place from the dims' domain predicates (the oracle
+    keeps the reference's three dim joins) — summarized per dim-key
+    triple."""
+    from nyc_taxi_data_pipeline_spark.operators.warehouse import fact_trip
 
-    # staging feeds 3 dims + the fact — materialize it once, exactly as the
-    # reference materializes staging.nyc_taxi before dbt builds the star
-    staging = _staging_trips(spark, sf_dir).localCheckpoint(eager=False)
-    fact = fact_trip(
-        staging, dim_vendor(staging), dim_rate_code(staging), dim_payment(staging)
-    )
+    fact = fact_trip(_staging_trips(spark, sf_dir))
     return (
         fact.groupBy("vendor_key", "rate_code_key", "payment_type_key")
         .agg(

@@ -21,6 +21,17 @@ from pyspark.sql import SparkSession
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
+def _default_driver_memory() -> str:
+    """Driver heap when SPARK_GRAFT_DRIVER_MEM is unset: half the host's
+    physical memory, at most 48g. A fixed 48g let the JVM grow past a
+    15 GB host's memory and be OOM-killed mid-suite."""
+    try:
+        phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    except (ValueError, OSError):  # no sysconf names on this platform
+        return "48g"
+    return f"{max(1024, min(48 << 10, phys_mb // 2))}m"
+
+
 def get_spark(
     app_name: str = "nyc_taxi_data_pipeline_spark",
     master: str | None = None,
@@ -61,7 +72,10 @@ def get_spark(
         # --- broadcast threshold: dims (region/nation/zone lookup) stay broadcast ---
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -108,14 +108,16 @@ def write_parquet_idempotent(
     ONLY the partitions present in `df`, leaving the rest of the zone
     untouched. This is the engine's substitute for the reference's
     object-exists-skip + retry loop (scripts/extract_load.py:49-76) — rerun
-    a failed batch and it converges instead of duplicating."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    a failed batch and it converges instead of duplicating.
+
+    The mode is a per-write option, so the session conf is never touched
+    and concurrent writers in one session cannot race on it."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by)
+        .parquet(path)
+    )
 
 
 def write_zorder_zone(

@@ -81,6 +81,26 @@ def test_write_parquet_partitioned_roundtrip(spark, tmp_path):
     assert "PartitionFilters: [isnotnull(status" in plan
 
 
+def test_idempotent_write_leaves_session_conf_alone(spark, tmp_path):
+    """Dynamic partition overwrite is a per-write option: the session's
+    partitionOverwriteMode reads the same after the write, so concurrent
+    builders in one session cannot race on it, and the rewrite still
+    replaces only the partitions it carries."""
+    from nyc_taxi_data_pipeline_spark.sources.io import write_parquet_idempotent
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    path = str(tmp_path / "zone")
+    df = spark.range(6).withColumn("p", F.col("id") % 2)
+    write_parquet_idempotent(df, path, ["p"])
+    write_parquet_idempotent(
+        df.filter("p = 0").withColumn("id", F.col("id") + 10), path, ["p"]
+    )
+    assert spark.conf.get(key) == before
+    got = sorted((r["id"], r["p"]) for r in spark.read.parquet(path).collect())
+    assert got == [(1, 1), (3, 1), (5, 1), (10, 0), (12, 0), (14, 0)]
+
+
 def test_create_external_table(spark, tmp_path):
     from nyc_taxi_data_pipeline_spark.sources.io import create_external_table, write_parquet
 

@@ -7,7 +7,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from nyc_taxi_data_pipeline_spark.plans.pipeline import run_batch_pipeline
+from nyc_taxi_data_pipeline_spark.plans.pipeline import (
+    run_batch_pipeline,
+    staging_rules,
+)
 from nyc_taxi_data_pipeline_spark.plans.queries import _raw_trips
 
 SF = "/root/testdata/sf0.001"
@@ -38,7 +41,9 @@ def test_batch_pipeline_end_to_end(spark, tmp_path):
     assert counts["dim_payment"] == (
         staging_back.select("payment_type_id").distinct().count()
     )
-    # the GX-shape gate passes on engine-produced staging
+    # the GX-shape gate passes on engine-produced staging, and reports
+    # exactly its rules (no observation bookkeeping leaks into it)
+    assert list(report["quality"]) == [r.name for r in staging_rules()]
     assert all(v == 0 for v in report["quality"].values()), report["quality"]
 
     # idempotency: the exact same run converges to the same lake
@@ -70,6 +75,100 @@ def test_dynamic_partition_overwrite_preserves_other_partitions(spark, tmp_path)
         .groupBy("year").agg(F.count(F.lit(1)).alias("n")).collect()
     }
     assert after == before  # 1997 replaced with identical data; rest untouched
+
+
+# Jobs one run_batch_pipeline call takes on the sf0.001 trips, lake
+# empty or not: one per zone write plus what the write's own plan needs
+# (a shuffle stage per exchange, a sampling job per distributed ORDER BY)
+# and one schema-inference job per zone read back. Reading each zone back
+# to count it, a separate quality-check job, a range-sort sampling job per
+# code dim and the fact re-deriving its three dims took it to 66.
+PIPELINE_JOB_BUDGET = 25
+
+
+def test_batch_pipeline_job_budget(spark, tmp_path):
+    """Row counts and the quality gate ride the zone writes as
+    observations: the pipeline launches no job beyond its writes."""
+    raw = _raw_trips(spark, SF)
+    lake = str(tmp_path / "lake")
+    sc = spark.sparkContext
+    jobs = []
+    for run in range(2):  # a fresh lake, then a rerun over it
+        group = f"pipeline-job-budget-{run}"
+        sc.setJobGroup(group, group)
+        try:
+            run_batch_pipeline(spark, raw, lake)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert max(jobs) <= PIPELINE_JOB_BUDGET, f"jobs per run: {jobs}"
+
+
+def test_fact_trip_matches_dim_join_form(spark):
+    """fact_trip keys its rows through the dims' domain predicates and
+    surrogate keys computed in place. Oracle: the reference's form, inner
+    joins to the three dims built as distinct filtered ids of the same
+    staging frame — on rows with null and out-of-domain vendor, rate code
+    and payment values."""
+    from nyc_taxi_data_pipeline_spark.functions.scalar import surrogate_key
+    from nyc_taxi_data_pipeline_spark.operators.warehouse import fact_trip
+
+    rows = [
+        # vendor, rate, payment, fare
+        (1, 1, 1, 10.0),
+        (1, 1, 1, 10.0),  # exact duplicate: both rows stay
+        (2, 6, 2, 11.5),
+        (2, 5, 6, 12.0),
+        (3, 1, 1, 13.0),  # vendor out of domain (< 3)
+        (4, 2, 2, 14.0),
+        (None, 1, 1, 15.0),  # null vendor
+        (1, 7, 1, 16.0),  # rate code out of domain (< 7)
+        (2, 99, 3, 17.0),
+        (1, None, 2, 18.0),  # null rate code
+        (2, 2, None, 19.0),  # null payment
+        (None, None, None, 20.0),
+        (1, -1, 4, 21.0),  # negative rate code is inside the domain
+    ]
+    staging = spark.createDataFrame(
+        [
+            (v, r, i % 5, (i * 7) % 5, p, 1,
+             f"2023-01-{i + 1:02d} 08:00:00", f"2023-01-{i + 1:02d} 08:30:00", fare)
+            for i, (v, r, p, fare) in enumerate(rows)
+        ],
+        "vendor_id int, rate_code_id int, pickup_location_id int, "
+        "dropoff_location_id int, payment_type_id int, service_type int, "
+        "pickup_datetime string, dropoff_datetime string, fare_amount double",
+    ).withColumn("pickup_datetime", F.to_timestamp("pickup_datetime")).withColumn(
+        "dropoff_datetime", F.to_timestamp("dropoff_datetime")
+    )
+
+    def dim(id_col, key, domain=None):
+        keep = F.col(id_col).isNotNull()
+        if domain is not None:
+            keep = keep & domain
+        ids = staging.filter(keep).select(id_col).distinct()
+        return F.broadcast(ids.select(surrogate_key(id_col).alias(key), id_col))
+
+    joined = (
+        staging.join(dim("vendor_id", "vendor_key", F.col("vendor_id") < 3), "vendor_id")
+        .join(dim("rate_code_id", "rate_code_key", F.col("rate_code_id") < 7), "rate_code_id")
+        .join(dim("payment_type_id", "payment_type_key"), "payment_type_id")
+    )
+    trip_id = surrogate_key(
+        "vendor_id", "rate_code_id", "pickup_location_id", "dropoff_location_id",
+        "payment_type_id", "service_type", "pickup_datetime", "dropoff_datetime",
+    ).alias("trip_id")
+    want = joined.select(
+        trip_id, "vendor_key", "rate_code_key", "payment_type_key",
+        "pickup_datetime", "dropoff_datetime", "fare_amount",
+    )
+
+    got = fact_trip(staging)
+    assert got.columns == want.columns
+    assert got.count() == want.count() == 5
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
 
 
 def test_dim_location_latlong_branch(spark):

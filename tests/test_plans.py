@@ -118,9 +118,12 @@ def test_zone_enrichment_broadcasts_lookup(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_star_fact_broadcasts_dims(spark):
+def test_star_fact_derives_dim_keys_without_joins(spark):
+    """The fact keys into its dims through their domain predicates and
+    surrogate keys computed in place: no join of any kind, so no dim is
+    recomputed and no fact-side shuffle join can appear at scale."""
     plan = _plan(spark, "star_fact_summary")
-    assert plan.count("BroadcastHashJoin") >= 3
+    assert "Join" not in plan  # BroadcastHashJoin, SortMergeJoin, ...
 
 
 def test_semi_join_stays_semi(spark):

@@ -30,12 +30,23 @@ def test_rows_only_query_runs(spark, query):
 # thread pool and each parametrized test asserts its own entry's report —
 # same comparisons, same per-test attribution. Under -x the run still
 # stops at the first failing entry, but only after the first test has
-# computed every entry's report. Builders that mutate session state
+# computed the report of every collected entry (so `-k` replays only what
+# it selects). Builders that mutate session state
 # (oracle_harness.needs_serial) run one at a time after the pool drains.
 _REPORTS: dict[str, object] = {}
 
 
-def _compute_reports(spark) -> None:
+def _collected_oracle_queries(session) -> list:
+    """The entries of this session's collected test_query_matches_oracle
+    items, in collection order."""
+    return [
+        item.callspec.params["query"]
+        for item in session.items
+        if getattr(item, "originalname", None) == "test_query_matches_oracle"
+    ]
+
+
+def _compute_reports(spark, queries) -> None:
     import threading
     from concurrent.futures import ThreadPoolExecutor
 
@@ -52,8 +63,8 @@ def _compute_reports(spark) -> None:
         except Exception as e:  # noqa: BLE001 — re-raised by the owning test
             return q.name, e
 
-    pooled = [q for q in ORACLE_QUERIES if not needs_serial(q)]
-    serial = [q for q in ORACLE_QUERIES if needs_serial(q)]
+    pooled = [q for q in queries if not needs_serial(q)]
+    serial = [q for q in queries if needs_serial(q)]
     with ThreadPoolExecutor(max_workers=8) as pool:
         for name, rep in pool.map(one, pooled):
             _REPORTS[name] = rep
@@ -62,9 +73,9 @@ def _compute_reports(spark) -> None:
 
 
 @pytest.mark.parametrize("query", ORACLE_QUERIES, ids=lambda q: q.name)
-def test_query_matches_oracle(spark, query):
+def test_query_matches_oracle(spark, request, query):
     if not _REPORTS:
-        _compute_reports(spark)
+        _compute_reports(spark, _collected_oracle_queries(request.session))
     report = _REPORTS[query.name]
     if isinstance(report, Exception):
         raise report

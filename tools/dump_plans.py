@@ -20,7 +20,7 @@ FLAGSHIPS = [
     "q01_pricing_summary",      # scan pushdown + partial/final agg
     "q03_top_revenue_orders",   # broadcast join + TakeOrdered
     "q21_waiting_suppliers",    # semi+anti correlation, no BNLJ
-    "star_fact_summary",        # 3 broadcast dims + surrogate keys
+    "star_fact_summary",        # dim keys derived in place: no join
     "dedup_minhash_lsh",        # explode -> min-agg -> banded self-join
     "ann_ivf_topk",             # probe-pruned inverted file search
     "curation_funnel",          # fused gates + single dedup shuffle
