@@ -44,62 +44,34 @@ def _run(sf_dir: str) -> dict:
     extra = {}
     if os.path.isdir("/dev/shm"):
         extra["spark.local.dir"] = "/dev/shm/spark-bench"
-    # The suite calls System.gc() every 5 queries (see the reclaim note
-    # below). On the default collector an explicit gc is a full
-    # stop-the-world pass — measured ~0.15-0.2 s each on the warmed 48g
-    # heap, ~22 s across 562 queries. ExplicitGCInvokesConcurrent turns
-    # those calls into concurrent G1 cycles: the ContextCleaner's weak
-    # refs are still processed (reference processing happens in the
-    # concurrent cycle's remark), but the suite no longer pays the
-    # pause. JVM flags must be set before the driver JVM launches,
-    # which is why this rides extra_conf and not spark.conf.set.
-    extra["spark.driver.extraJavaOptions"] = (
-        extra.get("spark.driver.extraJavaOptions", "")
-        + " -XX:+ExplicitGCInvokesConcurrent"
-    ).strip()
+    # The suite calls System.gc() every 5 queries (see
+    # tools/entries.time_pass). On the default collector an explicit gc is
+    # a full stop-the-world pass — measured ~0.15-0.2 s each on the warmed
+    # 48g heap, ~22 s across 562 queries. ExplicitGCInvokesConcurrent
+    # turns those calls into concurrent G1 cycles: the ContextCleaner's
+    # weak refs are still processed (reference processing happens in the
+    # concurrent cycle's remark), but the suite no longer pays the pause.
+    # JVM flags must be set before the driver JVM launches, which is why
+    # this sets the flag through extra_conf and not spark.conf.set.
+    extra["spark.driver.extraJavaOptions"] = "-XX:+ExplicitGCInvokesConcurrent"
     spark = get_spark(app_name="bench", extra_conf=extra)
 
     # Warm the session so the FIRST loop entry isn't charged one-time
     # costs that belong to the lake/session, not the query (r5 lake scan
     # + codegen shapes; r7 streaming machinery; r8 pandas worker pool).
     # The ladder lives in tools/warmup.warm_session — ONE implementation
-    # shared with tools/warm_time.py so the two cannot drift (ADVICE r8).
-    # Same steps in the same order as r8's inline block; all of it runs
-    # before the timed loop.
+    # shared with `tools/entries.py time` so the two cannot drift.
+    # All of it runs before the timed loop.
+    from tools.entries import time_pass
     from tools.warmup import warm_session
 
     warm_session(spark, sf_dir)
 
-    import gc
-
-    def _reclaim() -> None:
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist(False)
-
-    timings: dict[str, float] = {}
+    # time_pass reclaims each entry's cached blocks after its count() and
+    # runs a Python and a JVM GC every 5 entries (on a /dev/shm local.dir
+    # the shuffle files only GC frees occupy executor RAM).
     t_suite = time.perf_counter()
-    for i, (name, query) in enumerate(REGISTRY.items()):
-        t0 = time.perf_counter()
-        query.spark(spark, sf_dir).count()
-        timings[name] = round(time.perf_counter() - t0, 2)
-        # storage blocks from lazy localCheckpoints are only unpersisted
-        # after the driver GCs the frame refs (ContextCleaner); over a
-        # 180-query run the accumulation causes multi-x eviction spikes
-        # in later heavy queries. Reclaim DETERMINISTICALLY instead of
-        # waiting for GC: catalog queries are independent, so every block
-        # still persisted after a query's count() is garbage — drop the
-        # Python proxies (py4j pins JVM refs until CPython reclaims them),
-        # then unpersist whatever survived. The periodic System.gc() stays
-        # for what unpersist can't reach (accumulated shuffle files are
-        # deleted only when ContextCleaner GCs their ShuffleDependency —
-        # and on a /dev/shm local.dir they occupy executor RAM).
-        # unpersist needs no Python gc first: the JVM-side persistentRdds
-        # registry reaches the blocks directly (a ~0.14 s/query gen-2
-        # gc.collect() here cost the suite ~26 s)
-        _reclaim()
-        if i % 5 == 4:
-            gc.collect()
-            spark._jvm.System.gc()
+    timings = time_pass(spark, REGISTRY, sf_dir)
     total = round(time.perf_counter() - t_suite, 3)
 
     # Steady-state pass for the heavy tail: the single-pass number mixes
@@ -124,24 +96,14 @@ def _run(sf_dir: str) -> dict:
         n for n, _ in sorted(timings.items(), key=lambda kv: kv[1], reverse=True)[:40]
     ]
     rerun: dict[str, list[float]] = {n: [] for n in top40}
-
-    def _timed_rerun(name: str) -> None:
-        t0 = time.perf_counter()
-        REGISTRY[name].spark(spark, sf_dir).count()
-        rerun[name].append(round(time.perf_counter() - t0, 2))
-        _reclaim()
-
     for _pass in range(2):
-        for i, name in enumerate(top40):
-            _timed_rerun(name)
-            if i % 5 == 4:
-                gc.collect()
-                spark._jvm.System.gc()
+        for name, sec in time_pass(spark, top40, sf_dir).items():
+            rerun[name].append(sec)
     unstable = [
         n for n in top40 if max(rerun[n]) > 1.3 * min(rerun[n]) + 0.2
     ]
-    for name in unstable:
-        _timed_rerun(name)
+    for name, sec in time_pass(spark, unstable, sf_dir, gc_every=0).items():
+        rerun[name].append(sec)
 
     spark.stop()
     return {"total": total, "timings": timings, "rerun": rerun}

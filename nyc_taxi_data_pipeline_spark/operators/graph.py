@@ -89,6 +89,11 @@ def dedup_clusters(
     ).drop("node")
 
 
+# Rounds between rank-frame checkpoints on pagerank's single-consumer
+# "leak" path: bounds the plan depth of any iteration count.
+_LEAK_CHECKPOINT_EVERY = 8
+
+
 def pagerank_fixed_iterations(
     edges: DataFrame,
     src: str = "src",
@@ -123,8 +128,10 @@ def pagerank_fixed_iterations(
     localCheckpointed per iteration (it feeds two consumers per round, so
     an un-truncated tree recomputes per consumer and doubles every
     round); on the "leak" path the rank chain has a single consumer per
-    round, so the bounded loop builds ONE query over the checkpointed
-    edge/node frames with no per-iteration checkpoint."""
+    round, so it is checkpointed only every `_LEAK_CHECKPOINT_EVERY`
+    iterations: a short loop builds ONE query over the checkpointed
+    edge/node frames, and a long one never grows a plan deeper than
+    that many rounds."""
     if dangling not in ("redistribute", "leak"):
         raise ValueError(f"dangling must be 'redistribute' or 'leak': {dangling!r}")
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).localCheckpoint(
@@ -154,7 +161,7 @@ def pagerank_fixed_iterations(
     nodes2 = nodes.crossJoin(F.broadcast(n_frame)).localCheckpoint(eager=False)
     teleport = F.expr(f"({100 - damping_pct} * {scale}L) div (100 * __n)")
     pr = nodes2.select("node", F.expr(f"{scale}L div __n").alias("pr"))
-    for _ in range(iterations):
+    for i in range(1, iterations + 1):
         summed = (
             e2.join(pr.withColumnRenamed("node", "src"), "src")
             .select(F.col("dst").alias("node"), F.expr("pr div __deg").alias("__c"))
@@ -179,12 +186,12 @@ def pagerank_fixed_iterations(
         pr = base.join(summed, "node", "left").select(
             "node", (teleport + inflow).alias("pr")
         )
-        if dangling == "redistribute":
+        if dangling == "redistribute" or i % _LEAK_CHECKPOINT_EVERY == 0:
             # the rank frame feeds TWO consumers next round (inflow join +
             # dangling aggregate) — checkpoint or both recompute it. On the
-            # "leak" path pr is a SINGLE-consumer chain: 3 bounded
-            # iterations build one query with no duplicated subtree, so the
-            # per-iteration checkpoint (and its serialized AQE
-            # stage-materialization at build time) is dropped outright.
+            # "leak" path pr is a SINGLE-consumer chain with no duplicated
+            # subtree, so it skips the per-iteration checkpoint (and its
+            # serialized AQE stage-materialization at build time) and is
+            # cut only every _LEAK_CHECKPOINT_EVERY rounds.
             pr = pr.localCheckpoint(eager=False)
     return pr

@@ -73,7 +73,7 @@ def tiered_global_rank(
     The offsets frame is bounded by value-range/band-width — pick the
     band width so range/width lands in the hundreds-to-thousands (too
     narrow and the offsets frame tracks the DATA, which is the pattern
-    this helper exists to kill; tools/audit_windows.py catches that
+    this helper exists to kill; tools/audit_common.py catches that
     empirically) — so ITS unpartitioned cumsum window is one of the
     tiny frames the plan audit allows. `total_name`, when set, attaches
     the global row count from the same bounded sizes frame (replacing
@@ -169,11 +169,11 @@ def adaptive_band_width(df: DataFrame, key: str, target_tiers: int = 384) -> int
     div 65536 is ~1 tier at both test scales and ~9M single-task offset
     rows at 100 TB, invisible to a two-point empirical audit). One min/max
     aggregate (column-pruned scan, 1-row bounded collect — clean under
-    tools/audit_broadcasts.py) pins the tier count forever. Integral `div`
+    tools/audit_common.py) pins the tier count forever. Integral `div`
     by the returned width is monotone non-decreasing in the key, which is
     all tiered_global_rank requires.
 
-    The default target sits BELOW tools/audit_windows.py's 512-row
+    The default target sits BELOW tools/audit_common.py's 512-row
     data-sized floor on purpose: the offsets frame's own unpartitioned
     cumsum is then bounded under the floor by CONSTRUCTION and can never
     trip the gate even while the tier count is still in its growth phase

@@ -85,9 +85,13 @@ def run_batch_pipeline(
 
     # processed → staging (F1-F3 + A1/A2) — partitioned by year. The read
     # covers the whole processed zone, so its observed row count is the
-    # zone's, other months included
+    # zone's, other months included. Each read-back takes the schema of
+    # the frame just written, which spares a schema-inference job
     processed_back, processed_obs = observe_quality(
-        spark.read.parquet(zones["processed"]).drop("pickup_month"), []
+        spark.read.schema(processed.schema)
+        .parquet(zones["processed"])
+        .drop("pickup_month"),
+        [],
     )
     staging = staging_aggregate(
         derive_time_dims(processed_back, "pickup_datetime")
@@ -98,8 +102,10 @@ def run_batch_pipeline(
     # reads every staging row before its dim predicates filter them, so
     # the staging count and the quality gate (the GX checkpoint, §2.11)
     # ride it
-    staging_back = spark.read.parquet(zones["staging"]).withColumn(
-        "year", F.col("year").cast("string")
+    staging_back = (
+        spark.read.schema(staging.schema)
+        .parquet(zones["staging"])
+        .withColumn("year", F.col("year").cast("string"))
     )
     rules = staging_rules()
     gated, staging_obs = observe_quality(staging_back, rules)

@@ -1936,18 +1936,16 @@ def recursive_calendar_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of rows, so day-per-level recursion made depth — hence
     wall time — equal to the calendar span in days (round-2's worst
     bench entry, 22 s for 30 rows in-suite). Weekly batching cuts depth
-    7× while the emitted spine is row-identical; the level limit is
-    raised to 1000 (≈19 years of span) rather than silently relying on
-    the testdata span staying under Spark's 100-level default. The
+    7× while the emitted spine is row-identical; the recursion declares
+    its own level limit of 1000 (≈19 years of span) with `MAX RECURSION
+    LEVEL`, which holds for this query alone, rather than relying on the
+    testdata span staying under Spark's 100-level default. The
     scale-out production spine for very long spans remains the pure
     sequence()+explode in operators/temporal.py (used by
     timeseries_gapfill_locf); this entry exists to exercise the
     WITH RECURSIVE surface itself."""
     from nyc_taxi_data_pipeline_spark.sources.catalog import load_table
 
-    # session conf must hold at EXECUTION time (the frame is lazy), so it
-    # is set without restore — 1000 is harmless for every other query
-    spark.conf.set("spark.sql.cteRecursionLevelLimit", "1000")
     load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
     return spark.sql("""
       WITH RECURSIVE sparse AS (
@@ -1955,7 +1953,7 @@ def recursive_calendar_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE event_id % 1000 = 0
       ),
       bounds AS (SELECT min(day) AS lo, max(day) AS hi FROM sparse),
-      weeks(wk) AS (
+      weeks(wk) MAX RECURSION LEVEL 1000 AS (
         SELECT lo FROM bounds
         UNION ALL
         SELECT date_add(wk, 7) FROM weeks, bounds WHERE date_add(wk, 7) <= hi

@@ -2869,7 +2869,7 @@ def max_drawdown_monthly_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup on the bounded monthly frame; nation names broadcast. The
     orders⋈customer join carries NO forced hint — customer scales with
     the lake, so Catalyst/AQE picks broadcast only while the actual
-    build side fits (audit: tools/audit_broadcasts.py)."""
+    build side fits (audit: tools/audit_common.py)."""
     m = (
         _t(spark, sf_dir, "orders")
         .join(

@@ -6,7 +6,7 @@ statistic, and every one computes it WITHOUT a single-partition window:
 tiered_global_rank (per-tier parallel ranks over contiguous value bands
 + broadcast cumsum offsets) is the only order-statistic device used, so
 this wave is a standing exercise of the round-7 plan audit
-(tools/audit_windows.py + tests/test_plans.py). The DuckDB oracles use
+(tools/audit_common.py + tests/test_plans.py). The DuckDB oracles use
 the literal global windows — the semantic spec the tiered plans must
 match value-for-value.
 

@@ -4,18 +4,19 @@ audits — skew-salted shuffles and adaptively-banded order statistics.
 The round-8 verdict asks preferred breadth that hardens the engine's
 two new empirical gates over more bounded-frame statistics:
 
-- tools/audit_broadcasts.py (data-sized forced broadcasts / build-time
-  collects): the salted entries here run the HOT-KEY path the salting
-  operators (operators/skew.py) exist for — a deterministic 30%-hot
-  join key — with NO forced broadcast anywhere: salting spreads the
-  hot key across shuffle partitions instead of hoping the dim side
-  stays broadcastable, which is exactly the fallback the audit pushes
-  plans toward when a frame outgrows the hint.
-- tools/audit_windows.py (single-partition windows, incl. the round-8
-  foldable-spec extension): the order-statistic entries derive their
-  tier band width from the ACTUAL key range (adaptive_band_width), the
-  device that keeps the offsets frame bounded below the audit floor at
-  ANY scale factor.
+- the broadcast audit in tools/audit_common.py (data-sized forced
+  broadcasts / build-time collects): the salted entries here run the
+  HOT-KEY path the salting operators (operators/skew.py) exist for —
+  a deterministic 30%-hot join key — with NO forced broadcast
+  anywhere: salting spreads the hot key across shuffle partitions
+  instead of hoping the dim side stays broadcastable, which is exactly
+  the fallback the audit pushes plans toward when a frame outgrows the
+  hint.
+- the window audit in tools/audit_common.py (single-partition
+  windows, incl. the round-8 foldable-spec extension): the
+  order-statistic entries derive their tier band width from the
+  ACTUAL key range (adaptive_band_width), the device that keeps the
+  offsets frame bounded below the audit floor at ANY scale factor.
 
 Salting never changes values — every entry carries a full DuckDB value
 oracle with identical column aliases in both lanes, integer arithmetic

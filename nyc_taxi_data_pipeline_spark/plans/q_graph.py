@@ -2469,7 +2469,6 @@ def bom_explosion_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     data's own depth). Scale shape: the recursion is a per-level
     equi-join on parent key -- each level one shuffle, fan-out
     bounded by the BOM's branching factor of 2."""
-    spark.conf.set("spark.sql.cteRecursionLevelLimit", "100")
     for name in ("part",):
         _t(spark, sf_dir, name).createOrReplaceTempView(name)
     return spark.sql(
@@ -3369,7 +3368,6 @@ def critical_path_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines (depth-bounded at the hierarchy's own ~log5 depth).
     Scale shape: per-level equi-join on parent key, leaf filter as an
     anti-join, one rollup; branching factor 2 bounds the walk."""
-    spark.conf.set("spark.sql.cteRecursionLevelLimit", "100")
     _t(spark, sf_dir, "part").createOrReplaceTempView("part")
     return spark.sql(_CRITPATH_ORACLE.replace("//", "div"))
 

@@ -886,6 +886,26 @@ def test_pagerank_dangling_redistribute_conserves_mass(spark):
     assert r == l
 
 
+def test_pagerank_leak_path_plan_depth_is_bounded(spark):
+    """The "leak" path checkpoints its rank frame every 8 rounds, so a
+    loop past a checkpoint holds no more joins in its analyzed plan than
+    the rounds after it (9 iterations here: each build executes its
+    checkpoints, so longer loops only cost test time)."""
+    from nyc_taxi_data_pipeline_spark.operators.graph import (
+        pagerank_fixed_iterations,
+    )
+
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c")], ["src", "dst"]
+    )
+
+    def joins(iterations):
+        pr = pagerank_fixed_iterations(edges, iterations=iterations, dangling="leak")
+        return pr._jdf.queryExecution().analyzed().toString().count("Join ")  # noqa: SLF001
+
+    assert 0 < joins(9) <= joins(1)
+
+
 def test_sequence_packing_conserves_tokens_and_matches_reference(spark):
     """Packing must conserve per-shard token totals (every doc lands in
     exactly one pack) and match an independent Python recomputation of

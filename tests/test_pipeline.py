@@ -79,11 +79,12 @@ def test_dynamic_partition_overwrite_preserves_other_partitions(spark, tmp_path)
 
 # Jobs one run_batch_pipeline call takes on the sf0.001 trips, lake
 # empty or not: one per zone write plus what the write's own plan needs
-# (a shuffle stage per exchange, a sampling job per distributed ORDER BY)
-# and one schema-inference job per zone read back. Reading each zone back
+# (a shuffle stage per exchange, a sampling job per distributed ORDER BY).
+# The zone read-backs take the written frame's schema, so they infer
+# none (one job each, 25 in all, when they did). Reading each zone back
 # to count it, a separate quality-check job, a range-sort sampling job per
 # code dim and the fact re-deriving its three dims took it to 66.
-PIPELINE_JOB_BUDGET = 25
+PIPELINE_JOB_BUDGET = 23
 
 
 def test_batch_pipeline_job_budget(spark, tmp_path):

@@ -100,6 +100,29 @@ def test_needs_serial_covers_every_stream_builder():
     assert not needs_serial(REGISTRY["q01_pricing_summary"])
 
 
+def test_recursive_entries_leave_session_conf_alone(spark):
+    """The recursive entries carry their level limit in their own SQL
+    (`MAX RECURSION LEVEL`): building one changes no session conf, so
+    they share the thread pool. (The events table is loaded first: the
+    catalog's own timestamp settings are not the builder's.)"""
+    from nyc_taxi_data_pipeline_spark.sources.catalog import load_table
+
+    load_table(spark, SF, "events")
+    key = "spark.sql.cteRecursionLevelLimit"
+    saved = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        before = dict(spark.conf.getAll)
+        REGISTRY["recursive_calendar_spine"].spark(spark, SF)
+        assert dict(spark.conf.getAll) == before
+        assert spark.conf.get(key, None) is None
+    finally:
+        if saved is not None:
+            spark.conf.set(key, saved)
+    recursive = ("recursive_calendar_spine", "bom_explosion_recursive", "critical_path_longest")
+    assert not any(needs_serial(REGISTRY[n]) for n in recursive)
+
+
 def test_q01_scan_pushdown_and_pruning(spark):
     df = REGISTRY["q01_pricing_summary"].spark(spark, SF)
     plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
@@ -574,8 +597,7 @@ def combined_audit(spark):
     audits (tools/audit_common.py): run separately each audit rebuilds
     every entry's checkpoint-spanning lineage — 592 s of the r9 pytest
     wall and the reason the driver's r8 verify window truncated before
-    the suite finished. Flag rules/whitelists/report shapes are the
-    source modules' own; the standalone CLIs are unchanged."""
+    the suite finished."""
     import os
     import sys
 
@@ -589,7 +611,7 @@ def test_no_single_partition_window_on_data_sized_frames(spark, combined_audit):
     """Round-7 lead audit: NO catalog entry may run a Window with an
     empty partitionSpec over a data-sized frame — Spark executes that
     by moving the window's ENTIRE input through one task, the one plan
-    shape that dies at 100 TB. The audit (tools/audit_windows.py) walks
+    shape that dies at 100 TB. The audit (tools/audit_common.py) walks
     every entry's full lineage (all plan segments, localCheckpoint
     intercepted, so truncated plans are still seen), counts each
     suspect window's actual input rows at sf0.001 AND sf0.01, and
@@ -597,9 +619,9 @@ def test_no_single_partition_window_on_data_sized_frames(spark, combined_audit):
     definition of data-sized. Bounded frames (calendar spines, quantile
     grids, fixed panels, tier-offset frames) pass untouched; anything
     else must use tiered_global_rank / orderBy().limit() instead.
-    Exceptions go in tools/audit_windows.WHITELIST (hard cap: 3), each
+    Exceptions go in tools/audit_common.WINDOW_WHITELIST (hard cap: 3), each
     with a written reason."""
-    from tools.audit_windows import WHITELIST
+    from tools.audit_common import WINDOW_WHITELIST as WHITELIST
 
     assert len(WHITELIST) <= 3, "whitelist grew past the agreed cap"
     report = combined_audit[0]
@@ -621,7 +643,7 @@ def test_no_data_sized_broadcast_or_collect(spark, combined_audit):
     Catalyst's size-based adaptivity and materializes the whole frame
     on the driver + every executor, the last un-audited
     single-point-of-failure shape at 100 TB. The audit
-    (tools/audit_broadcasts.py) walks every entry's full lineage (all
+    (tools/audit_common.py) walks every entry's full lineage (all
     plan segments, localCheckpoint intercepted), counts the actual
     input rows of every ResolvedHint(broadcast) — memoized on the
     child's canonicalized hash — and records every build-time
@@ -631,9 +653,9 @@ def test_no_data_sized_broadcast_or_collect(spark, combined_audit):
     dims, range/width-bounded tier offsets, 1-row totals, probe
     panels) pass untouched; anything else must shuffle-join or derive
     its band width adaptively (plans/_base.adaptive_band_width).
-    Exceptions go in tools/audit_broadcasts.WHITELIST (hard cap: 3),
+    Exceptions go in tools/audit_common.BROADCAST_WHITELIST (hard cap: 3),
     each with a written reason."""
-    from tools.audit_broadcasts import WHITELIST
+    from tools.audit_common import BROADCAST_WHITELIST as WHITELIST
 
     assert len(WHITELIST) <= 3, "whitelist grew past the agreed cap"
     report = combined_audit[1]

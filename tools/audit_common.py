@@ -1,39 +1,53 @@
-"""One-pass combined plan audit: windows + broadcasts/collects.
+"""The catalog's two empirical plan audits, run from one build pass:
+single-partition windows and data-sized broadcasts / build-time collects.
 
-tests/test_plans.py runs BOTH empirical plan audits (single-partition
-windows, tools/audit_windows.py; data-sized broadcast hints /
-build-time collects, tools/audit_broadcasts.py) as catalog gates.
-Run separately they each rebuild every entry's full plan lineage at
-sf0.001 (and suspects again at sf0.01) — and under AQE a
-`localCheckpoint(eager=False)` plan build EXECUTES its exchange
-stages, so the two audits together cost ~two extra suite passes of
-pytest wall (r8 driver verify: output truncated at 68%, tests_ok
-unconfirmable). This module produces BOTH reports from ONE segment
-build per (entry, scale point), with independent entries built from a
-small thread pool (Spark schedules concurrent jobs from one session;
-guide §2.6).
+Both audit a plan shape that dies at 100 TB:
 
-The flag rules, whitelists, report shapes and error semantics are the
-two source modules' own — this is a scheduling change, not a new
-audit. The standalone CLIs (tools/audit_windows.py,
-tools/audit_broadcasts.py) are unchanged and remain the reference
-implementations.
+- a logical `Window` whose partitionSpec provides NO distribution (empty,
+  or made entirely of FOLDABLE expressions like `partitionBy(F.lit(1))`)
+  moves the window's ENTIRE input through one task;
+- a `broadcast()` hint materializes the whole frame on the driver and
+  ships it to every executor REGARDLESS of its size, and a `.collect()`
+  at plan-build time pulls its whole result through the driver's py4j
+  channel (`take`/`head` route through collect too).
 
-Thread-safety notes (why this is sound):
-- the localCheckpoint/collect interceptions write to THREAD-LOCAL
-  lists, installed once around the whole sweep, so concurrent builds
-  record their own segments;
-- entries whose builders mutate session state (conf.set, .register,
-  stream starts; tests/oracle_harness.needs_serial) are detected by
-  source inspection and built serially AFTER the pool drains;
-- row-count jobs are memoized on (sf, canonicalized semanticHash,
-  schema) under a lock — identical dim/offset frames across entries
-  are counted once (the broadcast audit already did this; the window
-  audit gains it here).
+All are fine for provably BOUNDED frames (calendar spines, quantile
+grids, fixed panels, dims with a fixed value domain, tier-offset
+rollups, 1-row totals) and fatal for anything proportional to the lake.
+The audit separates the two EMPIRICALLY, not by guessing from plan
+text: it builds every entry at TWO scale points and counts each
+suspect's actual input rows (each collect's result rows). Flag rule:
+rows(sf0.01) > max(GROWTH * rows(sf0.001), floor) — the input both grew
+superconstantly across the 10x lake and is big enough to matter.
+
+Mechanics
+---------
+- `localCheckpoint(eager=False)` truncates the visible plan, so the
+  build intercepts DataFrame.localCheckpoint and records every
+  pre-checkpoint frame: each plan SEGMENT is walked separately, and
+  every window/hint in the lineage is seen exactly once. Broadcast hints
+  are read from the ANALYZED plan (`ResolvedHint(strategy=broadcast)`;
+  the optimizer folds them into JoinHint).
+- Suspect inputs are re-materialized with Dataset.ofRows on the logical
+  child and counted, memoized on (sf, canonicalized semanticHash,
+  schema) under a lock, so identical dim/offset frames are counted once.
+- The two scale points' suspect lists are paired positionally WITH a
+  length check: a mismatch (AQE/branching changing the suspect count)
+  records an error instead of silently zipping.
+- Entries build from a small thread pool (Spark schedules concurrent
+  jobs from one session). The interceptions write to THREAD-LOCAL
+  lists, installed once around the whole sweep; builders that mutate
+  session state (tests/oracle_harness.needs_serial) build serially
+  after the pool drains.
+
+Usage:  python tools/audit_common.py [entry ...] [--json OUT]
+Shared by tests/test_plans.py::test_no_single_partition_window_on_data_sized_frames
+and ::test_no_data_sized_broadcast_or_collect.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 import threading
@@ -41,25 +55,72 @@ from concurrent.futures import ThreadPoolExecutor
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tests.oracle_harness import needs_serial  # noqa: E402
-from tools.audit_broadcasts import (  # noqa: E402
-    MIN_ROWS_BROADCAST,
-    MIN_ROWS_COLLECT,
-    WHITELIST as B_WHITELIST,
-    _broadcast_hints,
-    _pair,
-)
-from tools.audit_windows import (  # noqa: E402
-    GROWTH,
-    MIN_ROWS as W_MIN_ROWS,
-    SF_BIG,
-    SF_SMALL,
-    WHITELIST as W_WHITELIST,
-    _empty_partition_windows,
-    _of_rows,
-)
+from tests.oracle_harness import SF_DIR, needs_serial  # noqa: E402
+
+SF_SMALL = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
+SF_BIG = SF_DIR  # sf0.01
+GROWTH = 3.0  # input must grow >3x across the 10x lake to count as data-sized
+MIN_ROWS_WINDOW = 512  # and exceed this at sf0.01 (filters out tiny jittery frames)
+MIN_ROWS_BROADCAST = 4096  # dims with a fixed value domain sit far below;
+# a driver-materialized frame past this that still tracks the lake is a
+# real 100 TB OOM
+MIN_ROWS_COLLECT = 1024  # collect rides the py4j channel row-by-row — flag
+# sooner than the JVM-side broadcast path
+
+# Entries allowed to keep ONE unpartitioned window over a data-sized
+# frame, each with the reason the serialization is inherent. Keep <= 3.
+WINDOW_WHITELIST: dict[str, str] = {}
+# Entries allowed to keep ONE data-sized broadcast/collect, each with the
+# reason the driver materialization is inherent. Keep <= 3.
+BROADCAST_WHITELIST: dict[str, str] = {}
 
 _TL = threading.local()
+
+
+def _empty_partition_windows(jplan):
+    """Window nodes of a logical plan (py4j) whose partitionSpec is empty
+    or all-foldable."""
+    out = []
+    for node in _walk(jplan):
+        if node.getClass().getSimpleName() == "Window":
+            spec = node.partitionSpec()
+            if all(spec.apply(i).foldable() for i in range(spec.size())):
+                out.append(node)
+    return out
+
+
+def _broadcast_hints(jplan):
+    """ResolvedHint nodes of a logical plan (py4j) whose strategy is
+    broadcast."""
+    return [
+        node
+        for node in _walk(jplan)
+        if node.getClass().getSimpleName() == "ResolvedHint"
+        and "broadcast" in node.hints().toString().lower()
+    ]
+
+
+def _walk(jplan):
+    stack = [jplan]
+    while stack:
+        node = stack.pop()
+        yield node
+        kids = node.children()
+        for i in range(kids.size()):
+            stack.append(kids.apply(i))
+
+
+def _of_rows(spark, jplan):
+    jvm = spark._jvm
+    for path in (
+        jvm.org.apache.spark.sql.classic.Dataset,
+        jvm.org.apache.spark.sql.Dataset,
+    ):
+        try:
+            return path.ofRows(spark._jsparkSession, jplan)
+        except Exception:  # noqa: BLE001 — try the next namespace
+            continue
+    raise RuntimeError("Dataset.ofRows not reachable via py4j")
 
 
 def _install_patches():
@@ -132,121 +193,175 @@ def _suspects(query, spark, sf_dir, memo, lock):
     return wins, hints, collects
 
 
+def _pair(small, big, min_rows, key="input", what="suspect-count"):
+    """Pair two scale-point lists positionally; raise on length
+    mismatch (never zip silently)."""
+    if len(small) != len(big):
+        raise ValueError(
+            f"{what} mismatch across scale points: "
+            f"{len(small)} at sf0.001 vs {len(big)} at sf0.01"
+        )
+    out = []
+    flagged = False
+    for (desc, n_small), (_, n_big) in zip(small, big):
+        is_data_sized = n_big > GROWTH * max(n_small, 1) and n_big > min_rows
+        flagged = flagged or is_data_sized
+        out.append(
+            {
+                key: desc,
+                "rows_sf0001": n_small,
+                "rows_sf001": n_big,
+                "data_sized": is_data_sized,
+            }
+        )
+    return out, flagged
+
+
+def _error(e) -> dict:
+    return {"error": f"{type(e).__name__}: {e}"[:200]}
+
+
+def _sweep(items, spark, sf_dir, memo, lock, max_workers) -> dict:
+    """{name: (windows, hints, collects) or the exception} at one scale
+    point: pooled builders first, then the serial ones alone."""
+
+    def one(nq):
+        name, query = nq
+        try:
+            return name, _suspects(query, spark, sf_dir, memo, lock)
+        except Exception as e:  # noqa: BLE001 — record, don't abort the sweep
+            return name, e
+
+    with ThreadPoolExecutor(max_workers=max_workers) as pool:
+        out = dict(pool.map(one, [nq for nq in items if not needs_serial(nq[1])]))
+    out.update(one(nq) for nq in items if needs_serial(nq[1]))
+    return out
+
+
 def combined_audit_catalog(spark, names=None, max_workers=8):
-    """Run both audits from one build pass; returns
-    (window_report, broadcast_report) with the exact shapes the two
-    source modules' audit_catalog() produce."""
+    """Run both audits from one build pass; returns (window_report,
+    broadcast_report), each {entry: {...}} for every entry with at least
+    one suspect of its kind, with `flagged: True` where an input is
+    data-sized."""
     from nyc_taxi_data_pipeline_spark.plans.queries import REGISTRY
 
     items = [(n, q) for n, q in REGISTRY.items() if names is None or n in names]
     memo: dict = {}
     lock = threading.Lock()
-    small: dict[str, object] = {}
-
-    def run_small(nq):
-        name, query = nq
-        try:
-            return name, _suspects(query, spark, SF_SMALL, memo, lock)
-        except Exception as e:  # noqa: BLE001 — record, don't abort the sweep
-            return name, e
-
-    pooled = [(n, q) for n, q in items if not needs_serial(q)]
-    serial = [(n, q) for n, q in items if needs_serial(q)]
+    win_report: dict[str, dict] = {}
+    bc_report: dict[str, dict] = {}
     restore = _install_patches()
     try:
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
-            for name, res in pool.map(run_small, pooled):
-                small[name] = res
-        for nq in serial:
-            name, res = run_small(nq)
-            small[name] = res
-
-        win_report: dict[str, dict] = {}
-        bc_report: dict[str, dict] = {}
-
-        def run_big(nq):
-            name, query = nq
-            try:
-                return name, _suspects(query, spark, SF_BIG, memo, lock)
-            except Exception as e:  # noqa: BLE001
-                return name, e
-
+        small = _sweep(items, spark, SF_SMALL, memo, lock, max_workers)
         need_big = []
         for name, query in items:
             res = small[name]
             if isinstance(res, Exception):
-                err = {"error": f"{type(res).__name__}: {res}"[:200]}
-                win_report[name] = dict(err)
-                bc_report[name] = dict(err)
-                continue
-            wins, hints, collects = res
-            if wins or hints or collects:
+                win_report[name] = _error(res)
+                bc_report[name] = _error(res)
+            elif any(res):
                 need_big.append((name, query))
-
-        big: dict[str, object] = {}
-        pooled_b = [(n, q) for n, q in need_big if not needs_serial(q)]
-        serial_b = [(n, q) for n, q in need_big if needs_serial(q)]
-        with ThreadPoolExecutor(max_workers=max_workers) as pool:
-            for name, res in pool.map(run_big, pooled_b):
-                big[name] = res
-        for nq in serial_b:
-            name, res = run_big(nq)
-            big[name] = res
+        big = _sweep(need_big, spark, SF_BIG, memo, lock, max_workers)
     finally:
         restore()
 
-    for name, query in need_big:
+    for name, _ in need_big:
         wins_s, hints_s, collects_s = small[name]
         res_b = big[name]
         if isinstance(res_b, Exception):
-            err = {"error": f"{type(res_b).__name__}: {res_b}"[:200]}
             if wins_s:
-                win_report[name] = dict(err)
+                win_report[name] = _error(res_b)
             if hints_s or collects_s:
-                bc_report[name] = dict(err)
+                bc_report[name] = _error(res_b)
             continue
         wins_b, hints_b, collects_b = res_b
-        # --- window half (shape/flag rule of tools/audit_windows.py) ---
         if wins_s:
-            if len(wins_s) != len(wins_b):
+            try:
+                windows, flagged = _pair(
+                    wins_s, wins_b, MIN_ROWS_WINDOW, "window", "suspect-window count"
+                )
                 win_report[name] = {
-                    "error": (
-                        "suspect-window count mismatch across scale points: "
-                        f"{len(wins_s)} at sf0.001 vs {len(wins_b)} at sf0.01"
-                    )
-                }
-            else:
-                windows = []
-                flagged = False
-                for (desc, n_small), (_, n_big) in zip(wins_s, wins_b):
-                    is_ds = n_big > GROWTH * max(n_small, 1) and n_big > W_MIN_ROWS
-                    flagged = flagged or is_ds
-                    windows.append(
-                        {
-                            "window": desc,
-                            "rows_sf0001": n_small,
-                            "rows_sf001": n_big,
-                            "data_sized": is_ds,
-                        }
-                    )
-                win_report[name] = {
-                    "flagged": flagged and name not in W_WHITELIST,
-                    "whitelisted": name in W_WHITELIST,
+                    "flagged": flagged and name not in WINDOW_WHITELIST,
+                    "whitelisted": name in WINDOW_WHITELIST,
                     "windows": windows,
                 }
-        # --- broadcast half (shape/flag rule of tools/audit_broadcasts.py) ---
+            except ValueError as e:
+                win_report[name] = {"error": str(e)}
         if hints_s or collects_s:
             try:
                 broadcasts, f1 = _pair(hints_s, hints_b, MIN_ROWS_BROADCAST)
                 coll, f2 = _pair(collects_s, collects_b, MIN_ROWS_COLLECT)
-            except Exception as e:  # noqa: BLE001
-                bc_report[name] = {"error": f"{type(e).__name__}: {e}"[:200]}
+            except ValueError as e:
+                bc_report[name] = _error(e)
                 continue
-            flagged = f1 or f2
             bc_report[name] = {
-                "flagged": flagged and name not in B_WHITELIST,
-                "whitelisted": name in B_WHITELIST,
+                "flagged": (f1 or f2) and name not in BROADCAST_WHITELIST,
+                "whitelisted": name in BROADCAST_WHITELIST,
                 "broadcasts": broadcasts,
                 "collects": coll,
             }
     return win_report, bc_report
+
+
+def _rows(suspects, tag="") -> str:
+    return ", ".join(
+        f"{tag}{w['rows_sf0001']}->{w['rows_sf001']}{'*' if w['data_sized'] else ''}"
+        for w in suspects
+    )
+
+
+def main(argv=None) -> int:
+    import argparse
+
+    from nyc_taxi_data_pipeline_spark.session import get_spark
+
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("names", nargs="*", help="entries to audit (default: all)")
+    ap.add_argument("--json", help="write both reports to this file")
+    args = ap.parse_args(argv)
+
+    spark = get_spark(app_name="audit")
+    reports = combined_audit_catalog(spark, set(args.names) or None)
+    spark.stop()
+
+    whitelists = (WINDOW_WHITELIST, BROADCAST_WHITELIST)
+    flagged = [sorted(n for n, r in rep.items() if r.get("flagged")) for rep in reports]
+    if args.json:
+        with open(args.json, "w") as f:
+            json.dump(
+                {
+                    kind: {"flagged": fl, "whitelist": wl, "entries": rep}
+                    for kind, fl, wl, rep in zip(
+                        ("windows", "broadcasts"), flagged, whitelists, reports
+                    )
+                },
+                f,
+                indent=1,
+                sort_keys=True,
+            )
+    win_report, bc_report = reports
+    for n in sorted(set(win_report) | set(bc_report)):
+        for kind, r in (("w", win_report.get(n)), ("b", bc_report.get(n))):
+            if r is None:
+                continue
+            if "error" in r:
+                print(f"ERR  {kind} {n}: {r['error']}")
+                continue
+            tag = "FLAG" if r["flagged"] else ("WL" if r["whitelisted"] else "ok")
+            if kind == "w":
+                rows = _rows(r["windows"])
+            else:
+                rows = _rows(r["broadcasts"], "b:") + (
+                    " | " + _rows(r["collects"], "c:") if r["collects"] else ""
+                )
+            print(f"{tag:4s} {kind} {n}: {rows}")
+    print(
+        f"\n{len(flagged[0])} flagged / {len(win_report)} with empty-partition "
+        f"windows; {len(flagged[1])} flagged / {len(bc_report)} with broadcast "
+        "hints or build-time collects"
+    )
+    return 1 if any(flagged) else 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())

@@ -20,9 +20,9 @@ Usage: python tools/make_scale_slice.py K OUT_DIR   (e.g. 5 /tmp/scale/sf0.5)
 inside a `<name>.parquet/` DIRECTORY instead of one concatenated file.
 sf0.1 tables are single-row-group single-file parquet, so scan task count
 is capped at 1/table regardless of config (r8 finding #5) and core-count
-scaling ratios are ≈1 by construction; a K-file table plus a smaller
-maxPartitionBytes (tools/bench_cores.py) gives the scan K-way real
-parallelism. spark.read.parquet and DuckDB read_parquet both accept the
+scaling ratios are ≈1 by construction; a K-file table gives the scan
+K-way real parallelism (time it with `tools/entries.py time --sf-dir
+OUT_DIR` at each core count). spark.read.parquet and DuckDB read_parquet both accept the
 directory path transparently.
 """
 

@@ -1,9 +1,9 @@
-"""Shared pre-measurement session warm-up (bench.py + tools/warm_time.py).
+"""Shared pre-measurement session warm-up (bench.py + `tools/entries.py time`).
 
 One implementation of the warm-up ladder the bench grew over rounds 5-8,
-so the two consumers cannot drift (ADVICE r8: warm_time.py lacked the
-pandas-lane warm-up bench.py had, so warm timings of pandas-API entries
-included first-touch worker spawn). Everything here runs OUTSIDE any
+so the two consumers cannot drift (a warm timer that lacked the
+pandas-lane warm-up charged pandas-API entries their first-touch worker
+spawn). Everything here runs OUTSIDE any
 timed region and amortizes one-time engine costs that belong to the
 lake/session, not to any entry:
 
