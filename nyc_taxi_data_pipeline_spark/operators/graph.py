@@ -1,5 +1,6 @@
 """Iterative graph algorithms: connected components by min-label
-propagation.
+propagation, fixed-iteration PageRank (uniform or seeded restart) and
+bitmask-OR reach rounds.
 
 The dedup pipeline needs TRUE duplicate clusters: pairwise near-dup edges
 (A~B, B~C) must collapse transitively even when A~C itself missed the
@@ -17,8 +18,15 @@ of near-identical docs) is 2-3.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def undirected(e: DataFrame) -> DataFrame:
+    """Every edge of the two-column edge list `e` in both directions, under
+    e's own column names (UNION ALL: no dedup)."""
+    a, b = e.columns
+    return e.unionByName(e.select(F.col(b).alias(a), F.col(a).alias(b)))
 
 
 def connected_components(
@@ -40,10 +48,7 @@ def connected_components(
     edges = edges.select(
         F.col(src).alias("a"), F.col(dst).alias("b")
     ).localCheckpoint(eager=False)
-    sym = edges.unionByName(
-        edges.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    sym = sym.distinct().localCheckpoint(eager=False)
+    sym = undirected(edges).distinct().localCheckpoint(eager=False)
     labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
@@ -102,6 +107,7 @@ def pagerank_fixed_iterations(
     damping_pct: int = 85,
     scale: int = 10**12,
     dangling: str = "redistribute",
+    seed: Column | None = None,
 ) -> DataFrame:
     """(node, pr) after a FIXED number of power iterations of PageRank over
     the directed edge list — the canonical iterative join-aggregate workload
@@ -124,6 +130,12 @@ def pagerank_fixed_iterations(
         shortcut); only correct when the caller knows the graph has no
         dangling sources, so it is opt-in, not silently the default.
 
+    `seed`, when given, is an aggregate over the node frame's `node`
+    column that picks ONE restart node (e.g. ``F.min("node")``): the walk
+    starts there with all `scale` mass and every teleport lands there —
+    personalized PageRank / random walk with restart. Seeded runs take
+    the "leak" path.
+
     Lineage discipline: on the "redistribute" path the rank frame is
     localCheckpointed per iteration (it feeds two consumers per round, so
     an un-truncated tree recomputes per consumer and doubles every
@@ -134,6 +146,8 @@ def pagerank_fixed_iterations(
     that many rounds."""
     if dangling not in ("redistribute", "leak"):
         raise ValueError(f"dangling must be 'redistribute' or 'leak': {dangling!r}")
+    if seed is not None and dangling != "leak":
+        raise ValueError("a seeded restart runs on the 'leak' path")
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).localCheckpoint(
         eager=False
     )
@@ -143,7 +157,6 @@ def pagerank_fixed_iterations(
         .distinct()
         .localCheckpoint(eager=False)
     )
-    n_frame = nodes.agg(F.count(F.lit(1)).alias("__n"))
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("__deg"))
     if dangling == "redistribute":
         # the per-iteration dangling-mass anti-join probes deg directly —
@@ -154,13 +167,24 @@ def pagerank_fixed_iterations(
     #   * the per-src degree is folded INTO the edge list ONCE (e2), so
     #     each iteration runs ONE join against the rank vector instead of
     #     an edge join followed by a degree join;
-    #   * the node count rides as a constant column on a once-checkpointed
-    #     node frame (nodes2) instead of being re-aggregated and
-    #     re-broadcast inside every iteration's subtree.
+    #   * the node count (or the restart seed) rides as a constant column
+    #     on a once-checkpointed node frame (nodes2) instead of being
+    #     re-aggregated and re-broadcast inside every iteration's subtree.
     e2 = e.join(deg, "src").localCheckpoint(eager=False)
-    nodes2 = nodes.crossJoin(F.broadcast(n_frame)).localCheckpoint(eager=False)
-    teleport = F.expr(f"({100 - damping_pct} * {scale}L) div (100 * __n)")
-    pr = nodes2.select("node", F.expr(f"{scale}L div __n").alias("pr"))
+    if seed is None:
+        const = nodes.agg(F.count(F.lit(1)).alias("__n"))
+        start = F.expr(f"{scale}L div __n")
+        teleport = F.expr(f"({100 - damping_pct} * {scale}L) div (100 * __n)")
+    else:
+        const = nodes.agg(seed.alias("__seed"))
+        on_seed = F.col("node") == F.col("__seed")
+        zero = F.lit(0).cast("long")
+        start = F.when(on_seed, F.lit(scale).cast("long")).otherwise(zero)
+        teleport = F.when(
+            on_seed, F.expr(f"({100 - damping_pct} * {scale}L) div 100")
+        ).otherwise(zero)
+    nodes2 = nodes.crossJoin(F.broadcast(const)).localCheckpoint(eager=False)
+    pr = nodes2.select("node", start.alias("pr"))
     for i in range(1, iterations + 1):
         summed = (
             e2.join(pr.withColumnRenamed("node", "src"), "src")
@@ -195,3 +219,41 @@ def pagerank_fixed_iterations(
             # cut only every _LEAK_CHECKPOINT_EVERY rounds.
             pr = pr.localCheckpoint(eager=False)
     return pr
+
+
+def bitmask_reach_rounds(edges: DataFrame, rounds: int) -> list[DataFrame]:
+    """Exact reach balls by bitmask OR over an edge list (a, b) whose node
+    ids are in [0, 63]: frame r holds (v, ball), where ball has bit v'
+    set iff v' is within r hops of v. Frame 0 is each node's own bit; each
+    round ORs a node's ball with its out-neighbors' balls (one equi-join +
+    one bit_or aggregate) and is checkpointed. Returns rounds + 1 frames."""
+    nodes = edges.select(F.col("a").alias("v")).distinct()
+    frames = [
+        nodes.select(
+            "v",
+            F.expr(
+                "CAST(shiftleft(CAST(1 AS BIGINT), CAST(v AS INT)) AS BIGINT)"
+            ).alias("ball"),
+        ).localCheckpoint(eager=False)
+    ]
+    for _ in range(rounds):
+        prev = frames[-1]
+        frames.append(
+            prev.join(edges, prev["v"] == edges["a"], "left")
+            .join(
+                prev.select(
+                    F.col("v").alias("b"), F.col("ball").alias("nb_ball")
+                ),
+                "b",
+                "left",
+            )
+            .groupBy(prev["v"].alias("v"))
+            .agg(
+                F.expr(
+                    "CAST(coalesce(bit_or(nb_ball), 0) | max(ball)"
+                    " AS BIGINT)"
+                ).alias("ball")
+            )
+            .localCheckpoint(eager=False)
+        )
+    return frames

@@ -347,6 +347,96 @@ def _staging_trips(spark: SparkSession, sf_dir: str) -> DataFrame:
     return staging_aggregate(derive_time_dims(trips, "pickup_datetime"))
 
 
+# ===========================================================================
+# The catalog's three graphs over the lake. Every graph entry builds its
+# edge list here; the DuckDB oracles spell the same graphs in SQL.
+# ===========================================================================
+
+def trade_edges(
+    spark: SparkSession, sf_dir: str, every: int | None = None
+) -> DataFrame:
+    """Directed customer→supplier trade edges: distinct (src 'c<custkey>',
+    dst 's<suppkey>') over orders ⋈ lineitem. `every` thins the graph to
+    the orders with o_orderkey % every = 0. The 'c'/'s' prefixes keep the
+    two sides disjoint, so operators/graph.undirected of this frame has no
+    duplicates."""
+    o = _t(spark, sf_dir, "orders")
+    if every is not None:
+        o = o.filter(F.col("o_orderkey") % every == 0)
+    return (
+        o.join(
+            _t(spark, sf_dir, "lineitem"),
+            F.col("l_orderkey") == F.col("o_orderkey"),
+        )
+        .select(
+            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
+            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
+        )
+        .distinct()
+    )
+
+
+def cosupply_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Oriented supplier co-supply edges (a, b), a < b: supplier pairs that
+    share at least 2 orders, hash-thinned by (a*31 + b*17) % 20 = 0 to keep
+    the near-complete toy-scale projection sparse. Checkpointed: every
+    caller reads it more than once."""
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    cos = (
+        li.alias("x")
+        .join(
+            li.alias("y"),
+            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
+            & (F.col("x.l_suppkey") < F.col("y.l_suppkey")),
+        )
+        .groupBy(
+            F.col("x.l_suppkey").alias("s1"), F.col("y.l_suppkey").alias("s2")
+        )
+        .agg(F.count(F.lit(1)).alias("w"))
+    )
+    return (
+        cos.filter(
+            (F.col("w") >= 2)
+            & ((F.col("s1") * 31 + F.col("s2") * 17) % 20 == 0)
+        )
+        .select(F.col("s1").alias("a"), F.col("s2").alias("b"))
+        .localCheckpoint(eager=False)
+    )
+
+
+def user_items(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct (u = o_custkey, i = l_partkey % 50) co-purchase pairs: the
+    user × item-bucket bipartite graph. Checkpointed: every caller
+    self-joins it."""
+    return (
+        _t(spark, sf_dir, "lineitem")
+        .join(
+            _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey"),
+            F.col("l_orderkey") == F.col("o_orderkey"),
+        )
+        .select(
+            F.col("o_custkey").alias("u"),
+            (F.col("l_partkey") % 50).cast("long").alias("i"),
+        )
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
+
+
+def item_pairs(spark: SparkSession, sf_dir: str, op: str) -> DataFrame:
+    """Distinct item-bucket edges (a, b) between buckets one user bought
+    both of, kept where `b <op> a`: "!=" for both directions, ">" or "<"
+    for one orientation."""
+    ui = user_items(spark, sf_dir)
+    return (
+        ui.select("u", F.col("i").alias("a"))
+        .join(ui.select("u", F.col("i").alias("b")), "u")
+        .filter(F.expr(f"b {op} a"))
+        .select("a", "b")
+        .distinct()
+    )
+
+
 _CHARLM_ORACLE = """
 WITH docs AS (
   SELECT doc_id, lower(text) AS t FROM documents

@@ -16,6 +16,7 @@ from nyc_taxi_data_pipeline_spark.plans._base import (
     _t,
     adaptive_band_width,
     tiered_global_rank,
+    user_items,
 )
 
 __all__: list[str] = []
@@ -1694,19 +1695,7 @@ def itemitem_collaborative_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     popularity is a broadcast; top-20 is TakeOrderedAndProject.
     BIGINT holds to ~sf1 (dot²·10⁶ ≤ n_users²·10⁶); DECIMAL lanes
     beyond."""
-    ui = (
-        _t(spark, sf_dir, "orders")
-        .join(
-            _t(spark, sf_dir, "lineitem"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .select(
-            F.col("o_custkey").alias("u"),
-            (F.col("l_partkey") % 50).cast("long").alias("i"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    ui = user_items(spark, sf_dir)
     pop = ui.groupBy("i").agg(F.count(F.lit(1)).cast("long").alias("n_u"))
     co = (
         ui.select("u", F.col("i").alias("item_a"))

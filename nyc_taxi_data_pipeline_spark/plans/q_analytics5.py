@@ -19,9 +19,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from nyc_taxi_data_pipeline_spark.operators.graph import undirected
 from nyc_taxi_data_pipeline_spark.plans._base import (
     _register,
     _t,
+    cosupply_edges,
     exact_ntile,
     tiered_global_rank,
 )
@@ -3259,31 +3261,12 @@ def rich_club_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree-join over the edge list. Scale shape: the wedge-join edge
     build (the family's measured-linear shape) + broadcast-able degree
     joins; the k ladder is a 3-row broadcast."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    a = li.alias("x")
-    b = li.alias("y")
-    cos = (
-        a.join(
-            b,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_suppkey") < F.col("y.l_suppkey")),
-        )
-        .groupBy(
-            F.col("x.l_suppkey").alias("s1"), F.col("y.l_suppkey").alias("s2")
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    e = cos.filter(
-        (F.col("w") >= 2)
-        & ((F.col("s1") * 31 + F.col("s2") * 17) % 20 == 0)
-    ).select(F.col("s1").alias("a"), F.col("s2").alias("b")).localCheckpoint(
-        eager=False
-    )
-    und = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    )
-    deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("d")).localCheckpoint(
-        eager=False
+    e = cosupply_edges(spark, sf_dir)
+    deg = (
+        undirected(e.toDF("u", "v"))
+        .groupBy("u")
+        .agg(F.count(F.lit(1)).alias("d"))
+        .localCheckpoint(eager=False)
     )
     ks = spark.createDataFrame([(2,), (4,), (8,)], "k long")
     rich = (

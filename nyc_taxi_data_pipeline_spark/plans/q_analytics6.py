@@ -17,9 +17,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from nyc_taxi_data_pipeline_spark.operators.graph import bitmask_reach_rounds
 from nyc_taxi_data_pipeline_spark.plans._base import (
     _register,
     _t,
+    item_pairs,
     tiered_global_rank,
 )
 
@@ -2396,56 +2398,8 @@ def graph_diameter_bitmask(spark: SparkSession, sf_dir: str) -> DataFrame:
     the item domain fits one BIGINT mask; both engines share 1<<v /
     bit_or / popcount semantics. Scale shape: the only data-sized pass
     builds the edge list; four join+agg rounds touch <= 50-row frames."""
-    ui = (
-        _t(spark, sf_dir, "lineitem")
-        .join(
-            _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .select(
-            F.col("o_custkey").alias("u"),
-            (F.col("l_partkey") % 50).cast("long").alias("i"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    e = (
-        ui.select("u", F.col("i").alias("a"))
-        .join(ui.select("u", F.col("i").alias("b")), "u")
-        .filter(F.col("b") != F.col("a"))
-        .select("a", "b")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    nodes = e.select(F.col("a").alias("v")).distinct()
-    balls = nodes.select(
-        "v",
-        F.expr(
-            "CAST(shiftleft(CAST(1 AS BIGINT), CAST(v AS INT)) AS BIGINT)"
-        ).alias("ball"),
-    ).localCheckpoint(eager=False)
-    frames = [balls]
-    for _ in range(4):
-        prev = frames[-1]
-        nxt = (
-            prev.join(e, prev["v"] == e["a"], "left")
-            .join(
-                prev.select(
-                    F.col("v").alias("b"), F.col("ball").alias("nb_ball")
-                ),
-                "b",
-                "left",
-            )
-            .groupBy(prev["v"].alias("v"))
-            .agg(
-                F.expr(
-                    "CAST(coalesce(bit_or(nb_ball), 0) | max(ball)"
-                    " AS BIGINT)"
-                ).alias("ball")
-            )
-            .localCheckpoint(eager=False)
-        )
-        frames.append(nxt)
+    e = item_pairs(spark, sf_dir, "!=").localCheckpoint(eager=False)
+    frames = bitmask_reach_rounds(e, 4)
     j = frames[0].select("v", F.col("ball").alias("r0"))
     for k in range(1, 5):
         j = j.join(

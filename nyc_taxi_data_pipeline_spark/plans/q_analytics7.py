@@ -14,10 +14,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from nyc_taxi_data_pipeline_spark.operators.graph import (
+    pagerank_fixed_iterations,
+    undirected,
+)
 from nyc_taxi_data_pipeline_spark.plans._base import (
     _register,
     _t,
     tiered_global_rank,
+    trade_edges,
 )
 
 __all__: list[str] = []
@@ -1464,10 +1469,6 @@ def textrank_keyword_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     array (no per-token shuffle); the edge list dedups with one
     shuffle; each iteration is edge-join + dst-aggregate; vocabulary,
     not corpus, bounds the rank vector."""
-    from nyc_taxi_data_pipeline_spark.operators.graph import (
-        pagerank_fixed_iterations,
-    )
-
     toks = (
         _t(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull())
@@ -1491,10 +1492,7 @@ def textrank_keyword_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("src") != F.col("dst"))
         .distinct()
     )
-    edges = e0.unionByName(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).distinct()
-    pr = pagerank_fixed_iterations(edges, dangling="leak")
+    pr = pagerank_fixed_iterations(undirected(e0).distinct(), dangling="leak")
     return (
         pr.orderBy(F.col("pr").desc(), F.col("node"))
         .limit(20)
@@ -1607,23 +1605,8 @@ def betweenness_sampled_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     HITS measure connection mass, betweenness measures BROKERAGE.
     Scale shape: 5 bounded frontier joins forward, 3 backward, each
     shuffling on node keys; localCheckpoint per level."""
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
-    e0 = (
-        o.filter(F.col("o_orderkey") % 10 == 0)
-        .join(l, o["o_orderkey"] == l["l_orderkey"])
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = (
-        e0.unionByName(
-            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
+    edges = undirected(trade_edges(spark, sf_dir, 10)).localCheckpoint(
+        eager=False
     )
     seeds = (
         edges.filter(F.col("src").startswith("c"))
@@ -1804,16 +1787,8 @@ def greedy_maximal_matching_rounds(
     are exact bigints via the cross-engine md5 priority lane. Scale
     shape: per-round cost is two node-keyed windows over the live
     edge set, which shrinks geometrically in expectation."""
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
     e = (
-        o.filter(F.col("o_orderkey") % 10 == 0)
-        .join(l, o["o_orderkey"] == l["l_orderkey"])
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
+        trade_edges(spark, sf_dir, 10)
         .select(
             "src",
             "dst",

@@ -12,9 +12,17 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from nyc_taxi_data_pipeline_spark.sources.catalog import load_table
+from nyc_taxi_data_pipeline_spark.operators.graph import (
+    bitmask_reach_rounds,
+    pagerank_fixed_iterations,
+    undirected,
+)
 from nyc_taxi_data_pipeline_spark.plans._base import (
     _register,
     _t,
+    cosupply_edges,
+    item_pairs,
+    trade_edges,
 )
 
 __all__: list[str] = []
@@ -124,29 +132,15 @@ def pagerank_supplier_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     scaled-integer formulation it carries a full value oracle (unrolled
     CTEs) rather than the rows-only check iterative ops usually get.
     Each iteration shuffles once on the join key and once on the
-    aggregation key; rank-frame lineage is checkpoint-truncated per round
-    (operators/graph.pagerank_fixed_iterations)."""
-    from nyc_taxi_data_pipeline_spark.operators.graph import (
-        pagerank_fixed_iterations,
-    )
-
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
-    e0 = (
-        o.join(l, o["o_orderkey"] == l["l_orderkey"])
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = e0.unionByName(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    aggregation key; on the operator's "leak" path the single-consumer
+    rank chain is checkpointed every 8th round, so 3 rounds build one
+    query (operators/graph.pagerank_fixed_iterations)."""
     # the symmetrized graph has no dangling sources (every node appears as
     # a src), so the leak shortcut is exact here — explicit opt-in; the
     # operator's default redistributes dangling mass for arbitrary graphs
-    pr = pagerank_fixed_iterations(edges, dangling="leak")
+    pr = pagerank_fixed_iterations(
+        undirected(trade_edges(spark, sf_dir)), dangling="leak"
+    )
     return pr.orderBy(F.col("pr").desc(), F.col("node")).limit(20)
 
 
@@ -263,27 +257,7 @@ def triangle_count_oriented(spark: SparkSession, sf_dir: str) -> DataFrame:
     the global clustering coefficient. Scale shape: two shuffle joins on
     single keys plus count aggregates; the wedge frame is the watershed
     and degree orientation is precisely what keeps it subquadratic."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    a, b = li.alias("x"), li.alias("y")
-    cos = (
-        a.join(
-            b,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_suppkey") < F.col("y.l_suppkey")),
-        )
-        .groupBy(
-            F.col("x.l_suppkey").alias("s1"), F.col("y.l_suppkey").alias("s2")
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    e = (
-        cos.filter(
-            (F.col("w") >= 2)
-            & ((F.col("s1") * 31 + F.col("s2") * 17) % 20 == 0)
-        )
-        .select(F.col("s1").alias("a"), F.col("s2").alias("b"))
-        .localCheckpoint(eager=False)
-    )
+    e = cosupply_edges(spark, sf_dir)
     e2 = e.select(F.col("a").alias("m"), F.col("b").alias("c"))
     wedges = e.join(e2, e["b"] == e2["m"]).select("a", "b", "c").localCheckpoint(
         eager=False
@@ -412,28 +386,8 @@ def sssp_weighted_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed per round to cut lineage; rounds are sequential but
     each is fully distributed; unbounded closures belong to the
     imperative CC loop with convergence detection."""
-    from nyc_taxi_data_pipeline_spark.sources.catalog import load_table
-
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem")
-    e0 = (
-        o.filter(F.col("o_orderkey") % 20 == 0)
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                "src"
-            ),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias(
-                "dst"
-            ),
-        )
-        .distinct()
-    )
     edges = (
-        e0.unionByName(
-            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
+        undirected(trade_edges(spark, sf_dir, 20))
         .withColumn(
             "w",
             1
@@ -536,27 +490,8 @@ def label_propagation_communities(
     but each is fully distributed. The oracle unrolls the identical 3
     rounds as CTEs. Top communities by size; hub suppliers absorb
     their customer neighborhoods within 2 rounds."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    e0 = (
-        o.filter(F.col("o_orderkey") % 20 == 0)
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                "src"
-            ),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias(
-                "dst"
-            ),
-        )
-        .distinct()
-    )
-    edges = (
-        e0.unionByName(
-            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
+    edges = undirected(trade_edges(spark, sf_dir, 20)).localCheckpoint(
+        eager=False
     )
     labels = edges.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
@@ -642,27 +577,8 @@ def kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     the peel is the same join loop per round; convergence detection
     (count unchanged) bounds total rounds by the graph's degeneracy
     ordering depth."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    e0 = (
-        o.filter(F.col("o_orderkey") % 20 == 0)
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias(
-                "src"
-            ),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias(
-                "dst"
-            ),
-        )
-        .distinct()
-    )
-    edges = (
-        e0.unionByName(
-            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
+    edges = undirected(trade_edges(spark, sf_dir, 20)).localCheckpoint(
+        eager=False
     )
     for _ in range(3):
         surv = (
@@ -870,23 +786,8 @@ def influence_cascade_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-anti join against the activated set; frames
     localCheckpoint'ed per round. Influence-maximization's inner loop,
     replayable bit-for-bit."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    e0 = (
-        o.filter(F.col("o_orderkey") % 20 == 0)
-        .join(li, F.col("l_orderkey") == F.col("o_orderkey"))
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = (
-        e0.unionByName(
-            e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
+    edges = undirected(trade_edges(spark, sf_dir, 20)).localCheckpoint(
+        eager=False
     )
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("d")
@@ -1408,26 +1309,8 @@ def bipartiteness_check_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     + one min-agg (the `label_propagation_communities` shape); the
     conflict probe is two hash joins of the color frame against the
     edge list."""
-    ui = (
-        _t(spark, sf_dir, "lineitem")
-        .join(
-            _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .select(
-            F.col("o_custkey").alias("u"),
-            (F.col("l_partkey") % 50).cast("long").alias("i"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    edges = (
-        ui.select("u", F.col("i").alias("src"))
-        .join(ui.select("u", F.col("i").alias("dst")), "u")
-        .filter(F.col("dst") != F.col("src"))
-        .select("src", "dst")
-        .distinct()
-        .localCheckpoint(eager=False)
+    edges = item_pairs(spark, sf_dir, "!=").toDF("src", "dst").localCheckpoint(
+        eager=False
     )
     colors = edges.agg(F.min("src").cast("long").alias("node")).select(
         "node", F.lit(0).cast("long").alias("color")
@@ -1815,27 +1698,7 @@ def clustering_coefficient_global(
     d*(d-1)/2, no join. Scale shape: the oriented triangle join is the
     standard two-hop + closure equi-join on the deduplicated edge
     list; everything else is mergeable aggregation."""
-    ui = (
-        _t(spark, sf_dir, "lineitem")
-        .join(
-            _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .select(
-            F.col("o_custkey").alias("u"),
-            (F.col("l_partkey") % 50).cast("long").alias("i"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    e = (
-        ui.select("u", F.col("i").alias("a"))
-        .join(ui.select("u", F.col("i").alias("b")), "u")
-        .filter(F.col("b") > F.col("a"))
-        .select("a", "b")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = item_pairs(spark, sf_dir, ">").localCheckpoint(eager=False)
     deg = (
         e.select(F.col("a").alias("node"))
         .unionByName(e.select(F.col("b").alias("node")))
@@ -2307,27 +2170,7 @@ def modularity_score_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     the score that does. Scale shape: intra-edge counting is two
     broadcast-joins of the tiny community map against the edge list;
     degree totals are mergeable."""
-    ui = (
-        _t(spark, sf_dir, "lineitem")
-        .join(
-            _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .select(
-            F.col("o_custkey").alias("u"),
-            (F.col("l_partkey") % 50).cast("long").alias("i"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    e = (
-        ui.select("u", F.col("i").alias("a"))
-        .join(ui.select("u", F.col("i").alias("b")), "u")
-        .filter(F.col("b") > F.col("a"))
-        .select("a", "b")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = item_pairs(spark, sf_dir, ">").localCheckpoint(eager=False)
     deg = (
         e.select(F.col("a").alias("node"))
         .unionByName(e.select(F.col("b").alias("node")))
@@ -2853,57 +2696,13 @@ def neighborhood_function_bitmask(
     fits one BIGINT; both engines share 1<<v, bit_or and bit_count
     semantics. Scale shape: 3 rounds of join + 50-row bitmask agg;
     the only data-sized pass builds the edge list."""
-    ui = (
-        _t(spark, sf_dir, "lineitem")
-        .join(
-            _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .select(
-            F.col("o_custkey").alias("u"),
-            (F.col("l_partkey") % 50).cast("long").alias("i"),
-        )
+    e = item_pairs(spark, sf_dir, "!=").localCheckpoint(eager=False)
+    n = (
+        e.select(F.col("a").alias("v"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
     )
-    e = (
-        ui.select("u", F.col("i").alias("a"))
-        .join(ui.select("u", F.col("i").alias("b")), "u")
-        .filter(F.col("b") != F.col("a"))
-        .select("a", "b")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    nodes = e.select(F.col("a").alias("v")).distinct()
-    n = nodes.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
-    balls = nodes.select(
-        "v",
-        F.expr(
-            "CAST(shiftleft(CAST(1 AS BIGINT), CAST(v AS INT)) AS BIGINT)"
-        ).alias("ball"),
-    ).localCheckpoint(eager=False)
-    frames = [balls]
-    for _ in range(3):
-        prev = frames[-1]
-        nxt = (
-            prev.join(e, prev["v"] == e["a"], "left")
-            .join(
-                prev.select(
-                    F.col("v").alias("b"), F.col("ball").alias("nb_ball")
-                ),
-                "b",
-                "left",
-            )
-            .groupBy(prev["v"].alias("v"))
-            .agg(
-                F.expr(
-                    "CAST(coalesce(bit_or(nb_ball), 0) | max(ball)"
-                    " AS BIGINT)"
-                ).alias("ball")
-            )
-            .localCheckpoint(eager=False)
-        )
-        frames.append(nxt)
+    frames = bitmask_reach_rounds(e, 3)
     all_r = None
     for r, fr in enumerate(frames):
         lane = fr.select(
@@ -3189,27 +2988,7 @@ def percolation_threshold_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge weighting is embarrassingly parallel, each round is one
     (threshold, node)-keyed join + min-agg; the 5x replication is a
     broadcast threshold list, never a data copy."""
-    ui = (
-        _t(spark, sf_dir, "lineitem")
-        .join(
-            _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .select(
-            F.col("o_custkey").alias("u"),
-            (F.col("l_partkey") % 50).cast("long").alias("i"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    e0 = (
-        ui.select("u", F.col("i").alias("a"))
-        .join(ui.select("u", F.col("i").alias("b")), "u")
-        .filter(F.col("b") < F.col("a"))
-        .select("a", "b")
-        .distinct()
-    )
-    ew = e0.select(
+    ew = item_pairs(spark, sf_dir, "<").select(
         "a",
         "b",
         F.expr(
@@ -3432,29 +3211,8 @@ def local_clustering_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     an all-pairs scan. Scale shape: adjacency self-join keyed on u (the
     same shape the triangle entry measures), one degree agg, broadcast-k
     output."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    a = li.alias("x")
-    b = li.alias("y")
-    cos = (
-        a.join(
-            b,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_suppkey") < F.col("y.l_suppkey")),
-        )
-        .groupBy(
-            F.col("x.l_suppkey").alias("s1"), F.col("y.l_suppkey").alias("s2")
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    e = cos.filter(
-        (F.col("w") >= 2)
-        & ((F.col("s1") * 31 + F.col("s2") * 17) % 20 == 0)
-    ).select(F.col("s1").alias("a"), F.col("s2").alias("b")).localCheckpoint(
-        eager=False
-    )
-    und = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    ).localCheckpoint(eager=False)
+    e = cosupply_edges(spark, sf_dir)
+    und = undirected(e.toDF("u", "v")).localCheckpoint(eager=False)
     deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     n1 = und.alias("n1")
     n2 = und.alias("n2")
@@ -3547,31 +3305,10 @@ def ktruss_edge_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     kcore_decomposition's node-wise peel. Scale shape per round: one
     two-hop adjacency join keyed on endpoints (the triangle entry's
     measured shape) + one filter — no all-pairs anywhere."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    a = li.alias("x")
-    b = li.alias("y")
-    cos = (
-        a.join(
-            b,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_suppkey") < F.col("y.l_suppkey")),
-        )
-        .groupBy(
-            F.col("x.l_suppkey").alias("s1"), F.col("y.l_suppkey").alias("s2")
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    e0 = cos.filter(
-        (F.col("w") >= 2)
-        & ((F.col("s1") * 31 + F.col("s2") * 17) % 20 == 0)
-    ).select(F.col("s1").alias("a"), F.col("s2").alias("b")).localCheckpoint(
-        eager=False
-    )
+    e0 = cosupply_edges(spark, sf_dir)
 
     def support(e: DataFrame) -> DataFrame:
-        und = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-            e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
+        und = undirected(e.toDF("u", "v"))
         na = und.alias("na")
         nb = und.alias("nb")
         return (
@@ -3670,29 +3407,8 @@ def scan_structural_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     surfaced deterministically. Scale shape: adjacency wedge join + two
     broadcast-able degree joins — the triangle entry's measured-linear
     shape, never all-pairs."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    a = li.alias("x")
-    b = li.alias("y")
-    cos = (
-        a.join(
-            b,
-            (F.col("x.l_orderkey") == F.col("y.l_orderkey"))
-            & (F.col("x.l_suppkey") < F.col("y.l_suppkey")),
-        )
-        .groupBy(
-            F.col("x.l_suppkey").alias("s1"), F.col("y.l_suppkey").alias("s2")
-        )
-        .agg(F.count(F.lit(1)).alias("w"))
-    )
-    e = cos.filter(
-        (F.col("w") >= 2)
-        & ((F.col("s1") * 31 + F.col("s2") * 17) % 20 == 0)
-    ).select(F.col("s1").alias("a"), F.col("s2").alias("b")).localCheckpoint(
-        eager=False
-    )
-    und = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
-        e.select(F.col("b").alias("u"), F.col("a").alias("v"))
-    ).localCheckpoint(eager=False)
+    e = cosupply_edges(spark, sf_dir)
+    und = undirected(e.toDF("u", "v")).localCheckpoint(eager=False)
     deg = und.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
     na = und.alias("na")
     nb = und.alias("nb")
@@ -3782,68 +3498,15 @@ def personalized_pagerank_restart(spark: SparkSession, sf_dir: str) -> DataFrame
     lands entirely on the seed instead of uniformly, so the stationary
     scores measure proximity TO THE SEED — the graph-recommendation
     primitive ('suppliers relevant to this customer') that global
-    pagerank_supplier_graph cannot express. Same scaled-integer bigint
-    lanes (ranks sum to ~1e12, floor division) so three unrolled power
-    iterations value-check bit-for-bit cross-engine. Scale shape
-    identical to global PageRank: per iteration one edge-list join + one
-    destination aggregate, rank lineage checkpoint-truncated per round;
-    the restart vector is a 1-row broadcast."""
-    o = _t(spark, sf_dir, "orders")
-    l = _t(spark, sf_dir, "lineitem")
-    e0 = (
-        o.join(l, o["o_orderkey"] == l["l_orderkey"])
-        .select(
-            F.concat(F.lit("c"), F.col("o_custkey").cast("string")).alias("src"),
-            F.concat(F.lit("s"), F.col("l_suppkey").cast("string")).alias("dst"),
-        )
-        .distinct()
+    pagerank_supplier_graph cannot express. It is the same operator
+    (operators/graph.pagerank_fixed_iterations) with a seed, so the same
+    scaled-integer bigint lanes (ranks sum to ~1e12, floor division) let
+    three unrolled power iterations value-check bit-for-bit cross-engine.
+    Scale shape identical to global PageRank: per iteration one edge-list
+    join + one destination aggregate on the single-consumer "leak" rank
+    chain; the seed is a 1-row broadcast riding the checkpointed node
+    frame."""
+    pr = pagerank_fixed_iterations(
+        undirected(trade_edges(spark, sf_dir)), dangling="leak", seed=F.min("node")
     )
-    e = e0.unionByName(
-        e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=False)
-    nodes = (
-        e.select(F.col("src").alias("node")).distinct().localCheckpoint(
-            eager=False
-        )
-    )
-    seed = nodes.agg(F.min("node").alias("s"))
-    deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # r9 plan-shape restructure, same as operators/graph.
-    # pagerank_fixed_iterations (guide §2.4): degree folded into the edge
-    # list once; the seed rides as a constant column on a
-    # once-checkpointed node frame instead of re-aggregating +
-    # re-broadcasting per iteration; and the rank chain is
-    # single-consumer, so the per-iteration localCheckpoint (serialized
-    # AQE stage materialization at build) is dropped — 3 bounded
-    # iterations build ONE query. Values bit-identical: bigint lanes.
-    e2 = e.join(deg, "src").localCheckpoint(eager=False)
-    nodes2 = nodes.crossJoin(F.broadcast(seed)).localCheckpoint(eager=False)
-    pr = nodes2.select(
-        "node",
-        F.when(F.col("node") == F.col("s"), F.lit(10**12).cast("long"))
-        .otherwise(F.lit(0).cast("long"))
-        .alias("pr"),
-    )
-    for _ in range(3):
-        summed = (
-            e2.join(pr.withColumnRenamed("node", "src"), "src")
-            .select(
-                F.col("dst").alias("node"), F.expr("pr div deg").alias("c")
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("s2"))
-        )
-        pr = (
-            nodes2.join(summed, "node", "left")
-            .select(
-                "node",
-                (
-                    F.when(
-                        F.col("node") == F.col("s"),
-                        F.expr("(15 * CAST(1000000000000 AS BIGINT)) div 100"),
-                    ).otherwise(F.lit(0).cast("long"))
-                    + F.expr("(85 * coalesce(s2, CAST(0 AS BIGINT))) div 100")
-                ).alias("pr"),
-            )
-        )
     return pr.orderBy(F.col("pr").desc(), "node").limit(20)

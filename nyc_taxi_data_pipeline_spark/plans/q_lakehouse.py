@@ -7,6 +7,7 @@ All entries register into the shared REGISTRY in plans._base.
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
@@ -892,19 +893,18 @@ def udaf_pandas_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     — fine for low-cardinality keys like priority (5 groups), and the
     docstring contract says so: for high-cardinality keys use the
     approx_percentile sketch entry instead."""
-    from pyspark.sql.functions import PandasUDFType, pandas_udf
-
-    # explicit eval type: PEP-563 stringified hints can't be resolved here
-    # (pandas is function-local), so type-hint inference is unavailable
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def _mad(v):
+    # Series -> scalar hints make these grouped-agg UDFs. The hints are
+    # PEP-563 strings, resolved against this module's globals: pandas is
+    # imported at module level for that.
+    @F.pandas_udf("double")
+    def _mad(v: pd.Series) -> float:
         med = v.median()
         return float((v - med).abs().median())
 
     # Spark disallows mixing pandas and JVM aggregates in one agg()
     # (INVALID_PANDAS_UDF_PLACEMENT), so the row count is a UDAF too
-    @pandas_udf("long", PandasUDFType.GROUPED_AGG)
-    def _n(v):
+    @F.pandas_udf("long")
+    def _n(v: pd.Series) -> int:
         return len(v)
 
     o = _t(spark, sf_dir, "orders")

@@ -65,8 +65,12 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # --- serializer (reference: batch_processing_optimized.py:63) ---
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-        # --- deterministic timestamps for DuckDB-oracle parity ---
+        # --- deterministic timestamps for DuckDB-oracle parity; nanosAsLong
+        # lets sources/catalog.load_table read TIMESTAMP(NANOS) columns.
+        # Both are the confs load_table sets, so on this session its sets
+        # change nothing ---
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         # --- parquet scan sizing: 128 MiB splits keep 100 TB scans balanced ---
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # --- broadcast threshold: dims (region/nation/zone lookup) stay broadcast ---

@@ -62,7 +62,9 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # runtime-settable SQLConfs, set defensively so any caller's session
     # (e.g. the driver's bare session) matches the oracle's UTC semantics:
     # set on EVERY call (not just cache misses) because they are session
-    # state read at execution time, and a caller may have changed them
+    # state read at execution time, and a caller may have changed them.
+    # session.get_spark sets both at creation, so on an engine session
+    # these sets are no-ops.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name in _EVENT_TS_COLS:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

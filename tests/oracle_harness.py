@@ -21,6 +21,7 @@ from __future__ import annotations
 
 import math
 import re
+import time
 
 import duckdb
 
@@ -200,13 +201,18 @@ def needs_serial(query) -> bool:
 
 
 def compare_query(spark, con, query, sf_dir: str = SF_DIR) -> dict:
+    """Run one entry's Spark plan and its DuckDB oracle and compare them.
+    The report carries `spark_s` (build + collect) and `oracle_s`
+    (execute + fetch) wall seconds, so a slow side shows in the record."""
+    t0 = time.perf_counter()
     sdf = query.spark(spark, sf_dir)
     spark_rows = [tuple(r) for r in sdf.collect()]
     spark_cols = list(sdf.columns)
-
+    t1 = time.perf_counter()
     res = con.execute(query.oracle)
     duck_cols = [d[0] for d in res.description]
     duck_rows = [tuple(r) for r in res.fetchall()]
+    t2 = time.perf_counter()
 
     try:
         type_diffs = dtype_mismatches(
@@ -225,6 +231,8 @@ def compare_query(spark, con, query, sf_dir: str = SF_DIR) -> dict:
         "duck_cols": duck_cols,
         "types_match": not type_diffs,
         "type_mismatches": type_diffs[:6],
+        "spark_s": round(t1 - t0, 3),
+        "oracle_s": round(t2 - t1, 3),
     }
     if report["cols_match"] and report["types_match"] and len(spark_rows) == len(
         duck_rows

@@ -31,7 +31,8 @@ def test_check_passes_an_oracle_entry_and_fails_wrong_ones(spark):
         entries.check(spark, [REGISTRY["q01_pricing_summary"], wrong, broken], SF_DIR)
     )
     assert reports["q01_pricing_summary"]["values_match"]
-    assert entries.parity_row(reports["q01_pricing_summary"])["values_match"]
+    row = entries.parity_row(reports["q01_pricing_summary"])
+    assert row["values_match"] and row["spark_s"] > 0 and row["oracle_s"] > 0
     off = reports["_off_by_one"]
     assert off["types_match"] and off["spark_rows"] == off["duck_rows"] == 3
     assert not off["values_match"] and off["first_mismatches"]

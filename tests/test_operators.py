@@ -858,7 +858,17 @@ def test_pagerank_dangling_redistribute_conserves_mass(spark):
     """On a graph WITH a dangling node (c has no out-edges), the default
     redistribute mode must conserve total rank mass (up to floor-division
     dust), while the opt-in leak mode loses the dangling mass — and on a
-    dangling-free graph the two modes must agree exactly."""
+    dangling-free graph the two modes must agree exactly.
+
+    A seed sends all starting mass and every teleport to one node (random
+    walk with restart). On the symmetric triangle, seeded at its min node
+    a, three bigint iterations by hand (degree 2 everywhere, teleport
+    15 * 10**12 div 100 = 150e9 on a):
+      it1: a = 150e9,                          b = c = 85 * 500e9 div 100 = 425e9
+      it2: a = 150e9 + 85 * 425e9 div 100 = 511.25e9,
+           b = c = 85 * (75e9 + 212.5e9) div 100 = 244.375e9
+      it3: a = 150e9 + 85 * 244.375e9 div 100 = 357.71875e9,
+           b = c = 85 * (255.625e9 + 122.1875e9) div 100 = 321.140625e9"""
     from nyc_taxi_data_pipeline_spark.operators.graph import (
         pagerank_fixed_iterations,
     )
@@ -884,6 +894,15 @@ def test_pagerank_dangling_redistribute_conserves_mass(spark):
         for x in pagerank_fixed_iterations(sym, dangling="leak").collect()
     }
     assert r == l
+
+    seeded = pagerank_fixed_iterations(sym, dangling="leak", seed=F.min("node"))
+    assert {(x["node"], x["pr"]) for x in seeded.collect()} == {
+        ("a", 357_718_750_000),
+        ("b", 321_140_625_000),
+        ("c", 321_140_625_000),
+    }
+    with pytest.raises(ValueError):
+        pagerank_fixed_iterations(sym, seed=F.min("node"))
 
 
 def test_pagerank_leak_path_plan_depth_is_bounded(spark):

@@ -103,11 +103,7 @@ def test_needs_serial_covers_every_stream_builder():
 def test_recursive_entries_leave_session_conf_alone(spark):
     """The recursive entries carry their level limit in their own SQL
     (`MAX RECURSION LEVEL`): building one changes no session conf, so
-    they share the thread pool. (The events table is loaded first: the
-    catalog's own timestamp settings are not the builder's.)"""
-    from nyc_taxi_data_pipeline_spark.sources.catalog import load_table
-
-    load_table(spark, SF, "events")
+    they share the thread pool."""
     key = "spark.sql.cteRecursionLevelLimit"
     saved = spark.conf.get(key, None)
     spark.conf.unset(key)
@@ -407,8 +403,8 @@ def test_semantic_dedup_pair_join_is_keyed_no_cartesian(spark):
     centroid_id (id ordering + cosine threshold only as residual
     conditions) — a cartesian/BNLJ there would be the corpus-quadratic
     shape the clustering exists to avoid. (The broadcast of the centroid
-    set itself sits behind the localCheckpoint lineage boundary and is
-    asserted via PLANS.md, not reachable from the final frame's plan.)"""
+    set itself sits behind the localCheckpoint lineage boundary, not
+    reachable from the final frame's plan.)"""
     plan = _plan(spark, "semantic_dedup_clusters")
     assert "CartesianProduct" not in plan
     assert "Join [centroid_id" in plan or "Join [centroid_id".lower() in plan.lower()

@@ -16,3 +16,12 @@ def test_default_driver_heap_fits_the_host():
     mb = int(mem[:-1])
     assert mb <= max(1024, phys_mb // 2)
     assert mb <= 48 << 10
+
+
+def test_session_carries_the_catalog_read_confs(spark):
+    """The confs sources/catalog.load_table sets on a caller's session are
+    already in an engine session's SparkConf at creation, so loading a
+    table (events included) changes no session conf."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.sql.session.timeZone") == "UTC"
+    assert conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true"

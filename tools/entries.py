@@ -17,7 +17,8 @@ The lake defaults to $SPARK_GRAFT_SF_DIR, else the oracle gate's sf0.01
   canonical dtypes, order-insensitive values) per entry and scale point
   and prints the first mismatches of a failing entry.
 - `parity` runs the same check over the FULL catalog and writes one row
-  per entry (rows/schema/types/values match flags) to OUT, by default
+  per entry (rows/schema/types/values match flags, and the wall seconds
+  of the Spark side and of the oracle, `spark_s`/`oracle_s`) to OUT, by default
   PARITY_LOCAL.json at the repo root. Run it at both scale points
   (`--sf-dir <lake>/sf0.1 --json PARITY_SF01_LOCAL.json` for the larger):
   decimal rounding ties and width overflows first appeared only at sf0.1.
@@ -43,7 +44,7 @@ Old commands and their new form:
     bench_scaling.py SMALL BIG         → entries.py time NAME ... --sf-dir SMALL --json A, then BIG --json B
     dump_entry_plan.py SUFFIX OUT NAME ... --sf-dir=SF
                                        → entries.py plan SUFFIX OUT NAME ... --sf-dir SF
-    dump_plans.py [SF]                 → entries.py plan SUFFIX OUT $(grep '^## ' PLANS.md | cut -c4-)
+    dump_plans.py [SF]                 → entries.py plan SUFFIX OUT NAME ... (dumps are not committed)
 """
 
 from __future__ import annotations
@@ -103,6 +104,8 @@ def parity_row(rep: dict) -> dict:
         "types_match": rep["types_match"],
         "values_match": rep["values_match"],
         "spark_rows": rep["spark_rows"],
+        "spark_s": rep["spark_s"],
+        "oracle_s": rep["oracle_s"],
     }
     if not rep["types_match"]:
         row["type_mismatches"] = rep["type_mismatches"]
@@ -233,7 +236,10 @@ def _cmd_check(spark, args) -> int:
                 print(f"ERR  sf{sf} {n}: {rep['error']}")
                 continue
             ok = rep["values_match"]
-            print(f"{'PASS' if ok else 'FAIL'} sf{sf} {n} rows={rep['spark_rows']}/{rep['duck_rows']}")
+            print(
+                f"{'PASS' if ok else 'FAIL'} sf{sf} {n} rows={rep['spark_rows']}/{rep['duck_rows']}"
+                f" spark={rep['spark_s']}s oracle={rep['oracle_s']}s"
+            )
             if not ok:
                 bad += 1
                 print(f"  cols spark={rep['spark_cols']}")
