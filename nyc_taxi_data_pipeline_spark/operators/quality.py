@@ -38,19 +38,6 @@ def between_rule(col: str, lo, hi) -> Rule:
     )
 
 
-def in_set_rule(col: str, allowed: tuple) -> Rule:
-    return Rule(
-        name=f"{col}_in_set",
-        violated=F.col(col).isNotNull() & ~F.col(col).isin(list(allowed)),
-    )
-
-
-def unique_rule(col: str) -> Rule:
-    """Placeholder marker — uniqueness needs an aggregation, handled in
-    `check()` separately from row-level rules."""
-    return Rule(name=f"{col}_unique", violated=F.lit(None))
-
-
 def violations(df: DataFrame, rules: list[Rule]) -> DataFrame:
     """One-pass violation counts: (rule string, violations long)."""
     aggs = [

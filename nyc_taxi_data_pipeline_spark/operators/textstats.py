@@ -142,11 +142,6 @@ def with_lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("lang_pred", textfn.lang_id(text_col))
 
 
-def with_fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Append the 64-bit normalized-text fingerprint (exact-dedup key)."""
-    return df.withColumn("fingerprint", textfn.fingerprint(text_col))
-
-
 def token_budget_by(df: DataFrame, group_col: str, text_col: str = "text") -> DataFrame:
     """Corpus token budget per group (e.g. per source / per language):
     one scan + one tiny aggregate."""

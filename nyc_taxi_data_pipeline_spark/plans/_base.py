@@ -26,22 +26,31 @@ from nyc_taxi_data_pipeline_spark.sources.catalog import load_table
 
 @dataclass(frozen=True)
 class Query:
-    """A catalog entry: Spark plan builder + optional DuckDB oracle SQL."""
+    """A catalog entry: Spark plan builder + optional DuckDB oracle SQL.
+
+    Every builder leaves the session's conf, temp views and functions as
+    it found them. `stream` marks a builder that drains a streaming query
+    while it builds: the drain pins `spark.sql.shuffle.partitions` on the
+    caller's session for the query's start, so a stream entry must not
+    build beside other builders on one session."""
 
     name: str
     spark: Callable[[SparkSession, str], DataFrame]
     oracle: str | None
     doc: str
+    stream: bool = False
 
 
 REGISTRY: dict[str, Query] = {}
 
 
-def _register(name: str, oracle: str | None):
+def _register(name: str, oracle: str | None, stream: bool = False):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         if name in REGISTRY:
             raise ValueError(f"duplicate catalog entry name: {name!r}")
-        REGISTRY[name] = Query(name=name, spark=fn, oracle=oracle, doc=fn.__doc__ or "")
+        REGISTRY[name] = Query(
+            name=name, spark=fn, oracle=oracle, doc=fn.__doc__ or "", stream=stream
+        )
         return fn
 
     return deco

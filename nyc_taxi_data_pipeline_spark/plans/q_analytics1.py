@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from nyc_taxi_data_pipeline_spark.functions import scalar
-from nyc_taxi_data_pipeline_spark.sources.catalog import load_table
 from nyc_taxi_data_pipeline_spark.plans._base import (
     _STAGING_CTE,
     _register,
@@ -1407,7 +1406,6 @@ def sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins; empty windows appear in neither engine. At 100 TB the cost is
     the overlap factor (window/slide), paid in the map stage where it
     combines — never a per-window scan."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _t(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
@@ -1944,12 +1942,10 @@ def recursive_calendar_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence()+explode in operators/temporal.py (used by
     timeseries_gapfill_locf); this entry exists to exercise the
     WITH RECURSIVE surface itself."""
-    from nyc_taxi_data_pipeline_spark.sources.catalog import load_table
-
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
-    return spark.sql("""
+    return spark.sql(
+        """
       WITH RECURSIVE sparse AS (
-        SELECT CAST(ts AS DATE) AS day, value FROM events
+        SELECT CAST(ts AS DATE) AS day, value FROM {events}
         WHERE event_id % 1000 = 0
       ),
       bounds AS (SELECT min(day) AS lo, max(day) AS hi FROM sparse),
@@ -1973,7 +1969,9 @@ def recursive_calendar_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
              coalesce(a.total_value, 0.0D) AS total_value
       FROM days d LEFT JOIN daily a ON a.day = d.day
       ORDER BY d.day
-    """)
+    """,
+        events=_t(spark, sf_dir, "events"),
+    )
 
 
 _EQUIDEPTH_ORACLE = """
@@ -2053,18 +2051,18 @@ def lateral_topn_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same physical plan as the hand-written window formulation
     (window_topk_per_group), proving the declarative surface costs
     nothing at scale."""
-    from nyc_taxi_data_pipeline_spark.sources.catalog import load_table
-
-    for t in ("nation", "customer"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql("""
+    return spark.sql(
+        """
       SELECT n.n_name, l.c_name, l.c_acctbal
-      FROM nation n,
-      LATERAL (SELECT c_name, c_acctbal FROM customer c
+      FROM {nation} n,
+      LATERAL (SELECT c_name, c_acctbal FROM {customer} c
                WHERE c.c_nationkey = n.n_nationkey
                ORDER BY c_acctbal DESC, c_name LIMIT 2) l
       ORDER BY n.n_name, l.c_acctbal DESC, l.c_name
-    """)
+    """,
+        nation=_t(spark, sf_dir, "nation"),
+        customer=_t(spark, sf_dir, "customer"),
+    )
 
 
 _NOTIN_ORACLE = """
@@ -2089,22 +2087,22 @@ def not_in_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     must return UNKNOWN for EVERY row, so the count is exactly 0. Spark
     plans the null-aware variant as a null-aware anti join rather than
     silently treating NULL as a non-match; the oracle pins both counts."""
-    from nyc_taxi_data_pipeline_spark.sources.catalog import load_table
-
-    for t in ("nation", "customer"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql("""
+    return spark.sql(
+        """
       SELECT 'no_null' AS variant, count(*) AS n_customers
-      FROM customer
+      FROM {customer}
       WHERE c_nationkey NOT IN
-            (SELECT n_nationkey FROM nation WHERE n_nationkey < 5)
+            (SELECT n_nationkey FROM {nation} WHERE n_nationkey < 5)
       UNION ALL
       SELECT 'with_null' AS variant, count(*) AS n_customers
-      FROM customer
+      FROM {customer}
       WHERE c_nationkey NOT IN
-            (SELECT nullif(n_nationkey, 3) FROM nation WHERE n_nationkey < 5)
+            (SELECT nullif(n_nationkey, 3) FROM {nation} WHERE n_nationkey < 5)
       ORDER BY variant
-    """)
+    """,
+        nation=_t(spark, sf_dir, "nation"),
+        customer=_t(spark, sf_dir, "customer"),
+    )
 
 
 # Shared OLS expression text: interpolated into BOTH the Spark plan and the

@@ -446,22 +446,41 @@ def ngram_jaccard_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CC_ORACLE = r"""
-WITH RECURSIVE
-d AS (
+def _exact_jaccard_edges(doc_limit: int, min_jaccard: float) -> str:
+    """DuckDB CTEs of the exact-Jaccard dedup oracles: `d` holds each
+    doc's distinct word bigrams (doc_id < doc_limit) and `e` every pair
+    id_a < id_b with Jaccard >= min_jaccard. Pairs come from an inverted
+    index: docs join on a shared shingle, k counts the shared ones and
+    J = k / (na + nb - k). A pair sharing no shingle has J = 0 and cannot
+    pass, so the edge set equals the all-pairs cross join's while the work
+    follows shared shingles instead of n²."""
+    return rf"""d AS (
   SELECT doc_id,
          list_distinct(list_transform(range(1, greatest(len(t) - 2, 1) + 1),
                        i -> array_to_string(t[i:i+2], ' '))) AS sh
   FROM (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-        FROM documents WHERE doc_id < 500)
+        FROM documents WHERE doc_id < {doc_limit})
+),
+posting AS (SELECT doc_id, unnest(sh) AS s FROM d),
+shared AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS k
+  FROM posting a JOIN posting b ON a.s = b.s AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
 ),
 e AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM d a JOIN d b ON a.doc_id < b.doc_id
-  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        >= 0.5
-),
+  SELECT x.id_a, x.id_b
+  FROM shared x
+  JOIN d da ON da.doc_id = x.id_a
+  JOIN d db ON db.doc_id = x.id_b
+  WHERE CAST(x.k AS DOUBLE) / CAST(len(da.sh) + len(db.sh) - x.k AS DOUBLE)
+        >= {min_jaccard}
+)"""
+
+
+_CC_ORACLE = (
+    "WITH RECURSIVE\n"
+    + _exact_jaccard_edges(500, 0.5)
+    + """,
 sym AS (
   SELECT id_a AS srcn, id_b AS dstn FROM e
   UNION ALL
@@ -479,6 +498,7 @@ JOIN (SELECT component, count(*) AS n_members FROM comp GROUP BY component) s
   USING (component)
 ORDER BY component, doc_id
 """
+)
 
 
 @_register("dedup_connected_components", _CC_ORACLE)
@@ -503,22 +523,10 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KEEP_BEST_ORACLE = r"""
-WITH RECURSIVE
-d AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, greatest(len(t) - 2, 1) + 1),
-                       i -> array_to_string(t[i:i+2], ' '))) AS sh
-  FROM (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-        FROM documents WHERE doc_id < 500)
-),
-e AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM d a JOIN d b ON a.doc_id < b.doc_id
-  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        >= 0.5
-),
+_KEEP_BEST_ORACLE = (
+    "WITH RECURSIVE\n"
+    + _exact_jaccard_edges(500, 0.5)
+    + """,
 sym AS (
   SELECT id_a AS srcn, id_b AS dstn FROM e
   UNION ALL
@@ -545,6 +553,7 @@ FROM scored s JOIN sizes z USING (component)
 WHERE s.rn = 1
 ORDER BY s.component
 """
+)
 
 
 @_register("dedup_cluster_keep_best", _KEEP_BEST_ORACLE)
@@ -598,26 +607,16 @@ def dedup_cluster_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EXACT_NEARDUP_ORACLE = r"""
-WITH d AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, greatest(len(t) - 2, 1) + 1),
-                       i -> array_to_string(t[i:i+2], ' '))) AS sh
-  FROM (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
-        FROM documents WHERE doc_id < 5000)
-),
-e AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b
-  FROM d a JOIN d b ON a.doc_id < b.doc_id
-  WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-        CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-        >= 0.8
-)
+_EXACT_NEARDUP_ORACLE = (
+    "WITH "
+    + _exact_jaccard_edges(5000, 0.8)
+    + """
 SELECT doc_id, lang, source
 FROM documents
 WHERE doc_id < 5000 AND doc_id NOT IN (SELECT id_b FROM e)
 ORDER BY doc_id
 """
+)
 
 
 @_register("dedup_exact_jaccard", _EXACT_NEARDUP_ORACLE)

@@ -11,7 +11,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from nyc_taxi_data_pipeline_spark.sources.catalog import load_table
 from nyc_taxi_data_pipeline_spark.operators.graph import (
     bitmask_reach_rounds,
     pagerank_fixed_iterations,
@@ -181,15 +180,12 @@ def recursive_graph_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     level sizes polynomial; the min-aggregate collapses paths at the
     end); production unbounded closures belong to the imperative loop
     with its per-iteration checkpoint, not recursion."""
-    from nyc_taxi_data_pipeline_spark.sources.catalog import load_table
-
-    for t in ("orders", "lineitem"):
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-    return spark.sql("""
+    return spark.sql(
+        """
       WITH RECURSIVE e0 AS (
         SELECT DISTINCT 'c' || CAST(o.o_custkey AS STRING) AS src,
                         's' || CAST(l.l_suppkey AS STRING) AS dst
-        FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
+        FROM {orders} o JOIN {lineitem} l ON l.l_orderkey = o.o_orderkey
         WHERE o.o_orderkey % 10 = 0
       ),
       edges AS (
@@ -208,7 +204,10 @@ def recursive_graph_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT node, min(d) AS dist
       FROM walk GROUP BY node
       ORDER BY dist, node
-    """)
+    """,
+        orders=_t(spark, sf_dir, "orders"),
+        lineitem=_t(spark, sf_dir, "lineitem"),
+    )
 
 
 _TRIANGLE_ORACLE = """
@@ -2312,17 +2311,15 @@ def bom_explosion_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     data's own depth). Scale shape: the recursion is a per-level
     equi-join on parent key -- each level one shuffle, fan-out
     bounded by the BOM's branching factor of 2."""
-    for name in ("part",):
-        _t(spark, sf_dir, name).createOrReplaceTempView(name)
     return spark.sql(
         """
 WITH RECURSIVE bom AS (
   SELECT p.p_partkey AS parent, c.p_partkey AS child,
          CAST(2 AS BIGINT) AS qty
-  FROM part p JOIN part c ON c.p_partkey = p.p_partkey * 5 + 1
+  FROM {part} p JOIN {part} c ON c.p_partkey = p.p_partkey * 5 + 1
   UNION ALL
   SELECT p.p_partkey, c.p_partkey, CAST(3 AS BIGINT)
-  FROM part p JOIN part c ON c.p_partkey = p.p_partkey * 5 + 2
+  FROM {part} p JOIN {part} c ON c.p_partkey = p.p_partkey * 5 + 2
 ),
 roots AS (
   SELECT DISTINCT b.parent AS pk FROM bom b
@@ -2347,7 +2344,8 @@ SELECT depth,
 FROM explode_bom
 GROUP BY depth
 ORDER BY depth
-"""
+""",
+        part=_t(spark, sf_dir, "part"),
     )
 
 
@@ -3147,8 +3145,8 @@ def critical_path_longest(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines (depth-bounded at the hierarchy's own ~log5 depth).
     Scale shape: per-level equi-join on parent key, leaf filter as an
     anti-join, one rollup; branching factor 2 bounds the walk."""
-    _t(spark, sf_dir, "part").createOrReplaceTempView("part")
-    return spark.sql(_CRITPATH_ORACLE.replace("//", "div"))
+    sql = _CRITPATH_ORACLE.replace("//", "div").replace("FROM part\n", "FROM {part}\n")
+    return spark.sql(sql, part=_t(spark, sf_dir, "part"))
 
 
 # ===========================================================================

@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from nyc_taxi_data_pipeline_spark.functions import scalar, text
-from nyc_taxi_data_pipeline_spark.sources.catalog import load_table
 from nyc_taxi_data_pipeline_spark.plans._base import (
     _CHARLM_ORACLE,
     fan_out,
@@ -492,12 +491,10 @@ ORDER BY region_name, order_year
 
 @_register("sql_view_entrypoint", _SQL_VIEW_ORACLE)
 def sql_view_entrypoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P10, the SQL entry point: tables registered as temp views, the query
-    expressed as SQL TEXT through spark.sql — same Catalyst plan as the
+    """P10, the SQL entry point: tables passed as DataFrame arguments of
+    spark.sql, the query expressed as SQL TEXT — same Catalyst plan as the
     DataFrame form (the engine's replacement for the reference's
     Trino/dbt ad-hoc SQL layer, SURVEY.md §3.3)."""
-    for name in ("orders", "customer", "nation", "region"):
-        _t(spark, sf_dir, name).createOrReplaceTempView(f"v_{name}")
     return spark.sql(
         """
         SELECT r.r_name AS region_name,
@@ -505,13 +502,14 @@ def sql_view_entrypoint(spark: SparkSession, sf_dir: str) -> DataFrame:
                count(*) AS n_orders,
                CAST(round(sum(CAST(o.o_totalprice AS DECIMAL(38,6))), 2) AS DOUBLE)
                  AS total_revenue
-        FROM v_orders o
-        JOIN v_customer c ON o.o_custkey = c.c_custkey
-        JOIN v_nation n   ON c.c_nationkey = n.n_nationkey
-        JOIN v_region r   ON n.n_regionkey = r.r_regionkey
+        FROM {orders} o
+        JOIN {customer} c ON o.o_custkey = c.c_custkey
+        JOIN {nation} n   ON c.c_nationkey = n.n_nationkey
+        JOIN {region} r   ON n.n_regionkey = r.r_regionkey
         GROUP BY r.r_name, year(o.o_orderdate)
         ORDER BY region_name, order_year
-        """
+        """,
+        **{t: _t(spark, sf_dir, t) for t in ("orders", "customer", "nation", "region")},
     )
 
 
@@ -858,15 +856,11 @@ def udtf_sliding_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
             for k, start in enumerate(range(0, max(n - w, 0) + s, s)):
                 yield k, " ".join(words[start : start + w])
 
-    spark.udtf.register("sliding_chunks", SlidingChunks)
     docs = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 5 == 0)
-    docs.createOrReplaceTempView("_udtf_docs")
-    return spark.sql(
-        """
-        SELECT d.doc_id, c.win_idx, c.window_text
-        FROM _udtf_docs d, LATERAL sliding_chunks(d.text) c
-        ORDER BY d.doc_id, c.win_idx
-        """
+    return (
+        docs.lateralJoin(SlidingChunks(F.col("text").outer()))
+        .select("doc_id", "win_idx", "window_text")
+        .orderBy("doc_id", "win_idx")
     )
 
 
@@ -1351,20 +1345,23 @@ def session_variable_parameterized(spark: SparkSession, sf_dir: str) -> DataFram
     utils/trinp_db.py:12-27, the injection-prone shape). The plan is
     identical to the constant-folded static query; the oracle IS that
     static query."""
-    from nyc_taxi_data_pipeline_spark.sources.catalog import load_table
-
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     spark.sql(
         "DECLARE OR REPLACE VARIABLE price_floor DOUBLE DEFAULT 200000.0"
     )
-    spark.sql("SET VAR price_floor = 250000.0")
-    return spark.sql("""
-      EXECUTE IMMEDIATE
-        'SELECT o_orderpriority, count(*) AS n_orders
-         FROM orders WHERE o_totalprice > ?
-         GROUP BY o_orderpriority ORDER BY o_orderpriority'
-      USING price_floor
-    """)
+    try:
+        spark.sql("SET VAR price_floor = 250000.0")
+        return spark.sql(
+            """
+          EXECUTE IMMEDIATE
+            'SELECT o_orderpriority, count(*) AS n_orders
+             FROM {orders} WHERE o_totalprice > ?
+             GROUP BY o_orderpriority ORDER BY o_orderpriority'
+          USING price_floor
+        """,
+            orders=_t(spark, sf_dir, "orders"),
+        )
+    finally:
+        spark.sql("DROP TEMPORARY VARIABLE price_floor")
 
 
 _COLLATION_ORACLE = r"""
@@ -1620,27 +1617,21 @@ def sql_scripting_adaptive_threshold(spark: SparkSession, sf_dir: str) -> DataFr
     re-derives the fixpoint declaratively (smallest 20000·2^k with
     count < 100), so the imperative and declarative forms must agree
     exactly."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("v_scr_orders")
-    prev = spark.conf.get("spark.sql.scripting.enabled", None)
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
-        return spark.sql(
-            """
-            BEGIN
-              DECLARE thr BIGINT DEFAULT 20000;
-              WHILE (SELECT count(*) FROM v_scr_orders
-                     WHERE o_totalprice > thr) >= 100 DO
-                SET thr = thr * 2;
-              END WHILE;
-              SELECT thr AS threshold,
-                     (SELECT count(*) FROM v_scr_orders
-                      WHERE o_totalprice > thr) AS n_above;
-            END
-            """
-        )
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.scripting.enabled", prev)
+    return spark.sql(
+        """
+        BEGIN
+          DECLARE thr BIGINT DEFAULT 20000;
+          WHILE (SELECT count(*) FROM {orders}
+                 WHERE o_totalprice > thr) >= 100 DO
+            SET thr = thr * 2;
+          END WHILE;
+          SELECT thr AS threshold,
+                 (SELECT count(*) FROM {orders}
+                  WHERE o_totalprice > thr) AS n_above;
+        END
+        """,
+        orders=_t(spark, sf_dir, "orders"),
+    )
 
 
 _CORRUPT_AUDIT_ORACLE = """
@@ -1775,28 +1766,24 @@ ORDER BY group_key
 @_register("identifier_parameterized_query", _IDENTIFIER_ORACLE)
 def identifier_parameterized_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Parameterized IDENTIFIERS (Spark 4's IDENTIFIER() clause +
-    spark.sql named args): table and column names arrive as bound
-    PARAMETERS, not string concatenation — the injection-safe form of
-    the dynamic SQL the reference's DAG builds by f-string
-    (dags/elt_pipeline_optimized_dag.py templates table names straight
-    into query text). Same Catalyst plan as the static query, so the
-    static oracle checks it; the surface under test is the binding."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("v_idp_orders")
+    spark.sql named args): column names arrive as bound PARAMETERS and
+    the table as a DataFrame argument, not string concatenation — the
+    injection-safe form of the dynamic SQL the reference's DAG builds by
+    f-string (dags/elt_pipeline_optimized_dag.py templates table names
+    straight into query text). Same Catalyst plan as the static query, so
+    the static oracle checks it; the surface under test is the binding."""
     return spark.sql(
         """
         SELECT IDENTIFIER(:keycol) AS group_key,
                count(*) AS n_rows,
                round(CAST(sum(CAST(IDENTIFIER(:valcol) AS DECIMAL(38,6)))
                           AS DOUBLE), 2) AS total_measure
-        FROM IDENTIFIER(:tbl)
+        FROM {orders}
         GROUP BY IDENTIFIER(:keycol)
         ORDER BY group_key
         """,
-        args={
-            "tbl": "v_idp_orders",
-            "keycol": "o_orderpriority",
-            "valcol": "o_totalprice",
-        },
+        args={"keycol": "o_orderpriority", "valcol": "o_totalprice"},
+        orders=_t(spark, sf_dir, "orders"),
     )
 
 
@@ -1955,7 +1942,6 @@ def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-aggregate predicates inside the same operator, so adding a
     metric never adds a pass — the property that keeps 100 TB audit
     queries single-scan."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("v_fc_orders")
     return spark.sql(
         """
         SELECT o_orderpriority,
@@ -1966,10 +1952,11 @@ def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
                      AS DOUBLE), 2)                          AS recent_total,
                count(DISTINCT o_custkey)
                  FILTER (WHERE o_totalprice > 200000)        AS big_customers
-        FROM v_fc_orders
+        FROM {orders}
         GROUP BY o_orderpriority
         ORDER BY o_orderpriority
-        """
+        """,
+        orders=_t(spark, sf_dir, "orders"),
     )
 
 

@@ -76,19 +76,18 @@ ORDER BY 1, 2
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The `events` table as a Structured Streaming file source (the CI
-    stand-in for Kafka, SURVEY.md §2.1 S6 note). Adapts to the table's
-    physical timestamp encoding the same way sources/catalog.py does:
-    TIMESTAMP(NANOS) arrives as long (legacy conf) and truncates to
-    micros; plain micros arrives as TIMESTAMP_NTZ and casts to an instant
-    (value-preserving under the UTC session tz pinned here)."""
-    from pyspark.sql import types as T
+    stand-in for Kafka, SURVEY.md §2.1 S6 note), with the same event-time
+    normalisation as the batch table (sources/catalog.normalize_event_ts)."""
+    from nyc_taxi_data_pipeline_spark.sources.catalog import (
+        load_table,
+        normalize_event_ts,
+        table_path,
+    )
 
-    from nyc_taxi_data_pipeline_spark.sources.catalog import table_path
-
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    path = table_path(sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    # loading the batch table pins the UTC tz and nanos-as-long reads that
+    # the raw schema below depends on (no-ops on an engine session)
+    load_table(spark, sf_dir, "events")
+    schema = spark.read.parquet(table_path(sf_dir, "events")).schema
     # file-stream sources want a directory; glob-filter down to the table
     stream = (
         spark.readStream.schema(schema)
@@ -96,19 +95,15 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("pathGlobFilter", "events.parquet")
         .load(sf_dir)
     )
-    if isinstance(schema["ts"].dataType, T.LongType):
-        return stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    return normalize_event_ts(stream, "events")
 
 
-@_register("streaming_window_counts", _STREAM_WINDOW_ORACLE)
+@_register("streaming_window_counts", _STREAM_WINDOW_ORACLE, stream=True)
 def streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structured Streaming end-to-end (ST1-ST7 + the event-time windowed
     aggregation the reference never built): file-source stream → watermark →
     tumbling 1h window → memory sink, drained deterministically with
     processAllAvailable. The returned frame is the materialized sink."""
-    import uuid
-
     from nyc_taxi_data_pipeline_spark.streaming.sinks import (
         run_stream_to_memory,
         windowed_counts,
@@ -116,7 +111,7 @@ def streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = _events_stream(spark, sf_dir)
     agg = windowed_counts(stream, ts_col="ts", key_col="event_type", window="1 hour")
-    sink = run_stream_to_memory(agg, f"win_{uuid.uuid4().hex[:8]}")
+    sink = run_stream_to_memory(agg)
     return sink.orderBy("window_start", "event_type")
 
 
@@ -209,7 +204,7 @@ ORDER BY 1
 """
 
 
-@_register("streaming_partitioned_sink", _STREAM_SINK_ORACLE)
+@_register("streaming_partitioned_sink", _STREAM_SINK_ORACLE, stream=True)
 def streaming_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's production streaming sink end-to-end (S10/ST3/ST6/ST7:
     partitioned parquet + checkpoint + read-back verify), with event-time
@@ -250,13 +245,11 @@ ORDER BY event_type
 """
 
 
-@_register("streaming_dedup_state", _STREAM_DEDUP_ORACLE)
+@_register("streaming_dedup_state", _STREAM_DEDUP_ORACLE, stream=True)
 def streaming_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stateful streaming dedup: dropDuplicates on event_id keyed state
     across micro-batches, then a streaming aggregation — two stateful
     operators stacked, drained deterministically to a memory sink."""
-    import uuid
-
     from nyc_taxi_data_pipeline_spark.streaming.sinks import run_stream_to_memory
 
     stream = _events_stream(spark, sf_dir)
@@ -264,7 +257,7 @@ def streaming_dedup_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = deduped.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_unique_events")
     )
-    sink = run_stream_to_memory(agg, f"dedup_{uuid.uuid4().hex[:8]}")
+    sink = run_stream_to_memory(agg)
     return sink.orderBy("event_type")
 
 
@@ -375,7 +368,7 @@ ORDER BY user_id
 """
 
 
-@_register("streaming_stateful_running_stats", _STATEFUL_ORACLE)
+@_register("streaming_stateful_running_stats", _STATEFUL_ORACLE, stream=True)
 def streaming_stateful_running_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator (applyInPandasWithState): per-user
     running (count, sum, max) held in the state store across micro-batches.
@@ -384,24 +377,11 @@ def streaming_stateful_running_stats(spark: SparkSession, sf_dir: str) -> DataFr
     time a key is touched, so it orders emissions correctly even if values
     were negative; a plain max() over each column would silently assume
     monotone sums). Oracle = the equivalent batch aggregation."""
-    import uuid
-
+    from nyc_taxi_data_pipeline_spark.streaming.sinks import run_stream_to_memory
     from nyc_taxi_data_pipeline_spark.streaming.stateful import running_user_stats
 
     stream = _events_stream(spark, sf_dir)
-    stats = running_user_stats(stream)
-    name = f"stateful_{uuid.uuid4().hex[:8]}"
-    q = (
-        stats.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    sink = spark.table(name)
+    sink = run_stream_to_memory(running_user_stats(stream), output_mode="update")
     last = F.max(F.struct("n_events", "total_value", "max_value")).alias("s")
     return (
         sink.groupBy("user_id")
@@ -474,7 +454,7 @@ ORDER BY user_id
 """
 
 
-@_register("streaming_upsert_latest", _UPSERT_ORACLE)
+@_register("streaming_upsert_latest", _UPSERT_ORACLE, stream=True)
 def streaming_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch MERGE into a keyed zone: per-user latest state upserted
     micro-batch by micro-batch (keep-newest by event time, so the final
@@ -513,7 +493,7 @@ ORDER BY click_id, purchase_id
 """
 
 
-@_register("stream_stream_join_attribution", _SS_JOIN_ORACLE)
+@_register("stream_stream_join_attribution", _SS_JOIN_ORACLE, stream=True)
 def stream_stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream event-time interval join (the Structured Streaming
     capability the reference's append-only CDC path never used): a click
@@ -522,8 +502,6 @@ def stream_stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFram
     join state (streaming/sinks.stream_stream_interval_join); the drained
     memory sink must equal the batch interval join the oracle runs —
     exactness of stream-stream inner join under complete drain."""
-    import uuid
-
     from nyc_taxi_data_pipeline_spark.streaming.sinks import (
         run_stream_to_memory,
         stream_stream_interval_join,
@@ -553,7 +531,7 @@ def stream_stream_join_attribution(spark: SparkSession, sf_dir: str) -> DataFram
         F.col("c_user").alias("user_id"),
         "click_ts", "purchase_ts",
     )
-    sink = run_stream_to_memory(joined, f"ssj_{uuid.uuid4().hex[:8]}")
+    sink = run_stream_to_memory(joined)
     return sink.orderBy("click_id", "purchase_id")
 
 
@@ -575,7 +553,7 @@ ORDER BY d.category
 """
 
 
-@_register("stream_static_enrichment", _STREAM_STATIC_ORACLE)
+@_register("stream_static_enrichment", _STREAM_STATIC_ORACLE, stream=True)
 def stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-STATIC join (the everyday streaming enrichment shape,
     distinct from the watermark-bounded stream-stream join): each
@@ -585,8 +563,6 @@ def stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
     effect by restarting the query, the standard trade-off. Inner join
     doubles as the semi-filter (unmapped event types drop). Oracle: the
     same join run as batch SQL over a VALUES dim."""
-    import uuid
-
     from nyc_taxi_data_pipeline_spark.streaming.sinks import run_stream_to_memory
 
     dim = F.broadcast(
@@ -609,7 +585,7 @@ def stream_static_enrichment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("total_value"),
         F.sum("weight").alias("total_weight"),
     )
-    sink = run_stream_to_memory(agg, f"ss_{uuid.uuid4().hex[:8]}")
+    sink = run_stream_to_memory(agg)
     return sink.orderBy("category")
 
 
@@ -630,7 +606,7 @@ ORDER BY user_id
 """
 
 
-@_register("streaming_offset_log_source", _OFFSET_LOG_ORACLE)
+@_register("streaming_offset_log_source", _OFFSET_LOG_ORACLE, stream=True)
 def streaming_offset_log_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6 in spirit: a custom STREAMING source with Kafka's execution
     contract — partitioned append-only log, per-partition monotone
@@ -644,8 +620,6 @@ def streaming_offset_log_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     wire protocol is the only piece this proves nothing about — no
     Kafka jar/broker exists in this image (sources/pydatasource.py,
     reference: streaming_processing/streaming_to_minio_fixed.py:46-53)."""
-    import uuid
-
     from nyc_taxi_data_pipeline_spark.sources.pydatasource import (
         register_offset_log,
     )
@@ -663,7 +637,7 @@ def streaming_offset_log_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum("amount_cents").alias("total_cents"),
     )
-    sink = run_stream_to_memory(agg, f"ol_{uuid.uuid4().hex[:8]}")
+    sink = run_stream_to_memory(agg)
     return sink.orderBy("user_id")
 
 
@@ -677,7 +651,7 @@ ORDER BY batch_id
 """
 
 
-@_register("streaming_rate_limited_drain", _RATE_LIMIT_ORACLE)
+@_register("streaming_rate_limited_drain", _RATE_LIMIT_ORACLE, stream=True)
 def streaming_rate_limited_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ST4 backpressure: the reference caps ingest at
     maxOffsetsPerTrigger=100 (streaming_to_minio_fixed.py:52); the
@@ -694,6 +668,7 @@ def streaming_rate_limited_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nyc_taxi_data_pipeline_spark.sources.pydatasource import (
         register_offset_log,
     )
+    from nyc_taxi_data_pipeline_spark.streaming.sinks import drain
 
     register_offset_log(spark)
     stream = (
@@ -714,11 +689,7 @@ def streaming_rate_limited_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         if agg["n"] > 0:
             batches.append((batch_id, agg["n"], agg["p"]))
 
-    q = stream.writeStream.foreachBatch(observe).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream.writeStream.foreachBatch(observe).start())
     # re-number by drain order: foreachBatch ids are already sequential
     # from 0 for a fresh (checkpoint-less) query, but sort defensively
     rows = [
@@ -747,7 +718,7 @@ ORDER BY window_start
 """
 
 
-@_register("streaming_offset_log_windowed", _OFFSET_LOG_WINDOW_ORACLE)
+@_register("streaming_offset_log_windowed", _OFFSET_LOG_WINDOW_ORACLE, stream=True)
 def streaming_offset_log_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical Kafka pipeline shape — partitioned-log source →
     event-time watermark → tumbling window aggregation — run end-to-end
@@ -759,8 +730,6 @@ def streaming_offset_log_windowed(spark: SparkSession, sf_dir: str) -> DataFrame
     would against a real broker. Record stream is seeded integer
     arithmetic (offset → minute), so the drained windows carry a full
     value oracle."""
-    import uuid
-
     from nyc_taxi_data_pipeline_spark.sources.pydatasource import (
         register_offset_log,
     )
@@ -783,7 +752,7 @@ def streaming_offset_log_windowed(spark: SparkSession, sf_dir: str) -> DataFrame
         )
         .select(F.col("w.start").alias("window_start"), "n_events", "total_cents")
     )
-    sink = run_stream_to_memory(agg, f"olw_{uuid.uuid4().hex[:8]}")
+    sink = run_stream_to_memory(agg)
     return sink.orderBy("window_start")
 
 
@@ -964,7 +933,7 @@ FROM sk s, exact e
 """
 
 
-@_register("streaming_kmv_sketch_merge", _STREAM_KMV_ORACLE)
+@_register("streaming_kmv_sketch_merge", _STREAM_KMV_ORACLE, stream=True)
 def streaming_kmv_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV sketch mergeability under the STREAMING execution model — the
     incremental-distinct shape that makes sketches the 100 TB answer:
@@ -979,13 +948,11 @@ def streaming_kmv_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer arithmetic, so exact count, estimate, and the equality all
     carry a full value oracle. The per-batch collect is 64 rows — the
     sketch itself, which IS the materialization a sketch store writes."""
-    import uuid as _uuid
-
     from nyc_taxi_data_pipeline_spark.sources.pydatasource import (
         register_offset_log,
     )
-
     from nyc_taxi_data_pipeline_spark.operators.sketch import kmv_hash
+    from nyc_taxi_data_pipeline_spark.streaming.sinks import drain
 
     register_offset_log(spark)
     stream = (
@@ -1009,13 +976,7 @@ def streaming_kmv_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in rows:
             batch_sketches.append((int(batch_id), int(r.hv)))
 
-    q = stream.writeStream.foreachBatch(sketch_batch).queryName(
-        f"kmv_{_uuid.uuid4().hex[:8]}"
-    ).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream.writeStream.foreachBatch(sketch_batch).start())
     n_batches = len({b for b, _ in batch_sketches})
     merged_df = spark.createDataFrame(batch_sketches, "batch_id long, hv long")
     merged = (
@@ -1071,7 +1032,7 @@ ORDER BY l.l_off
 """
 
 
-@_register("streaming_interval_join_outer", _STREAM_OUTER_JOIN_ORACLE)
+@_register("streaming_interval_join_outer", _STREAM_OUTER_JOIN_ORACLE, stream=True)
 def streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT OUTER interval join — the semantics the inner
     interval join (tests/test_streaming.py) cannot express: a left row
@@ -1088,8 +1049,6 @@ def streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame
     Scale shape: state is bounded by the interval condition (eviction
     proven in tests/test_streaming.py); each no-match row costs one
     state-store entry until its watermark expiry, never unbounded."""
-    import uuid
-
     from nyc_taxi_data_pipeline_spark.sources.pydatasource import (
         register_offset_log,
     )
@@ -1143,7 +1102,7 @@ def streaming_interval_join_outer(spark: SparkSession, sf_dir: str) -> DataFrame
         & (F.col("rts") <= F.col("lts") + F.expr("INTERVAL 5 MINUTES")),
         "leftOuter",
     ).select("l_off", "r_off", F.col("r_off").isNotNull().alias("matched"))
-    sink = run_stream_to_memory(joined, f"soj_{uuid.uuid4().hex[:8]}")
+    sink = run_stream_to_memory(joined)
     return sink.orderBy("l_off")
 
 
@@ -1176,7 +1135,7 @@ ORDER BY w_end
 """
 
 
-@_register("streaming_late_data_accounting", _LATE_DATA_ORACLE)
+@_register("streaming_late_data_accounting", _LATE_DATA_ORACLE, stream=True)
 def streaming_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark LATE-ROW DROP semantics made value-checkable: a paced
     offset_log drain where every 7th offset (from 75 up) arrives with
@@ -1196,8 +1155,6 @@ def streaming_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFram
     silently loses to lateness is an exact function of batch pacing
     and the delay — this entry makes that function an oracle-checked
     spec instead of an accident."""
-    import uuid
-
     from nyc_taxi_data_pipeline_spark.sources.pydatasource import (
         register_offset_log,
     )
@@ -1223,9 +1180,7 @@ def streaming_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFram
     agg = ev.groupBy(F.window("t_eff", "10 minutes")).agg(
         F.count(F.lit(1)).alias("n_rows")
     )
-    sink = run_stream_to_memory(
-        agg, f"late_{uuid.uuid4().hex[:8]}", output_mode="append"
-    )
+    sink = run_stream_to_memory(agg, output_mode="append")
     base = F.to_timestamp(F.lit("2024-01-01 00:00:00"))
     return sink.select(
         (
@@ -1263,7 +1218,7 @@ ORDER BY user_id, session_start_min
 """
 
 
-@_register("streaming_session_windows", _STREAM_SESSION_ORACLE)
+@_register("streaming_session_windows", _STREAM_SESSION_ORACLE, stream=True)
 def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-time SESSION WINDOWS on a real stream with a full value
     oracle: a paced offset_log drain (40-offset micro-batches) whose
@@ -1279,8 +1234,6 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     minutes from the watermark cut, far from any tie. The batch
     equivalent is `sessionization_stats`; this entry proves the
     STREAMING state machine produces the batch answer."""
-    import uuid
-
     from nyc_taxi_data_pipeline_spark.sources.pydatasource import (
         register_offset_log,
     )
@@ -1306,9 +1259,7 @@ def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.groupBy(
         "user_id", F.session_window("t_eff", "10 minutes")
     ).agg(F.count(F.lit(1)).alias("n_events"))
-    sink = run_stream_to_memory(
-        agg, f"sess_{uuid.uuid4().hex[:8]}", output_mode="append"
-    )
+    sink = run_stream_to_memory(agg, output_mode="append")
     base = F.to_timestamp(F.lit("2024-01-01 00:00:00"))
     return sink.select(
         "user_id",
@@ -1349,7 +1300,7 @@ ORDER BY window_start
 """
 
 
-@_register("streaming_chained_dedup_window", _CHAINED_DEDUP_WINDOW_ORACLE)
+@_register("streaming_chained_dedup_window", _CHAINED_DEDUP_WINDOW_ORACLE, stream=True)
 def streaming_chained_dedup_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TWO stateful operators chained in ONE streaming query —
     dropDuplicatesWithinWatermark feeding a tumbling-window aggregate —
@@ -1367,8 +1318,6 @@ def streaming_chained_dedup_window(spark: SparkSession, sf_dir: str) -> DataFram
     shape: both operators shard state by key/window across shuffle
     partitions; dedup state is bounded BY the watermark (the only
     dedup that survives an unbounded stream)."""
-    import uuid
-
     from nyc_taxi_data_pipeline_spark.sources.pydatasource import (
         register_offset_log,
     )
@@ -1403,9 +1352,7 @@ def streaming_chained_dedup_window(spark: SparkSession, sf_dir: str) -> DataFram
         )
         .select(F.col("w.start").alias("window_start"), "n_keys", "total_cents")
     )
-    sink = run_stream_to_memory(
-        agg, f"cdw_{uuid.uuid4().hex[:8]}", output_mode="append"
-    )
+    sink = run_stream_to_memory(agg, output_mode="append")
     return sink.orderBy("window_start")
 
 
@@ -1449,7 +1396,7 @@ ORDER BY batch_id
 """
 
 
-@_register("streaming_sprt_monitor", _STREAM_SPRT_ORACLE)
+@_register("streaming_sprt_monitor", _STREAM_SPRT_ORACLE, stream=True)
 def streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SPRT sequential experiment monitor (sprt_sequential_ab's
     batch semantics) run AS a streaming job over a real paced
@@ -1464,11 +1411,10 @@ def streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle for a streaming sequential test. Scale shape: one 1-row
     aggregate per micro-batch (the only driver-side state is the
     running LLR — constant memory regardless of stream size)."""
-    import uuid
-
     from nyc_taxi_data_pipeline_spark.sources.pydatasource import (
         register_offset_log,
     )
+    from nyc_taxi_data_pipeline_spark.streaming.sinks import drain
 
     register_offset_log(spark)
     stream = (
@@ -1490,13 +1436,7 @@ def streaming_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         if agg["n"] and agg["n"] > 0:
             batches.append((batch_id, int(agg["n"]), int(agg["llr"])))
 
-    q = stream.writeStream.queryName(
-        f"sprt_{uuid.uuid4().hex[:8]}"
-    ).foreachBatch(observe).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream.writeStream.foreachBatch(observe).start())
     rows = []
     cum = 0
     crossed = False

@@ -72,16 +72,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     cached = _TABLE_CACHE.get(key)
     if cached is not None:
         return cached
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = normalize_event_ts(spark.read.parquet(table_path(sf_dir, name)), name)
+    _TABLE_CACHE[key] = df
+    return df
+
+
+def normalize_event_ts(df: DataFrame, name: str) -> DataFrame:
+    """Adapt table `name`'s event-time columns (`_EVENT_TS_COLS`) from
+    either physical encoding to TimestampType. `df` is a batch or stream
+    read of the raw files under load_table's UTC / nanos-as-long confs."""
     for col in _EVENT_TS_COLS.get(name, ()):
         if isinstance(df.schema[col].dataType, T.LongType):
             # integer division — double division loses precision at ns scale
             df = df.withColumn(col, F.timestamp_micros(F.expr(f"`{col}` div 1000")))
         elif isinstance(df.schema[col].dataType, T.TimestampNTZType):
-            # value-preserving under the UTC session tz pinned above;
+            # value-preserving under the UTC session tz;
             # streaming watermarks require TimestampType, not NTZ
             df = df.withColumn(col, F.col(col).cast("timestamp"))
-    _TABLE_CACHE[key] = df
     return df
 
 

@@ -49,12 +49,6 @@ def read_json(spark: SparkSession, path: str, schema=None) -> DataFrame:
     return reader.json(path)
 
 
-def head_n(df: DataFrame, n: int = 10_000) -> DataFrame:
-    """S4/O3: bounded preview scan (reference: utils/streaming_data_db.py:43-45
-    iterates arrow batches; Spark's limit pushes the bound into the scan)."""
-    return df.limit(n)
-
-
 def read_jdbc(
     spark: SparkSession,
     url: str,

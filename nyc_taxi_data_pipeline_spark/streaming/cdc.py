@@ -9,7 +9,7 @@ Kafka stream, a file stream, or a batch frame of raw messages.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -77,13 +77,3 @@ def parse_debezium(
         if c in parsed.columns:
             parsed = parsed.withColumn(c, F.timestamp_micros(F.col(c)))
     return parsed
-
-
-def with_processing_time_partitions(df: DataFrame) -> Column | DataFrame:
-    """F4/F5/ST6: stamp processing-time and derived date/hour partition keys
-    (streaming_to_minio_fixed.py:62-64)."""
-    return (
-        df.withColumn("processing_time", F.current_timestamp())
-        .withColumn("date_partition", F.date_format("processing_time", "yyyy-MM-dd"))
-        .withColumn("hour_partition", F.date_format("processing_time", "HH"))
-    )

@@ -9,6 +9,8 @@ test harness (processAllAvailable instead of wall-clock awaitTermination).
 
 from __future__ import annotations
 
+import uuid
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -34,12 +36,6 @@ def read_stream_kafka(
     if max_offsets_per_trigger is not None:
         reader = reader.option("maxOffsetsPerTrigger", str(max_offsets_per_trigger))
     return reader.load()
-
-
-def read_stream_parquet(spark: SparkSession, path: str, schema) -> DataFrame:
-    """File-based stream source — the test/CI stand-in for Kafka (schema is
-    mandatory for streaming file sources)."""
-    return spark.readStream.schema(schema).parquet(path)
 
 
 def write_stream_parquet(
@@ -103,13 +99,11 @@ def run_stream_to_parquet(
     then the sink is re-read as a batch frame (the reference's write-then-
     read-back verify, streaming_to_minio_fixed.py:86-104, made
     deterministic)."""
-    q = write_stream_parquet(
-        df, path, checkpoint, partition_by=partition_by, trigger_seconds=None
+    drain(
+        write_stream_parquet(
+            df, path, checkpoint, partition_by=partition_by, trigger_seconds=None
+        )
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return df.sparkSession.read.parquet(path)
 
 
@@ -157,53 +151,56 @@ def run_stream_upsert_parquet(
         )
         publish_zone_version(latest, zone, -1 if base is None else base)
 
-    q = stream.writeStream.foreachBatch(merge).outputMode("update").start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(stream.writeStream.foreachBatch(merge).outputMode("update").start())
     return read_zone_snapshot(stream.sparkSession, zone)
 
 
-def run_stream_to_memory(
-    df: DataFrame,
-    name: str,
-    state_partitions: int | None = 2,
-    output_mode: str | None = None,
-) -> DataFrame:
-    """ST7 harness, determinism-fixed: drain all available input
-    (processAllAvailable), stop, return the materialized sink as a batch
-    frame — replaces the reference's wall-clock awaitTermination(60) +
-    read-back pattern.
+def drain(query: StreamingQuery) -> None:
+    """Run a started query until it has processed all available input,
+    then stop it — the deterministic stand-in for the reference's
+    wall-clock awaitTermination(60)."""
+    try:
+        query.processAllAvailable()
+    finally:
+        query.stop()
 
-    `state_partitions` pins `spark.sql.shuffle.partitions` for the stream's
-    lifetime (restored after): a stateful query instantiates one state
-    store per shuffle partition PER stateful operator (a stream-stream
-    join runs four), so state width must be sized to key cardinality and
-    throughput — inheriting a batch session's wide shuffle default just
-    multiplies state-store open/commit overhead. Results are identical at
-    any width; pass None to keep the session setting. The pin is read once
-    at query START, so it cannot leak into the query after restore.
 
-    The default of 2 matches this catalog's drains: every offset_log
-    proof is a bounded log (1-4 topic-partitions, <= ~120 keys of
-    state), so two stores per stateful op already over-provision the
-    key space, and the r8 measurement showed the real cost of width is
-    not the per-batch commits alone but the executor-side provider
-    cache — loadedProviders retains partitions x ops stores per QUERY,
-    and the 60 s maintenance sweep walks all of them, so a 16-entry
-    suite at width 8 accumulates hundreds of providers (family sum of
-    warm mins 76 s at 8 vs 43 s at 2, values identical). A production
-    stream sizes width from key cardinality x throughput and passes it
-    explicitly; width never affects results, only state layout.
+def run_stream_to_memory(df: DataFrame, output_mode: str | None = None) -> DataFrame:
+    """ST7 harness, determinism-fixed: drain all available input into a
+    memory sink (under a query name of its own), stop, and return the sink
+    as a batch frame — replaces the reference's wall-clock
+    awaitTermination(60) + read-back pattern. The frame is resolved before
+    the sink's temp view is dropped, so the caller's view list is left as
+    it was and the frame still reads the sink.
+
+    `spark.sql.shuffle.partitions` is pinned to 2 while the query starts
+    and then restored (or unset, if the caller had not set it); the width
+    is read once at query START, so it cannot leak into the query after
+    the restore. A stateful query instantiates one state store per shuffle
+    partition PER stateful operator (a stream-stream join runs four), so
+    state width must be sized to key cardinality and throughput, and
+    inheriting a batch session's wide shuffle default just multiplies
+    state-store open/commit overhead. Results are identical at any width.
+    Width 2 fits this catalog's drains: every offset_log proof is a bounded
+    log (1-4 topic-partitions, <= ~120 keys of state), so two stores per
+    stateful op already over-provision the key space, and the real cost
+    of width is not the per-batch commits alone but the executor-side
+    provider cache — loadedProviders retains partitions x ops stores per
+    QUERY, and the 60 s maintenance sweep walks all of them, so a
+    16-entry suite at width 8 accumulates hundreds of providers (family
+    sum of warm mins 76 s at 8 vs 43 s at 2, values identical). The pin
+    is session-wide while it lasts, which is why stream entries never
+    build beside other builders (`Query.stream`).
 
     `output_mode` overrides the default (complete for aggregations,
     append otherwise) — pass "append" for a watermarked aggregation whose
-    point IS append semantics (closed-window emission, late-row drop)."""
+    point IS append semantics (closed-window emission, late-row drop),
+    "update" for an arbitrary-stateful operator's running emissions."""
     spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    name = f"mem_{uuid.uuid4().hex}"
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "2")
     try:
         q = (
             df.writeStream.format("memory")
@@ -215,13 +212,14 @@ def run_stream_to_memory(
             .start()
         )
     finally:
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return df.sparkSession.table(name)
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    drain(q)
+    sink = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return sink
 
 
 def _has_aggregation(df: DataFrame) -> bool:

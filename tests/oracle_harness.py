@@ -158,48 +158,6 @@ def _normalize(rows: list[tuple], colnames: list[str]) -> list[tuple]:
     return sorted(out, key=lambda t: tuple((x is None, str(x)) for x in t))
 
 
-# --- pooled vs serial scheduling --------------------------------------------
-
-# Source markers of a builder that must not run concurrently with other
-# builders on one session: it sets session conf (directly, or by pinning
-# shuffle.partitions through run_stream_to_memory), registers a function,
-# or starts a stream.
-_SERIAL_MARKERS = ("conf.set", ".register(", "run_stream_to_memory", "readStream")
-
-
-def needs_serial(query) -> bool:
-    """True if `query`'s builder mutates session-wide state, so a thread
-    pool sharing the session must run it alone. Checks the builder's
-    source and, transitively, every function of the builder's own module
-    that it calls (stream entries reach readStream and conf.set through
-    module helpers). A builder whose source is unreadable is serial."""
-    import inspect
-    import types
-
-    seen = {query.spark}
-    todo = [query.spark]
-    while todo:
-        fn = todo.pop()
-        try:
-            src = inspect.getsource(fn)
-        except (OSError, TypeError):
-            return True
-        if any(m in src for m in _SERIAL_MARKERS):
-            return True
-        names, codes = set(), [fn.__code__]
-        while codes:
-            code = codes.pop()
-            names.update(code.co_names)
-            codes += [c for c in code.co_consts if isinstance(c, types.CodeType)]
-        for name in names:
-            g = fn.__globals__.get(name)
-            same_module = inspect.isfunction(g) and g.__module__ == fn.__module__
-            if same_module and g not in seen:
-                seen.add(g)
-                todo.append(g)
-    return False
-
-
 def compare_query(spark, con, query, sf_dir: str = SF_DIR) -> dict:
     """Run one entry's Spark plan and its DuckDB oracle and compare them.
     The report carries `spark_s` (build + collect) and `oracle_s`

@@ -23,7 +23,6 @@ from __future__ import annotations
 import pytest
 
 from nyc_taxi_data_pipeline_spark.plans.queries import REGISTRY
-from tests.oracle_harness import needs_serial
 
 SF = "/root/testdata/sf0.01"
 
@@ -51,20 +50,86 @@ def _build_plan(spark, name: str) -> str:
 # verify window truncated at 68% in r8). Plan builders are deterministic,
 # so ONE build per entry serves every needle check. The cache is warmed
 # from a small thread pool (Spark schedules concurrent jobs from one
-# session, guide §2.6); builders that mutate session state
-# (oracle_harness.needs_serial, which covers every streaming entry) are
-# never pooled — each builds inline, alone, the first time a test asks.
+# session, guide §2.6). Every batch builder leaves the session as it found
+# it, so all of them share the pool; stream entries (`Query.stream`) pin
+# shuffle.partitions while their query starts, so each builds inline,
+# alone, the first time a test asks. Both paths record what the builds did
+# to the session, for test_builders_leave_session_as_found.
 _PLAN_CACHE: dict[str, object] = {}
+# (streaming-query starts, session diff) of each pooled warm
+_POOL_EFFECTS: list[tuple[int, dict]] = []
+# stream entry name -> (streaming-query starts, session diff) of its build
+_STREAM_EFFECTS: dict[str, tuple[int, dict]] = {}
+_QUERY_STARTS: list[str] = []
+_START_LISTENER = None
+
+
+def _count_query_starts(spark) -> None:
+    """Install (once per session) a listener that appends the id of every
+    streaming query started on `spark` to _QUERY_STARTS. A query-started
+    event reaches the listener before start() returns."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    global _START_LISTENER
+    if _START_LISTENER is not None:
+        return
+
+    class Starts(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            _QUERY_STARTS.append(str(event.id))
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    _START_LISTENER = Starts()
+    spark.streams.addListener(_START_LISTENER)
+
+
+def _session_state(spark) -> dict:
+    """What a builder must leave as it found: the conf map, the temp views
+    and the temporary functions."""
+    return {
+        "conf": dict(spark.conf.getAll),
+        "views": {t.name for t in spark.catalog.listTables() if t.isTemporary},
+        "functions": {
+            f.name for f in spark.catalog.listFunctions() if f.isTemporary
+        },
+    }
+
+
+def _recorded_build(spark, build) -> tuple[object, int, dict]:
+    """Run `build()` and return its result, the streaming queries it
+    started and the session state it changed ({} when none)."""
+    _count_query_starts(spark)
+    before, starts = _session_state(spark), len(_QUERY_STARTS)
+    result = build()
+    after = _session_state(spark)
+    conf = {
+        k: (before["conf"].get(k), after["conf"].get(k))
+        for k in before["conf"].keys() | after["conf"].keys()
+        if before["conf"].get(k) != after["conf"].get(k)
+    }
+    diff = {"conf": conf} if conf else {}
+    for part in ("views", "functions"):
+        if before[part] != after[part]:
+            diff[part] = sorted(before[part] ^ after[part])
+    return result, len(_QUERY_STARTS) - starts, diff
 
 
 def _warm_plan_cache(spark) -> None:
     from concurrent.futures import ThreadPoolExecutor
 
     pooled = [
-        n
-        for n, q in REGISTRY.items()
-        if n not in _PLAN_CACHE and not needs_serial(q)
+        n for n, q in REGISTRY.items() if n not in _PLAN_CACHE and not q.stream
     ]
+    if not pooled:
+        return
 
     def one(n):
         try:
@@ -72,51 +137,49 @@ def _warm_plan_cache(spark) -> None:
         except Exception as e:  # noqa: BLE001 — re-raised by the owning test
             return n, e
 
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        for n, p in pool.map(one, pooled):
-            _PLAN_CACHE[n] = p
+    def build_all():
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            return list(pool.map(one, pooled))
+
+    built, starts, diff = _recorded_build(spark, build_all)
+    _PLAN_CACHE.update(built)
+    _POOL_EFFECTS.append((starts, diff))
 
 
 def _plan(spark, name: str) -> str:
     plan = _PLAN_CACHE.get(name)
-    if plan is None and not needs_serial(REGISTRY[name]):
+    if plan is None and not REGISTRY[name].stream:
         _warm_plan_cache(spark)
         plan = _PLAN_CACHE.get(name)
-    if plan is None:  # serial builders: never pooled, build inline
-        plan = _PLAN_CACHE[name] = _build_plan(spark, name)
+    if plan is None:  # stream entries: never pooled, build inline
+        plan, starts, diff = _recorded_build(spark, lambda: _build_plan(spark, name))
+        _PLAN_CACHE[name] = plan
+        _STREAM_EFFECTS[name] = (starts, diff)
     if isinstance(plan, Exception):
         raise plan
     return plan
 
 
-def test_needs_serial_covers_every_stream_builder():
-    """Builders that start a stream or pin session conf never share the
-    thread pool — including stream_static_enrichment (run_stream_to_memory)
-    and entries that reach readStream only through a module helper — while
-    a plain batch builder stays pooled."""
-    streams = [q for n, q in REGISTRY.items() if n.startswith("stream")]
-    assert "stream_static_enrichment" in {q.name for q in streams}
-    assert all(needs_serial(q) for q in streams)
-    assert not needs_serial(REGISTRY["q01_pricing_summary"])
-
-
-def test_recursive_entries_leave_session_conf_alone(spark):
-    """The recursive entries carry their level limit in their own SQL
-    (`MAX RECURSION LEVEL`): building one changes no session conf, so
-    they share the thread pool."""
-    key = "spark.sql.cteRecursionLevelLimit"
-    saved = spark.conf.get(key, None)
-    spark.conf.unset(key)
-    try:
-        before = dict(spark.conf.getAll)
-        REGISTRY["recursive_calendar_spine"].spark(spark, SF)
-        assert dict(spark.conf.getAll) == before
-        assert spark.conf.get(key, None) is None
-    finally:
-        if saved is not None:
-            spark.conf.set(key, saved)
-    recursive = ("recursive_calendar_spine", "bom_explosion_recursive", "critical_path_longest")
-    assert not any(needs_serial(REGISTRY[n]) for n in recursive)
+def test_builders_leave_session_as_found(spark):
+    """The pooled warm of every batch builder starts no streaming query and
+    leaves the session's conf map, temp views and temporary functions as
+    it found them — which is what makes pooling them safe. Each stream
+    entry, built inline, starts at least one query and leaves the same
+    three unchanged. Recorded during the plan-cache builds, so no entry is
+    built twice."""
+    _warm_plan_cache(spark)
+    assert _POOL_EFFECTS
+    assert all(effect == (0, {}) for effect in _POOL_EFFECTS), _POOL_EFFECTS
+    streams = [n for n, q in REGISTRY.items() if q.stream]
+    assert "stream_static_enrichment" in streams
+    for n in streams:
+        _plan(spark, n)
+    bad = {
+        n: _STREAM_EFFECTS[n]
+        for n in streams
+        if _STREAM_EFFECTS[n][0] < 1 or _STREAM_EFFECTS[n][1]
+    }
+    assert not bad, bad
 
 
 def test_q01_scan_pushdown_and_pruning(spark):

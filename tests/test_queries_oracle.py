@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 
 from nyc_taxi_data_pipeline_spark.plans.queries import REGISTRY
-from tests.oracle_harness import compare_query, needs_serial
+from tests.oracle_harness import compare_query
 
 ORACLE_QUERIES = [q for q in REGISTRY.values() if q.oracle is not None]
 ROWS_ONLY_QUERIES = [q for q in REGISTRY.values() if q.oracle is None]
@@ -31,8 +31,11 @@ def test_rows_only_query_runs(spark, query):
 # same comparisons, same per-test attribution. Under -x the run still
 # stops at the first failing entry, but only after the first test has
 # computed the report of every collected entry (so `-k` replays only what
-# it selects). Builders that mutate session state
-# (oracle_harness.needs_serial) run one at a time after the pool drains.
+# it selects). Every batch builder leaves the session's conf, temp views
+# and functions as it found them (tests/test_plans.py checks it), so all of
+# them share the pool; stream entries (`Query.stream`) pin
+# shuffle.partitions while their query starts, so they run one at a time
+# after the pool drains.
 _REPORTS: dict[str, object] = {}
 
 
@@ -63,8 +66,8 @@ def _compute_reports(spark, queries) -> None:
         except Exception as e:  # noqa: BLE001 — re-raised by the owning test
             return q.name, e
 
-    pooled = [q for q in queries if not needs_serial(q)]
-    serial = [q for q in queries if needs_serial(q)]
+    pooled = [q for q in queries if not q.stream]
+    serial = [q for q in queries if q.stream]
     with ThreadPoolExecutor(max_workers=8) as pool:
         for name, rep in pool.map(one, pooled):
             _REPORTS[name] = rep

@@ -208,8 +208,6 @@ def test_foreachbatch_upsert_converges_across_batches(spark, events_4_files, tmp
 def test_windowed_counts_stream_equals_batch(spark, events_4_files):
     """The same windowed_counts code must give identical results run as a
     multi-batch stream or as a batch frame (SURVEY.md §2.9 extension)."""
-    import uuid
-
     from nyc_taxi_data_pipeline_spark.streaming.sinks import (
         run_stream_to_memory,
         windowed_counts,
@@ -221,9 +219,7 @@ def test_windowed_counts_stream_equals_batch(spark, events_4_files):
         .option("maxFilesPerTrigger", 1)
         .parquet(events_4_files)
     )
-    streamed = run_stream_to_memory(
-        windowed_counts(stream, window="6 hours"), f"wb_{uuid.uuid4().hex[:8]}"
-    )
+    streamed = run_stream_to_memory(windowed_counts(stream, window="6 hours"))
     batch = windowed_counts(spark.read.parquet(events_4_files), window="6 hours")
     key = lambda df: sorted(
         (r["window_start"], r["event_type"], r["n_events"], r["total_value"])

@@ -36,9 +36,10 @@ Mechanics
   records an error instead of silently zipping.
 - Entries build from a small thread pool (Spark schedules concurrent
   jobs from one session). The interceptions write to THREAD-LOCAL
-  lists, installed once around the whole sweep; builders that mutate
-  session state (tests/oracle_harness.needs_serial) build serially
-  after the pool drains.
+  lists, installed once around the whole sweep. Batch builders leave
+  the session as they found it, so they all share the pool; stream
+  entries (`Query.stream`) pin shuffle.partitions while their query
+  starts, so they build serially after the pool drains.
 
 Usage:  python tools/audit_common.py [entry ...] [--json OUT]
 Shared by tests/test_plans.py::test_no_single_partition_window_on_data_sized_frames
@@ -55,7 +56,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tests.oracle_harness import SF_DIR, needs_serial  # noqa: E402
+from tests.oracle_harness import SF_DIR  # noqa: E402
 
 SF_SMALL = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
 SF_BIG = SF_DIR  # sf0.01
@@ -223,7 +224,7 @@ def _error(e) -> dict:
 
 def _sweep(items, spark, sf_dir, memo, lock, max_workers) -> dict:
     """{name: (windows, hints, collects) or the exception} at one scale
-    point: pooled builders first, then the serial ones alone."""
+    point: pooled batch builders first, then the stream entries alone."""
 
     def one(nq):
         name, query = nq
@@ -233,8 +234,8 @@ def _sweep(items, spark, sf_dir, memo, lock, max_workers) -> dict:
             return name, e
 
     with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        out = dict(pool.map(one, [nq for nq in items if not needs_serial(nq[1])]))
-    out.update(one(nq) for nq in items if needs_serial(nq[1]))
+        out = dict(pool.map(one, [nq for nq in items if not nq[1].stream]))
+    out.update(one(nq) for nq in items if nq[1].stream)
     return out
 
 

@@ -70,7 +70,7 @@ def warm_session(spark, sf_dir: str, pandas_workers: int | None = None) -> None:
         .groupBy("user_id")
         .count()
     )
-    run_stream_to_memory(warm_stream, "warm_offset_log").count()
+    run_stream_to_memory(warm_stream).count()
 
     # Arrow/pandas executor lane: fill the reused-worker pool with
     # numpy-loaded workers (one per core)
