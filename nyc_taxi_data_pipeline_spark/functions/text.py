@@ -121,29 +121,18 @@ def shingles(col: str | Column, k: int = 3) -> Column:
     return F.element_at(F.transform(F.array(toks), _over_tokens), 1)
 
 
-def _fingerprint_normalized(col: str | Column) -> Column:
-    """The ONE normalization both fingerprint lanes hash (lowercase,
-    punctuation stripped, whitespace collapsed, trimmed). Shared so the
-    xxhash64 production lane and the md5 oracle lane can never drift —
-    the equal-grouping test between them pins this equivalence."""
-    return F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(_c(col)), r"[!-/:-@\[-`{-~]", " "), r"\s+", " "
+def fingerprint(col: str | Column) -> Column:
+    """Document fingerprint: md5 hex of the normalized text (lowercase,
+    punctuation stripped, whitespace collapsed, trimmed). Equal
+    fingerprints ⇒ near-identical normalized content — the exact-dedup
+    key. md5 is reproduced bit-identically by any SQL engine, so
+    fingerprint-dedup results can be oracle-verified."""
+    return F.md5(
+        F.trim(
+            F.regexp_replace(
+                F.regexp_replace(F.lower(_c(col)), r"[!-/:-@\[-`{-~]", " "),
+                r"\s+",
+                " ",
+            )
         )
     )
-
-
-def fingerprint(col: str | Column) -> Column:
-    """Document fingerprint: 64-bit hash of normalized text (lowercase,
-    collapsed whitespace, stripped punctuation). Equal fingerprints ⇒
-    near-identical normalized content — the exact-dedup key."""
-    return F.xxhash64(_fingerprint_normalized(col))
-
-
-def fingerprint_portable(col: str | Column) -> Column:
-    """`fingerprint` on the portable md5 lane (same normalization, md5 hex
-    string instead of xxhash64): reproducible bit-identically in any SQL
-    engine, so fingerprint-dedup results can be oracle-verified. 32-byte
-    string key vs the 8-byte long of the production lane — same shuffle
-    shape, ~4x wider key."""
-    return F.md5(_fingerprint_normalized(col))

@@ -10,9 +10,13 @@ collection — so each operator scales with executors:
   minhash_lsh  explode(shingles) + per-doc min-agg (shuffle on doc id),
                then a self-join on (band, bucket) — candidates only, never
                the O(n²) cross product
-  simhash      per-row fold over the token array (zero shuffle), then a
-               band join like minhash
+  simhash      explode(tokens) + per-doc bit-vote agg (shuffle on doc id),
+               then a band join like minhash
   ngram_jaccard inverted-index join on shingle (shuffle on shingle)
+
+Every hash is md5 over strings, the one hash any SQL engine reproduces
+bit for bit, so each operator's output is value-checked against a
+DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -44,17 +48,11 @@ def exact_dedup(df: DataFrame, cols: list[str], id_col: str) -> DataFrame:
 
 def fingerprint_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Exact dedup on the *normalized-text* fingerprint (case/punct/space
-    insensitive). Dedup key is 8 bytes instead of the full document —
-    at 100 TB the shuffle carries hashes, not bodies."""
+    insensitive, functions/text.fingerprint). The dedup key is a 32-char
+    md5 hex instead of the full document — at 100 TB the shuffle carries
+    hashes, not bodies — and any SQL engine reproduces it bit for bit, so
+    the result is oracle-verifiable."""
     fp = df.withColumn("__fp", textfn.fingerprint(text_col))
-    return exact_dedup(fp, ["__fp"], id_col).drop("__fp")
-
-
-def fingerprint_dedup_portable(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """`fingerprint_dedup` on the portable md5 lane (functions/text.
-    fingerprint_portable) — identical single-shuffle shape, but the dedup
-    key is reproducible cross-engine so the result is oracle-verifiable."""
-    fp = df.withColumn("__fp", textfn.fingerprint_portable(text_col))
     return exact_dedup(fp, ["__fp"], id_col).drop("__fp")
 
 
@@ -69,57 +67,24 @@ def minhash_signatures(
     num_hashes: int = 16,
     shingle_k: int = 3,
 ) -> DataFrame:
-    """(id, signature array<bigint>) — min over the doc's distinct shingles
-    of a per-seed rehash for each seed.
+    """(id, signature array<string>) — lane `seed` is the min over the
+    doc's distinct shingles of md5('<seed>:'||shingle), compared
+    LEXICOGRAPHICALLY. md5-on-strings is the one hash every SQL engine
+    reproduces bit-identically, so the whole pipeline (signatures → bands
+    → candidates → verified dedup) is expressible as an oracle query.
 
-    Shape: explode(shingles) → one codegen'd xxhash64 per shingle STRING →
-    groupBy(id) with num_hashes min(xxhash64(h, seed)) aggregates. The
-    per-seed lanes rehash an 8-byte long, every hot expression stays inside
-    WholeStageCodegen, and the map-side partial min collapses each partition
-    to one row per doc before the single shuffle on id. (A higher-order
-    transform/array_min formulation avoids the explode but evaluates
-    interpreted — measured 6x slower at 5k docs, and its lambda tree gets
-    re-inlined into downstream banding expressions; the aggregate here is
-    also a natural optimizer barrier.)
+    Shape: explode(shingles) → groupBy(id) with num_hashes min(md5)
+    aggregates; every hot expression stays inside WholeStageCodegen, and
+    the map-side partial min collapses each partition to one row per doc
+    before the single shuffle on id. (A higher-order transform/array_min
+    formulation avoids the explode but evaluates interpreted — measured
+    6x slower at 5k docs; the aggregate is also a natural optimizer
+    barrier.)
 
     Only NULL-text docs drop out (split of '' yields [''] in Spark, so
     empty/whitespace docs produce the single '' shingle and all share one
     signature — they band-collide with each other); pair with exact/
     fingerprint dedup first to collapse empty docs cheaply."""
-    exploded = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.array_distinct(textfn.shingles(text_col, shingle_k))).alias(
-            "__s"
-        ),
-    )
-    base = exploded.select("id", F.xxhash64("__s").alias("__h"))
-    agg = base.groupBy("id").agg(
-        *[
-            F.min(F.xxhash64(F.col("__h"), F.lit(seed))).alias(f"__mh{seed}")
-            for seed in range(num_hashes)
-        ]
-    )
-    return agg.select(
-        "id",
-        F.array(*[f"__mh{i}" for i in range(num_hashes)]).alias("signature"),
-    )
-
-
-def minhash_signatures_portable(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 16,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """(id, signature array<string>) — like `minhash_signatures` but each
-    lane is min over md5('<seed>:'||shingle) compared LEXICOGRAPHICALLY.
-    md5-on-strings is the one hash every SQL engine reproduces
-    bit-identically, so this variant's whole pipeline (signatures → bands
-    → candidates → verified dedup) is expressible as an oracle query —
-    the portability/performance complement of the xxhash64 fast path
-    (32-byte string lanes vs 8-byte longs; same shuffle shape: explode →
-    per-lane min aggregates with map-side combine)."""
     exploded = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.array_distinct(textfn.shingles(text_col, shingle_k))).alias(
@@ -153,7 +118,7 @@ def minhash_signatures_oph(
     then densify empty bins by circular rotation (bin i borrows the first
     non-empty bin at or after i, the Shrivastava/Li densification scheme).
 
-    Same estimator family as `minhash_signatures_portable` but 1 md5 per
+    Same estimator family as `minhash_signatures` but 1 md5 per
     shingle instead of `num_hashes` — the hash work drops ~16x while the
     signature keeps `num_bins` lanes for banding. Every stage (md5, hex
     substr, modulo, conditional min, coalesce rotation) is reproducible in
@@ -187,39 +152,20 @@ def minhash_signatures_oph(
     return agg.select("id", F.array(*dense).alias("signature"))
 
 
-def minhash_dedup_oph(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_bins: int = 16,
-    shingle_k: int = 3,
-    bands: int = 4,
-    jaccard_threshold: float = 0.8,
+def lsh_banded_buckets(
+    signatures: DataFrame, bands: int = 4, *carry: str
 ) -> DataFrame:
-    """`minhash_dedup_portable` on one-permutation-hashing signatures —
-    identical banding/verify/anti-join pipeline, ~16x less hash work in
-    the corpus-wide signature pass (the dominant cost at 100 TB), still
-    bit-reproducible cross-engine (plans/queries.dedup_minhash_oph runs
-    the same algorithm in DuckDB)."""
-    sigs = minhash_signatures_oph(df, text_col, id_col, num_bins, shingle_k)
-    candidates = lsh_candidate_pairs_portable(sigs, bands)
-    verified = verify_jaccard(df, candidates, text_col, id_col, shingle_k).filter(
-        F.col("jaccard") >= jaccard_threshold
-    )
-    dups = verified.select(F.col("id_b").alias("__dup_id")).distinct()
-    return df.join(dups, df[id_col] == dups["__dup_id"], "left_anti")
-
-
-def lsh_banded_buckets(signatures: DataFrame, bands: int = 4) -> DataFrame:
-    """(id, band, bucket) rows: the portable md5 band-bucket projection of
+    """(id, *carry, band, bucket) rows: the md5 band-bucket projection of
     string-lane signatures — THE banding recipe. Shared by the candidate
-    join (lsh_candidate_pairs_portable) and the bucket-balance audit
-    (plans/queries.lsh_bucket_balance_audit) so the audit's pair_work
+    join (lsh_candidate_pairs), the signature-level incremental dedup
+    (which carries "signature" along) and the bucket-balance audit
+    (plans/queries.lsh_bucket_balance_audit), so the audit's pair_work
     always counts the exact candidate rows the real join emits."""
     num_hashes_col = F.size(F.col("signature"))
     rows_per_band = (num_hashes_col / bands).cast("int")
     return signatures.select(
         "id",
+        *carry,
         F.posexplode(
             F.transform(
                 F.sequence(F.lit(0), F.lit(bands - 1)),
@@ -236,95 +182,26 @@ def lsh_banded_buckets(signatures: DataFrame, bands: int = 4) -> DataFrame:
     )
 
 
-def lsh_candidate_pairs_portable(
-    signatures: DataFrame,
-    bands: int = 4,
-    materialize: bool = True,
-) -> DataFrame:
-    """`lsh_candidate_pairs` with md5 band buckets over string-lane
-    signatures (engine-portable, see minhash_signatures_portable)."""
-    banded = lsh_banded_buckets(signatures, bands)
-    if materialize:
-        banded = banded.localCheckpoint(eager=False)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
-
-
-def minhash_dedup_portable(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_hashes: int = 16,
-    shingle_k: int = 3,
-    bands: int = 4,
-    jaccard_threshold: float = 0.8,
-) -> DataFrame:
-    """`minhash_dedup` on the portable md5 lanes — every stage SQL-
-    reproducible, so the full probabilistic pipeline can be verified
-    against a cross-engine oracle (plans/queries.dedup_minhash_portable),
-    not just rows-only."""
-    sigs = minhash_signatures_portable(df, text_col, id_col, num_hashes, shingle_k)
-    candidates = lsh_candidate_pairs_portable(sigs, bands)
-    verified = verify_jaccard(df, candidates, text_col, id_col, shingle_k).filter(
-        F.col("jaccard") >= jaccard_threshold
-    )
-    dups = verified.select(F.col("id_b").alias("__dup_id")).distinct()
-    return df.join(dups, df[id_col] == dups["__dup_id"], "left_anti")
-
-
 def lsh_candidate_pairs(
     signatures: DataFrame,
     bands: int = 4,
     materialize: bool = True,
 ) -> DataFrame:
-    """Band the signatures and self-join on (band_index, band_hash) →
-    candidate (id_a, id_b) pairs with id_a < id_b. Only docs sharing a full
-    band collide, so the join output is ~the true-duplicate set, not O(n²).
+    """Band the signatures and self-join on (band, bucket) → candidate
+    (id_a, id_b) pairs with id_a < id_b. Only docs sharing a full band
+    collide, so the join output is ~the true-duplicate set, not O(n²).
 
+    The banded frame feeds both self-join sides, so it is materialized
+    once: AQE stage reuse does not fire for these shapes, and both sides
+    would otherwise recompute the whole signature pipeline (measured 2x).
+    On a cluster this is the analog of writing the signature table to
+    the lake before pairing — which `write_signature_zone` does for real.
     `materialize=False` skips the localCheckpoint — correct when
-    `signatures` is already a cheap re-scannable source (a persisted
-    signature zone, see `write_signature_zone`): re-deriving the band
-    hashes from a parquet scan costs one codegen'd xxhash64 per band, vs
-    re-running the whole shingle→minhash pipeline for in-memory lineage."""
-    num_hashes_col = F.size(F.col("signature"))
-    rows_per_band = (num_hashes_col / bands).cast("int")
-    banded = signatures.select(
-        "id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.xxhash64(
-                    F.array_join(
-                        F.transform(
-                            F.slice(
-                                F.col("signature"),
-                                b * rows_per_band + 1,
-                                rows_per_band,
-                            ),
-                            lambda v: v.cast("string"),
-                        ),
-                        ",",
-                    )
-                ),
-            )
-        ).alias("band", "bucket"),
-    )
-    # materialize the banded frame once: both self-join sides would otherwise
-    # recompute the whole signature pipeline (AQE stage reuse does not fire
-    # for these shapes — measured 2x). On a cluster this is the analog of
-    # writing the signature table to the lake before pairing — which
-    # `write_signature_zone` does for real; zone readers pass
-    # materialize=False.
+    `signatures` is already a cheap re-scannable source (the zone read
+    back with spark.read.parquet): re-deriving the band buckets from a
+    parquet scan costs one md5 per band, vs re-running the whole
+    shingle→minhash pipeline for in-memory lineage."""
+    banded = lsh_banded_buckets(signatures, bands)
     if materialize:
         banded = banded.localCheckpoint(eager=False)
     a = banded.alias("a")
@@ -343,30 +220,32 @@ def lsh_candidate_pairs(
 
 def minhash_dedup(
     df: DataFrame,
+    signatures: DataFrame,
     text_col: str,
     id_col: str,
-    num_hashes: int = 16,
     shingle_k: int = 3,
     bands: int = 4,
     jaccard_threshold: float = 0.8,
+    materialize: bool = True,
 ) -> DataFrame:
-    """Full near-dup removal: LSH candidates → exact-Jaccard verify →
-    connected via min-representative → keep one doc per duplicate cluster.
+    """Full near-dup removal over `df` given its (id, signature) rows: LSH
+    candidates → exact-Jaccard verify → threshold → drop every doc that is
+    the larger id of a verified pair. Every MinHash variant shares this
+    tail; only the signature pass differs — `minhash_signatures` (one md5
+    per shingle per lane), `minhash_signatures_oph` (one md5 per shingle),
+    or a persisted zone read back with spark.read.parquet and passed with
+    materialize=False (see lsh_candidate_pairs).
 
     Representative choice: the smallest id among a doc's verified duplicates
     (single-link, one iteration — adequate for dedup where clusters are
     cliques of near-identical docs; a full connected-components loop is the
     iterative extension)."""
-    sigs = minhash_signatures(df, text_col, id_col, num_hashes, shingle_k)
-    candidates = lsh_candidate_pairs(sigs, bands)
+    candidates = lsh_candidate_pairs(signatures, bands, materialize)
     verified = verify_jaccard(df, candidates, text_col, id_col, shingle_k).filter(
         F.col("jaccard") >= jaccard_threshold
     )
-    # every id that appears as the larger member of a verified pair is a dup
     dups = verified.select(F.col("id_b").alias("__dup_id")).distinct()
-    return df.join(
-        dups, df[id_col] == dups["__dup_id"], "left_anti"
-    )
+    return df.join(dups, df[id_col] == dups["__dup_id"], "left_anti")
 
 
 def write_signature_zone(
@@ -379,37 +258,14 @@ def write_signature_zone(
 ) -> None:
     """Persist (id, signature) to a parquet zone — the 100 TB shape for
     minhash dedup: signatures are computed ONCE over the corpus (the
-    expensive shingle→hash→min pass), stored ~16 longs/doc, and every
-    downstream pass (banding self-join, incremental dedup of new docs
-    against the corpus, re-banding with different band counts) re-reads
-    the zone instead of re-deriving. A localCheckpoint only survives one
-    driver; the zone survives the job."""
+    expensive shingle→hash→min pass), stored as 16 md5 lanes per doc, and
+    every downstream pass (banding self-join, incremental dedup of new
+    docs against the corpus, re-banding with different band counts)
+    re-reads the zone instead of re-deriving. A localCheckpoint only
+    survives one driver; the zone survives the job."""
     minhash_signatures(df, text_col, id_col, num_hashes, shingle_k).write.mode(
         "overwrite"
     ).parquet(path)
-
-
-def minhash_dedup_via_zone(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    zone_path: str,
-    shingle_k: int = 3,
-    bands: int = 4,
-    jaccard_threshold: float = 0.8,
-) -> DataFrame:
-    """`minhash_dedup` reading signatures from a persisted zone (see
-    `write_signature_zone`) instead of in-memory lineage. Both sides of the
-    banding self-join scan the zone parquet (column-pruned to id+signature,
-    no recompute), so no checkpoint is needed."""
-    spark = df.sparkSession
-    sigs = spark.read.parquet(zone_path)
-    candidates = lsh_candidate_pairs(sigs, bands, materialize=False)
-    verified = verify_jaccard(df, candidates, text_col, id_col, shingle_k).filter(
-        F.col("jaccard") >= jaccard_threshold
-    )
-    dups = verified.select(F.col("id_b").alias("__dup_id")).distinct()
-    return df.join(dups, df[id_col] == dups["__dup_id"], "left_anti")
 
 
 def incremental_minhash_dedup(
@@ -424,52 +280,25 @@ def incremental_minhash_dedup(
 ) -> DataFrame:
     """Admit only new docs that are NOT near-duplicates of the existing
     corpus — the batch-over-batch production shape: the corpus is
-    represented ONLY by its signature zone (~16 longs/doc), never rescanned.
+    represented ONLY by its signature zone (16 lanes/doc), never rescanned.
 
     New signatures band-join against zone signatures for candidates, then
     candidates verify at SIGNATURE level: estimated Jaccard = matching
     minhash lanes / num_hashes ≥ `est_jaccard_threshold`. The corpus TEXT
-    is never needed — which is the point at 100 TB: the zone is ~128
-    bytes/doc however big the documents are. Returns the admitted subset
-    of `new_docs`; callers then append the admitted docs' signatures to
-    the zone."""
+    is never needed — which is the point at 100 TB: the zone's size per
+    doc is fixed however big the documents are. Returns the admitted
+    subset of `new_docs`; callers then append the admitted docs'
+    signatures to the zone."""
     spark = new_docs.sparkSession
     corpus = spark.read.parquet(zone_path)
     new_sigs = minhash_signatures(new_docs, text_col, id_col, num_hashes, shingle_k)
-
-    def banded(sigs: DataFrame) -> DataFrame:
-        num_hashes_col = F.size(F.col("signature"))
-        rows_per_band = (num_hashes_col / bands).cast("int")
-        return sigs.select(
-            "id",
-            "signature",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(bands - 1)),
-                    lambda b: F.xxhash64(
-                        F.array_join(
-                            F.transform(
-                                F.slice(
-                                    F.col("signature"),
-                                    b * rows_per_band + 1,
-                                    rows_per_band,
-                                ),
-                                lambda v: v.cast("string"),
-                            ),
-                            ",",
-                        )
-                    ),
-                )
-            ).alias("band", "bucket"),
-        )
-
-    nb = banded(new_sigs).select(
+    nb = lsh_banded_buckets(new_sigs, bands, "signature").select(
         F.col("id").alias("new_id"),
         F.col("signature").alias("new_sig"),
         "band",
         "bucket",
     )
-    cb = banded(corpus).select(
+    cb = lsh_banded_buckets(corpus, bands, "signature").select(
         F.col("id").alias("corpus_id"),
         F.col("signature").alias("corpus_sig"),
         "band",
@@ -710,7 +539,6 @@ def winnowing_fingerprints(
     id_col: str,
     k: int = 3,
     window: int = 4,
-    fast_hash: bool = False,
 ) -> DataFrame:
     """(id, fingerprint) rows: the winnowing fingerprint set of each doc —
     hash every k-token shingle, slide a `window`-wide window over the hash
@@ -723,12 +551,7 @@ def winnowing_fingerprints(
 
     Hashes are md5 STRINGS compared lexicographically (min over strings)
     so the selection is bit-identical in any engine with md5 — no
-    engine-specific integer hash in the contract. `fast_hash=True` swaps
-    md5 for codegen'd xxhash64 longs — ~2× cheaper and 4× narrower
-    shuffle rows, the right choice when cross-engine reproducibility
-    isn't required (fingerprints are then Spark-specific but still
-    deterministic run-to-run, which is what chunk-cache/dedup reuse
-    needs).
+    engine-specific integer hash in the contract.
 
     Shape: the shingle-hash array is built ONCE per row and exploded;
     the per-window minimum is a sliding `min() OVER (rows BETWEEN 0 AND
@@ -737,14 +560,11 @@ def winnowing_fingerprints(
     the whole md5 array per window position — O(tokens²) md5 calls per doc,
     measured 10-min-plus at 5k docs vs seconds for this formulation."""
     toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
-    hash_of = (
-        (lambda s: F.xxhash64(s)) if fast_hash else (lambda s: F.md5(s))
-    )
 
     # bind the token array ONCE as a lambda variable (subexpression
     # elimination does not reach inside lambdas — referencing the split
     # directly would re-tokenize per shingle; see functions/text.shingles)
-    empty = F.array().cast("array<bigint>" if fast_hash else "array<string>")
+    empty = F.array().cast("array<string>")
 
     def _hashes_and_count(tk: Column) -> Column:
         n = F.greatest(F.size(tk) - (k - 1), F.lit(0))
@@ -755,7 +575,7 @@ def winnowing_fingerprints(
             n >= 1,
             F.transform(
                 F.sequence(F.lit(1), F.greatest(n, F.lit(1))),
-                lambda i: hash_of(F.array_join(F.slice(tk, i, k), " ")),
+                lambda i: F.md5(F.array_join(F.slice(tk, i, k), " ")),
             ),
         ).otherwise(empty)
         return F.struct(hashes.alias("h"), n.alias("n"))
@@ -791,7 +611,6 @@ def winnowing_overlap_pairs(
     k: int = 3,
     window: int = 4,
     min_shared: int = 2,
-    fast_hash: bool = False,
 ) -> DataFrame:
     """Doc pairs sharing ≥ min_shared winnowing fingerprints — partial-
     overlap (plagiarism-style) detection: catches a copied PASSAGE inside
@@ -802,9 +621,9 @@ def winnowing_overlap_pairs(
     both join sides, so it is localCheckpointed once — AQE stage reuse does
     not fire for self-joins of a derived frame, and without the checkpoint
     the whole md5+window pipeline runs twice."""
-    fp = winnowing_fingerprints(
-        df, text_col, id_col, k, window, fast_hash
-    ).localCheckpoint(eager=False)
+    fp = winnowing_fingerprints(df, text_col, id_col, k, window).localCheckpoint(
+        eager=False
+    )
     return (
         fp.alias("a")
         .join(
@@ -822,60 +641,22 @@ def winnowing_overlap_pairs(
 # SimHash
 # ---------------------------------------------------------------------------
 
-def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 64) -> DataFrame:
-    """(id, simhash bigint): per-token 64-bit hash votes per bit position;
-    the sign of each bit's vote total forms the fingerprint.
+def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 60) -> DataFrame:
+    """(id, simhash bigint): per-token hash votes per bit position; the
+    sign of each bit's vote total forms the fingerprint. Each token's hash
+    is the first 15 hex chars of md5 parsed as a 60-bit integer, which
+    every SQL engine reproduces bit-identically (the md5-lane trick of
+    minhash_signatures), so the whole pipeline (token hash → per-bit votes
+    → sign fingerprint) is expressible as a cross-engine oracle query.
 
     Shape mirrors minhash_signatures: explode(tokens) → one codegen'd
-    xxhash64 per token → groupBy(id) with `bits` vote-sum aggregates
+    md5+conv per token → groupBy(id) with `bits` vote-sum aggregates
     (map-side combine collapses to one row per doc per partition before
-    the shuffle) → fingerprint assembled with Python-int shifts. A per-row
+    the shuffle) → fingerprint assembled from the vote signs. A per-row
     higher-order fold avoids the shuffle but evaluates interpreted —
-    measured ~an order of magnitude slower."""
-    exploded = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("__tok"),
-    )
-    hashed = exploded.select("id", F.xxhash64("__tok").alias("__h"))
-    votes = hashed.groupBy("id").agg(
-        *[
-            F.sum(
-                F.when(
-                    F.shiftright(F.col("__h"), i).bitwiseAND(F.lit(1)) == 1,
-                    F.lit(1),
-                ).otherwise(F.lit(-1))
-            ).alias(f"__v{i}")
-            for i in range(bits)
-        ]
-    )
-    fingerprint = None
-    for i in range(bits):
-        # bit 63 is the sign bit: 1<<63 doesn't fit a signed long
-        bit_val = (1 << i) if i < 63 else -(1 << 63)
-        bit = F.when(F.col(f"__v{i}") > 0, F.lit(bit_val).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        fingerprint = bit if fingerprint is None else fingerprint.bitwiseOR(bit)
-    return votes.select("id", fingerprint.alias("simhash"))
-
-
-def simhash_portable(
-    df: DataFrame, text_col: str, id_col: str, bits: int = 60
-) -> DataFrame:
-    """(id, simhash bigint): `simhash` on the PORTABLE md5 token lane —
-    each token's hash is the first 15 hex chars of md5 parsed as a 60-bit
-    integer, which every SQL engine reproduces bit-identically (the same
-    md5-lane trick as minhash_signatures_portable). The whole pipeline
-    (token hash → per-bit votes → sign fingerprint) is therefore
-    expressible as a cross-engine oracle query, unlike the seeded
-    xxhash64 production lane.
-
-    Shuffle shape is identical to `simhash`: explode(tokens) → one
-    codegen'd md5+conv per token → groupBy(id) with `bits` vote-sum
-    aggregates (map-side combine), fingerprint assembled from the vote
-    signs. 60 bits (not 64) keeps the fingerprint comfortably inside a
-    signed long on both engines; band with band_bits=15 so 4 bands tile
-    the 60 bits exactly."""
+    measured ~an order of magnitude slower. 60 bits (not 64) keeps the
+    fingerprint comfortably inside a signed long on both engines; band
+    with band_bits=15 so 4 bands tile the 60 bits exactly."""
     exploded = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")).alias("__tok"),
@@ -902,10 +683,11 @@ def simhash_portable(
     return votes.select("id", fingerprint.alias("simhash"))
 
 
-def simhash_candidate_pairs(sims: DataFrame, band_bits: int = 16) -> DataFrame:
-    """Hamming-neighbor candidates via bit-banding: split the 64-bit hash
-    into 64/band_bits bands; docs equal on any band are candidates (catches
-    all pairs within (64/band_bits - 1) bit flips)."""
+def simhash_candidate_pairs(sims: DataFrame, band_bits: int = 15) -> DataFrame:
+    """Hamming-neighbor candidates via bit-banding: split the fingerprint
+    into 64//band_bits bands (4 bands of 15 tile simhash's 60 bits); docs
+    equal on any band are candidates (catches all pairs within
+    (64//band_bits - 1) bit flips)."""
     n_bands = 64 // band_bits
     mask = (1 << band_bits) - 1
     banded = sims.select(
@@ -953,30 +735,14 @@ def embedding_neardup_pairs(
     vec_col: str,
     id_col: str,
     threshold: float = 0.95,
-    n_planes: int = 8,
-    use_lsh: bool = True,
 ) -> DataFrame:
-    """Pairs of rows whose embeddings have cosine ≥ threshold.
-
-    use_lsh=True prunes with random-hyperplane sign buckets first (docs in
-    different buckets on every plane-band can't be near-duplicates with high
-    probability) — the 100 TB path. use_lsh=False is the exact quadratic
-    baseline for small inputs / verification."""
+    """Pairs of rows whose embeddings have cosine ≥ threshold — the EXACT
+    quadratic all-pairs baseline for bounded inputs and verification.
+    Corpus-scale semantic dedup bounds the pair work per cluster instead
+    (semantic_dedup_stats)."""
     slim = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
-    if use_lsh:
-        from nyc_taxi_data_pipeline_spark.operators.similarity import hyperplane_bucket
-
-        bucketed = slim.withColumn(
-            "bucket", hyperplane_bucket(F.col("v"), n_planes)
-        ).localCheckpoint(eager=False)
-        a, b = bucketed.alias("a"), bucketed.alias("b")
-        pairs = a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id")),
-        )
-    else:
-        a, b = slim.alias("a"), slim.alias("b")
-        pairs = a.join(b, F.col("a.id") < F.col("b.id"))
+    a, b = slim.alias("a"), slim.alias("b")
+    pairs = a.join(b, F.col("a.id") < F.col("b.id"))
     cos = vecfn.cosine(F.col("a.v"), F.col("b.v"))
     return (
         pairs.select(

@@ -60,6 +60,16 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
+def local_frame(df: DataFrame) -> DataFrame:
+    """`df`'s rows collected to the driver as a new frame that no longer
+    reads `df`'s sources — for a builder that deletes its scratch
+    directory before it returns. The rows cross as Arrow batches, which
+    the JVM reads back with no Python worker and with timestamps exact
+    (a Python datetime round trip goes through the local zone). Only
+    for small, bounded results."""
+    return df.sparkSession.createDataFrame(df.toArrow())
+
+
 def tiered_global_rank(
     df: DataFrame,
     tier,

@@ -2310,8 +2310,8 @@ def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     property per-epoch reshuffles and sampleBy both lack), and
     decontamination can verify val/test membership from the id alone.
     Zero shuffles until the audit rollup (one hash agg on
-    (source, split)); the portable md5 lane mirrors the dedup
-    fingerprints — production swaps xxhash64."""
+    (source, split)); md5 is the engine's one hash lane, shared with the
+    dedup fingerprints."""
     docs = _t(spark, sf_dir, "documents")
     bucket = (
         F.conv(

@@ -281,13 +281,13 @@ ORDER BY id_a, id_b
 @_register("embedding_neardup_pairs", _NEARDUP_EMB_ORACLE)
 def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, exact quadratic baseline on a
-    bounded slice (the LSH-pruned variant is the scale path; this pins the
-    math) — operators/dedup.embedding_neardup_pairs."""
+    bounded slice (the cluster-bounded semantic_dedup_stats is the scale
+    path; this pins the math) — operators/dedup.embedding_neardup_pairs."""
     from nyc_taxi_data_pipeline_spark.operators.dedup import embedding_neardup_pairs
 
     emb = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 300)
     return embedding_neardup_pairs(
-        emb, "embedding", "vec_id", threshold=0.35, use_lsh=False
+        emb, "embedding", "vec_id", threshold=0.35
     ).orderBy("id_a", "id_b")
 
 

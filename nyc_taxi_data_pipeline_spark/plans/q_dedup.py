@@ -125,17 +125,14 @@ SELECT min(doc_id) AS doc_id FROM n GROUP BY fp ORDER BY doc_id
 @_register("dedup_fingerprint_portable", _FP_PORTABLE_ORACLE)
 def dedup_fingerprint_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fingerprint dedup on the PORTABLE md5 lane (operators/dedup.
-    fingerprint_dedup_portable): dedup key is the md5 of the normalized
-    text, reproducible bit-identically in any engine — so the oracle runs
-    the ACTUAL hash-key algorithm instead of a rows-only check. The
-    8-byte xxhash64 production lane (fingerprint_dedup) keeps the same
-    single-shuffle shape and is pinned equal-output-to-this-lane in
-    tests/test_operators.py."""
-    from nyc_taxi_data_pipeline_spark.operators.dedup import fingerprint_dedup_portable
+    fingerprint_dedup): dedup key is the md5 of the normalized text,
+    reproducible bit-identically in any engine — so the oracle runs the
+    ACTUAL hash-key algorithm instead of a rows-only check."""
+    from nyc_taxi_data_pipeline_spark.operators.dedup import fingerprint_dedup
 
     d = _t(spark, sf_dir, "documents")
     return (
-        fingerprint_dedup_portable(d, "text", "doc_id")
+        fingerprint_dedup(d, "text", "doc_id")
         .select("doc_id")
         .orderBy("doc_id")
     )
@@ -310,17 +307,20 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     binning + rotation densification — the 100 TB signature-pass shape,
     see dedup_minhash_oph), so widening the signature costs no extra
     hash work; the generated oracle runs the ACTUAL signature→band→
-    verify→anti-join algorithm cross-engine (the seeded xxhash64 fast
-    path, operators/dedup.minhash_dedup, keeps the same pipeline on
-    8-byte long lanes and stays pytest-covered)."""
-    from nyc_taxi_data_pipeline_spark.operators.dedup import minhash_dedup_oph
+    verify→anti-join algorithm cross-engine (operators/dedup.
+    minhash_dedup over minhash_signatures_oph)."""
+    from nyc_taxi_data_pipeline_spark.operators.dedup import (
+        minhash_dedup,
+        minhash_signatures_oph,
+    )
 
     # r9: single-row-group scan -> 1-task shingle/signature pass; fan_out
     # parallelizes it only when the input is under-parallel (identity at
     # 100 TB). Value-safe: md5 lexicographic minima + integer lanes.
     d = fan_out(_t(spark, sf_dir, "documents"))
+    sigs = minhash_signatures_oph(d, "text", "doc_id", num_bins=24)
     return (
-        minhash_dedup_oph(d, "text", "doc_id", num_bins=24, bands=6)
+        minhash_dedup(d, sigs, "text", "doc_id", bands=6)
         .select("doc_id", "lang")
         .orderBy("doc_id")
     )
@@ -387,16 +387,14 @@ def simhash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-bit vote fingerprints, 15-bit-band LSH (4 bands tile the 60 bits),
     Hamming distance ≤ 12 — the generated oracle runs the identical
     hash→vote→sign→band→Hamming algorithm in DuckDB, so the probabilistic
-    pipeline is value-verified cross-engine. The seeded 64-bit xxhash64
-    production lane (operators/dedup.simhash) keeps the same shuffle shape
-    and stays pytest-covered."""
+    pipeline is value-verified cross-engine (operators/dedup.simhash)."""
     from nyc_taxi_data_pipeline_spark.operators.dedup import (
+        simhash,
         simhash_candidate_pairs,
-        simhash_portable,
     )
 
     d = _t(spark, sf_dir, "documents")
-    sims = simhash_portable(d, "text", "doc_id")
+    sims = simhash(d, "text", "doc_id")
     return (
         simhash_candidate_pairs(sims, band_bits=15)
         .filter(F.col("hamming") <= 12)
@@ -796,17 +794,17 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     only for candidate ids, i.e. cost is candidate-proportional, which
     is exactly why the audit can run continuously in production."""
     from nyc_taxi_data_pipeline_spark.operators.dedup import (
-        lsh_candidate_pairs_portable,
-        minhash_signatures_portable,
+        lsh_candidate_pairs,
+        minhash_signatures,
     )
     from nyc_taxi_data_pipeline_spark.functions import text as textfn
 
     # r9 fan_out: see dedup_minhash_lsh note (same lanes; 3.5 -> 1.6 s)
     d = fan_out(_t(spark, sf_dir, "documents"))
-    sigs = minhash_signatures_portable(
+    sigs = minhash_signatures(
         d, "text", "doc_id", num_hashes=_MINHASH_LANES
     ).localCheckpoint(eager=False)
-    cand = lsh_candidate_pairs_portable(sigs, bands=_MINHASH_BANDS)
+    cand = lsh_candidate_pairs(sigs, bands=_MINHASH_BANDS)
     cand = cand.localCheckpoint(eager=False)  # feeds the id-prune + joins
     # candidate-proportional verify (the verify_jaccard shape): build
     # shingle arrays ONLY for ids that appear in some candidate pair —
@@ -912,16 +910,14 @@ def lsh_bucket_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-band pair-work counts."""
     from nyc_taxi_data_pipeline_spark.operators.dedup import (
         lsh_banded_buckets,
-        minhash_signatures_portable,
+        minhash_signatures,
     )
 
     # r9 fan_out: see dedup_minhash_lsh note (same lanes; 2.8 -> 0.7 s)
     d = fan_out(_t(spark, sf_dir, "documents"))
-    sigs = minhash_signatures_portable(
-        d, "text", "doc_id", num_hashes=_MINHASH_LANES
-    )
+    sigs = minhash_signatures(d, "text", "doc_id", num_hashes=_MINHASH_LANES)
     # the SAME banding projection the candidate join uses — pair_work
-    # counts exactly the rows lsh_candidate_pairs_portable would emit
+    # counts exactly the rows lsh_candidate_pairs would emit
     banded = lsh_banded_buckets(sigs, bands=_MINHASH_BANDS)
     bucketsz = banded.groupBy("band", "bucket").agg(
         F.count(F.lit(1)).alias("c")
@@ -950,15 +946,18 @@ def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline as dedup_minhash_lsh, but every stage is bit-reproducible in
     any engine with md5 — so the ORACLE RUNS THE ACTUAL LSH ALGORITHM
     (generated SQL: 16 min-lanes, 4 md5 band buckets, exact-Jaccard
-    verify ≥ 0.8) instead of a rows-only check. The xxhash64 fast path
-    stays the production default; this pins its logic cross-engine
-    (operators/dedup.minhash_dedup_portable)."""
-    from nyc_taxi_data_pipeline_spark.operators.dedup import minhash_dedup_portable
+    verify ≥ 0.8) instead of a rows-only check (operators/dedup.
+    minhash_dedup over minhash_signatures)."""
+    from nyc_taxi_data_pipeline_spark.operators.dedup import (
+        minhash_dedup,
+        minhash_signatures,
+    )
 
     # r9 fan_out: see dedup_minhash_lsh note (same lanes; 3.2 -> 1.3 s)
     d = fan_out(_t(spark, sf_dir, "documents"))
+    sigs = minhash_signatures(d, "text", "doc_id")
     return (
-        minhash_dedup_portable(d, "text", "doc_id")
+        minhash_dedup(d, sigs, "text", "doc_id")
         .select("doc_id", "lang", "source")
         .orderBy("doc_id")
     )
@@ -973,13 +972,17 @@ def dedup_minhash_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass — the corpus-wide cost that dominates at 100 TB — does ~16x less
     hash work for the same banding width; the oracle SQL runs the identical
     algorithm, so the probabilistic pipeline stays cross-engine-verified
-    (operators/dedup.minhash_dedup_oph; Li/Owen/Zhang NIPS'12 one-
+    (operators/dedup.minhash_signatures_oph; Li/Owen/Zhang NIPS'12 one-
     permutation hashing with Shrivastava/Li rotation densification)."""
-    from nyc_taxi_data_pipeline_spark.operators.dedup import minhash_dedup_oph
+    from nyc_taxi_data_pipeline_spark.operators.dedup import (
+        minhash_dedup,
+        minhash_signatures_oph,
+    )
 
     d = _t(spark, sf_dir, "documents")
+    sigs = minhash_signatures_oph(d, "text", "doc_id")
     return (
-        minhash_dedup_oph(d, "text", "doc_id")
+        minhash_dedup(d, sigs, "text", "doc_id")
         .select("doc_id", "lang", "source")
         .orderBy("doc_id")
     )

@@ -24,6 +24,7 @@ from nyc_taxi_data_pipeline_spark.plans._base import (
     _t,
     adaptive_band_width,
     charlm_freq_score,
+    local_frame,
     tiered_global_rank,
 )
 
@@ -2085,7 +2086,7 @@ def delta_read_snapshot_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("lang")
         )
-        out = spark.createDataFrame(out.collect(), out.schema)
+        out = local_frame(out)
     finally:
         shutil.rmtree(root, ignore_errors=True)
     return out
@@ -2159,7 +2160,7 @@ def zone_occ_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("source")
         )
-        out = spark.createDataFrame(final.collect(), final.schema)
+        out = local_frame(final)
     finally:
         shutil.rmtree(zone, ignore_errors=True)
     return out
@@ -2376,7 +2377,7 @@ def bitemporal_zone_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("state")
         )
-        out = spark.createDataFrame(merged.collect(), merged.schema)
+        out = local_frame(merged)
     finally:
         shutil.rmtree(zone, ignore_errors=True)
     return out

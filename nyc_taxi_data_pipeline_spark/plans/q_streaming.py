@@ -14,6 +14,7 @@ from pyspark.sql import Window as W
 from nyc_taxi_data_pipeline_spark.plans._base import (
     _register,
     _t,
+    local_frame,
 )
 
 __all__: list[str] = []
@@ -210,7 +211,10 @@ def streaming_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioned parquet + checkpoint + read-back verify), with event-time
     date partitions instead of the reference's nondeterministic
     processing-time ones. The sink directory is re-read as a batch frame and
-    aggregated per partition — proving partition layout AND content."""
+    aggregated per partition — proving partition layout AND content. The
+    per-date aggregate is collected before the sink directory is removed,
+    so the build leaves no files behind."""
+    import shutil
     import tempfile
 
     from nyc_taxi_data_pipeline_spark.streaming.sinks import run_stream_to_parquet
@@ -219,22 +223,28 @@ def streaming_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         "date_partition", F.date_format("ts", "yyyy-MM-dd")
     )
     base = tempfile.mkdtemp(prefix="stream_sink_")
-    out = run_stream_to_parquet(
-        stream,
-        f"{base}/data",
-        f"{base}/checkpoint",
-        partition_by=("date_partition",),
-    )
-    return (
-        out.groupBy(F.col("date_partition").cast("string").alias("date_partition"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum(F.col("value").cast("decimal(38,6)")), 2)
-            .cast("double")
-            .alias("total_value"),
+    try:
+        written = run_stream_to_parquet(
+            stream,
+            f"{base}/data",
+            f"{base}/checkpoint",
+            partition_by=("date_partition",),
         )
-        .orderBy("date_partition")
-    )
+        out = local_frame(
+            written.groupBy(
+                F.col("date_partition").cast("string").alias("date_partition")
+            )
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.round(F.sum(F.col("value").cast("decimal(38,6)")), 2)
+                .cast("double")
+                .alias("total_value"),
+            )
+            .orderBy("date_partition")
+        )
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+    return out
 
 
 _STREAM_DEDUP_ORACLE = """
@@ -460,22 +470,30 @@ def streaming_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch by micro-batch (keep-newest by event time, so the final
     zone is deterministic under any batch split) — the CDC-compaction the
     reference's append-only sink never does. The returned frame is the
-    final committed version (streaming/sinks.run_stream_upsert_parquet)."""
+    final committed version (streaming/sinks.run_stream_upsert_parquet),
+    collected before the zone directory is removed."""
+    import shutil
     import tempfile
 
     from nyc_taxi_data_pipeline_spark.streaming.sinks import run_stream_upsert_parquet
 
     stream = _events_stream(spark, sf_dir)
     zone = tempfile.mkdtemp(prefix="upsert_zone_")
-    final = run_stream_upsert_parquet(
-        stream, zone, key_cols=["user_id"], order_col="ts", tiebreak_col="event_id"
-    )
-    return final.select(
-        "user_id",
-        F.col("event_type").alias("last_event_type"),
-        F.round("value", 2).alias("last_value"),
-        F.col("ts").alias("last_ts"),
-    ).orderBy("user_id")
+    try:
+        final = run_stream_upsert_parquet(
+            stream, zone, key_cols=["user_id"], order_col="ts", tiebreak_col="event_id"
+        )
+        out = local_frame(
+            final.select(
+                "user_id",
+                F.col("event_type").alias("last_event_type"),
+                F.round("value", 2).alias("last_value"),
+                F.col("ts").alias("last_ts"),
+            ).orderBy("user_id")
+        )
+    finally:
+        shutil.rmtree(zone, ignore_errors=True)
+    return out
 
 
 _SS_JOIN_ORACLE = """

@@ -62,22 +62,19 @@ def corpus_health_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the table that decides per-source mixing weights and flags a
     domain gone bad (dup_ppm spike = a crawler loop; tokens_per_doc
     collapse = truncation upstream; top_lang flip = routing bug).
-    Fingerprints reuse the engine's ONE normalization recipe
-    (functions/text._fingerprint_normalized — same regex classes on
-    both sides) so the dup rate here equals what fingerprint dedup will
-    remove. Scale shape: one scan; count(DISTINCT fp) shuffles on
-    (source, fp) with partial dedup map-side; the language argmax is a
-    bounded two-level aggregate + a tiny window — per-source rows, not
-    corpus rows. Deterministic top-lang tie-break (count desc, lang)."""
-    from nyc_taxi_data_pipeline_spark.functions.text import (
-        _fingerprint_normalized,
-    )
+    Fingerprints are the engine's ONE fingerprint (functions/text.
+    fingerprint — the oracle repeats its regex classes) so the dup rate
+    here equals what fingerprint dedup will remove. Scale shape: one
+    scan; count(DISTINCT fp) shuffles on (source, fp) with partial dedup
+    map-side; the language argmax is a bounded two-level aggregate + a
+    tiny window — per-source rows, not corpus rows. Deterministic top-lang tie-break (count desc, lang)."""
+    from nyc_taxi_data_pipeline_spark.functions.text import fingerprint
 
     d = _t(spark, sf_dir, "documents")
     base = d.filter(F.col("text").isNotNull()).select(
         "source",
         "lang",
-        F.md5(_fingerprint_normalized("text")).alias("fp"),
+        fingerprint("text").alias("fp"),
         F.size(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias(
             "n_tokens"
         ),
@@ -1602,9 +1599,9 @@ ORDER BY shard_id, position
 @_register("training_shard_shuffle", _SHARD_ORACLE)
 def training_shard_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic global training-data shuffle: every document gets a
-    pseudo-random-but-reproducible shuffle key (md5 of id + seed — the
-    portable lane; production swaps xxhash64 exactly like the dedup
-    fingerprints), the key's modulus picks the output shard, and the
+    pseudo-random-but-reproducible shuffle key (md5 of id + seed, the
+    engine's one hash lane, shared with the dedup fingerprints), the
+    key's modulus picks the output shard, and the
     within-shard ORDER is the key order — so the 'random' permutation is
     a pure function of (id, seed) and any rerun, resume, or engine swap
     reproduces it bit-for-bit. This is the step that breaks source/time

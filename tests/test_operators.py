@@ -258,15 +258,12 @@ def test_winnowing_detects_copied_passage(spark):
         ],
         "doc_id int, text string",
     )
-    for fast in (False, True):
-        pairs = {
-            (r["id_a"], r["id_b"])
-            for r in winnowing_overlap_pairs(
-                df, "text", "doc_id", min_shared=1, fast_hash=fast
-            ).collect()
-        }
-        assert (1, 2) in pairs, f"fast_hash={fast} missed the shared passage"
-        assert not any(3 in p for p in pairs), f"fast_hash={fast} false positive"
+    pairs = {
+        (r["id_a"], r["id_b"])
+        for r in winnowing_overlap_pairs(df, "text", "doc_id", min_shared=1).collect()
+    }
+    assert (1, 2) in pairs, "missed the shared passage"
+    assert not any(3 in p for p in pairs), "false positive"
 
 
 def test_content_defined_chunks_edit_locality(spark):
@@ -809,34 +806,16 @@ def test_udtf_polymorphic_analyze_schema(spark):
     assert two.asDict() == {"q1": 5.0, "q2": 9.0}
 
 
-def test_fingerprint_portable_lane_matches_xxhash_lane(spark):
-    """The portable md5 fingerprint lane (the oracle-backed catalog entry)
-    must keep exactly the same rows as the xxhash64 production lane — the
-    hash function changes, the dedup semantics must not."""
-    from nyc_taxi_data_pipeline_spark.operators.dedup import (
-        fingerprint_dedup,
-        fingerprint_dedup_portable,
-    )
-
-    d = load_table(spark, SF, "documents")
-    prod = {r["doc_id"] for r in fingerprint_dedup(d, "text", "doc_id").collect()}
-    port = {
-        r["doc_id"] for r in fingerprint_dedup_portable(d, "text", "doc_id").collect()
-    }
-    assert prod == port
-    assert len(prod) > 0
-
-
 def test_simhash_portable_matches_python_reference(spark):
-    """Lane-exact property: the distributed 60-bit portable simhash must
+    """Lane-exact property: the distributed 60-bit md5-lane simhash must
     equal an independent pure-Python recomputation (md5 token hashes,
     per-bit votes, sign fingerprint) on a document sample."""
-    from nyc_taxi_data_pipeline_spark.operators.dedup import simhash_portable
+    from nyc_taxi_data_pipeline_spark.operators.dedup import simhash
 
     d = load_table(spark, SF, "documents").filter(F.col("doc_id") < 40)
     got = {
         r["id"]: r["simhash"]
-        for r in simhash_portable(d, "text", "doc_id").collect()
+        for r in simhash(d, "text", "doc_id").collect()
     }
 
     rows = d.select("doc_id", "text").collect()
@@ -1208,12 +1187,9 @@ def test_winnowing_short_docs_yield_no_fingerprints(spark):
         (3, "a b c d e f g h"),    # normal doc
     ]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
-    for fast in (False, True):
-        got = winnowing_fingerprints(
-            df, "text", "doc_id", k=3, window=4, fast_hash=fast
-        )
-        ids = {r["id"] for r in got.collect()}
-        assert ids == {3}, ids
+    got = winnowing_fingerprints(df, "text", "doc_id", k=3, window=4)
+    ids = {r["id"] for r in got.collect()}
+    assert ids == {3}, ids
 
 
 def test_z_interleave_masks_negative_inputs(spark):

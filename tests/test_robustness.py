@@ -23,6 +23,7 @@ def test_operators_accept_empty_input(spark):
         exact_dedup,
         fingerprint_dedup,
         minhash_dedup,
+        minhash_signatures,
         simhash,
     )
     from nyc_taxi_data_pipeline_spark.operators.textstats import (
@@ -35,7 +36,8 @@ def test_operators_accept_empty_input(spark):
     empty = _empty_docs(spark)
     assert exact_dedup(empty, ["text"], "doc_id").count() == 0
     assert fingerprint_dedup(empty, "text", "doc_id").count() == 0
-    assert minhash_dedup(empty, "text", "doc_id").count() == 0
+    sigs = minhash_signatures(empty, "text", "doc_id")
+    assert minhash_dedup(empty, sigs, "text", "doc_id").count() == 0
     assert simhash(empty, "text", "doc_id").count() == 0
     assert text_stats(empty).count() == 0
     assert chunk_documents(empty).count() == 0

@@ -160,10 +160,12 @@ def test_minhash_dedup_conservative_vs_exact(spark):
     from nyc_taxi_data_pipeline_spark.operators.dedup import (
         all_pairs_jaccard,
         minhash_dedup,
+        minhash_signatures,
     )
 
     d = load_table(spark, SF, "documents")
-    mh = {r["doc_id"] for r in minhash_dedup(d, "text", "doc_id").select("doc_id").collect()}
+    sigs = minhash_signatures(d, "text", "doc_id")
+    mh = {r["doc_id"] for r in minhash_dedup(d, sigs, "text", "doc_id").select("doc_id").collect()}
     dup_b = {
         r["id_b"]
         for r in all_pairs_jaccard(d, "text", "doc_id", min_jaccard=0.8).collect()
@@ -180,19 +182,24 @@ def test_minhash_dedup_via_signature_zone(spark, tmp_path):
     the in-memory minhash_dedup."""
     from nyc_taxi_data_pipeline_spark.operators.dedup import (
         minhash_dedup,
-        minhash_dedup_via_zone,
+        minhash_signatures,
         write_signature_zone,
     )
 
     d = load_table(spark, SF, "documents")
     zone = str(tmp_path / "sig_zone")
     write_signature_zone(d, "text", "doc_id", zone)
+    zone_sigs = spark.read.parquet(zone)
     via_zone = {
         r["doc_id"]
-        for r in minhash_dedup_via_zone(d, "text", "doc_id", zone).select("doc_id").collect()
+        for r in minhash_dedup(d, zone_sigs, "text", "doc_id", materialize=False)
+        .select("doc_id")
+        .collect()
     }
+    in_mem_sigs = minhash_signatures(d, "text", "doc_id")
     in_mem = {
-        r["doc_id"] for r in minhash_dedup(d, "text", "doc_id").select("doc_id").collect()
+        r["doc_id"]
+        for r in minhash_dedup(d, in_mem_sigs, "text", "doc_id").select("doc_id").collect()
     }
     assert via_zone == in_mem
     # the zone holds one compact signature row per non-empty doc
@@ -383,7 +390,7 @@ def test_oph_signatures_fully_densified(spark):
     survivors, same as the other variants."""
     from nyc_taxi_data_pipeline_spark.operators.dedup import (
         all_pairs_jaccard,
-        minhash_dedup_oph,
+        minhash_dedup,
         minhash_signatures_oph,
     )
 
@@ -401,7 +408,7 @@ def test_oph_signatures_fully_densified(spark):
 
     oph = {
         r["doc_id"]
-        for r in minhash_dedup_oph(d, "text", "doc_id").select("doc_id").collect()
+        for r in minhash_dedup(d, sigs, "text", "doc_id").select("doc_id").collect()
     }
     dup_b = {
         r["id_b"]

@@ -906,3 +906,18 @@ def test_offset_log_rate_limit_bounds_every_batch(spark, tmp_path):
     df2 = spark.read.parquet(out)
     assert df2.count() == 720
     assert df2.select("partition", "offset").distinct().count() == 720
+
+
+def test_temp_zone_entries_leave_no_directory(spark, tmp_path, monkeypatch):
+    """The two stream entries that drain into a temporary directory (the
+    partitioned parquet sink and the upsert zone) must remove it before
+    their build returns: every catalog pass would otherwise leave two
+    directories behind in the system temp dir."""
+    import tempfile
+
+    from nyc_taxi_data_pipeline_spark.plans.queries import REGISTRY
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    for name in ("streaming_partitioned_sink", "streaming_upsert_latest"):
+        assert REGISTRY[name].spark(spark, SF).collect(), name
+    assert list(tmp_path.iterdir()) == []

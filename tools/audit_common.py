@@ -9,7 +9,8 @@ Both audit a plan shape that dies at 100 TB:
 - a `broadcast()` hint materializes the whole frame on the driver and
   ships it to every executor REGARDLESS of its size, and a `.collect()`
   at plan-build time pulls its whole result through the driver's py4j
-  channel (`take`/`head` route through collect too).
+  channel (`take`/`head` route through collect too; `.toArrow()`, which
+  plans/_base.local_frame uses, is counted the same way).
 
 All are fine for provably BOUNDED frames (calendar spines, quantile
 grids, fixed panels, dims with a fixed value domain, tier-offset
@@ -129,6 +130,7 @@ def _install_patches():
 
     orig_ckpt = CDF.localCheckpoint
     orig_collect = CDF.collect
+    orig_to_arrow = CDF.toArrow
 
     def patched_ckpt(self, eager: bool = True, storageLevel=None):
         segs = getattr(_TL, "segments", None)
@@ -136,19 +138,29 @@ def _install_patches():
             segs.append(self)
         return orig_ckpt(self, eager, storageLevel)
 
-    def patched_collect(self):
-        rows = orig_collect(self)
+    def record(self, n_rows):
         cols = getattr(_TL, "collects", None)
         if cols is not None:
-            cols.append((self.schema.simpleString()[:120], len(rows)))
+            cols.append((self.schema.simpleString()[:120], n_rows))
+
+    def patched_collect(self):
+        rows = orig_collect(self)
+        record(self, len(rows))
         return rows
+
+    def patched_to_arrow(self):
+        table = orig_to_arrow(self)
+        record(self, table.num_rows)
+        return table
 
     CDF.localCheckpoint = patched_ckpt
     CDF.collect = patched_collect
+    CDF.toArrow = patched_to_arrow
 
     def restore():
         CDF.localCheckpoint = orig_ckpt
         CDF.collect = orig_collect
+        CDF.toArrow = orig_to_arrow
 
     return restore
 

@@ -28,10 +28,13 @@ The lake defaults to $SPARK_GRAFT_SF_DIR, else the oracle gate's sf0.01
   the steady-state cost with compile and first touch amortized away.
   A scaling ratio is one `time` run per scale point, divided.
 - `plan` writes OUTDIR/<name>_<SUFFIX>.txt: `explain("formatted")` after
-  one executed `count()`, so AQE has finalized the plan that ran. For an
-  entry that starts streams, each StreamingQuery's plan
-  (`explainInternal(extended=True)`: stateful operators, state partition
-  counts) and last progress are captured before it stops and appended.
+  one executed `count()`, so AQE has finalized the plan that ran. A
+  `localCheckpoint` cuts the plan at a `Scan ExistingRDD`, so the
+  optimized plan of every frame the build checkpointed follows, in build
+  order (`show --plan` prints them too). For an entry that starts
+  streams, each StreamingQuery's plan (`explainInternal(extended=True)`:
+  stateful operators, state partition counts) and last progress are
+  captured before it stops and appended.
 
 Old commands and their new form:
     run_query.py                       → entries.py list
@@ -198,14 +201,38 @@ def _explain(df) -> str:
     return buf.getvalue()
 
 
+def build_segments(spark, name: str, sf_dir: str):
+    """Build the entry; returns (its frame, the frames the build passed to
+    `localCheckpoint`, in call order)."""
+    from tools.audit_common import _build, _install_patches
+
+    restore = _install_patches()
+    try:
+        segments, _ = _build(REGISTRY[name], spark, sf_dir)
+    finally:
+        restore()
+    return segments[-1], segments[:-1]
+
+
+def segment_plans(segments) -> str:
+    """The optimized plan of each checkpointed frame: the part of the
+    lineage an entry's own plan shows only as `Scan ExistingRDD`."""
+    return "".join(
+        f"\n# checkpointed segment {i} of {len(segments)} — optimized plan\n"
+        f"{seg._jdf.queryExecution().optimizedPlan().toString()}"  # noqa: SLF001
+        for i, seg in enumerate(segments, 1)
+    )
+
+
 def executed_plan(spark, name: str, sf_dir: str) -> str:
     """The entry's `explain("formatted")` after one executed `count()`,
-    plus the plan and last progress of every stream it started."""
+    the optimized plans of the frames it checkpointed, and the plan and
+    last progress of every stream it started."""
     with _StreamCapture() as sc:
-        df = REGISTRY[name].spark(spark, sf_dir)
+        df, segments = build_segments(spark, name, sf_dir)
         df.count()
         text = f"# {name} — explain('formatted') after execution at {sf_dir}\n"
-        text += _explain(df)
+        text += _explain(df) + segment_plans(segments)
     if sc.captures:
         text += (
             "\n# ------- streaming queries started by this entry "
@@ -219,11 +246,11 @@ def executed_plan(spark, name: str, sf_dir: str) -> str:
 
 
 def _cmd_show(spark, args) -> int:
-    df = REGISTRY[args.name].spark(spark, args.sf_dir)
+    df, segments = build_segments(spark, args.name, args.sf_dir)
     df.show(50, truncate=False)
     print(f"[{args.name}] {df.count()} rows at {args.sf_dir}")
     if args.plan:
-        print(_explain(df))
+        print(_explain(df) + segment_plans(segments))
     return 0
 
 
@@ -327,7 +354,10 @@ def main(argv=None) -> int:
     sub.add_parser("list", help="every entry and its first doc line")
     p = sub.add_parser("show", parents=[lake_dir], help="print an entry's rows")
     p.add_argument("name", type=_entry)
-    p.add_argument("--plan", action="store_true", help="also print the physical plan")
+    p.add_argument(
+        "--plan", action="store_true",
+        help="also print the physical plan and the checkpointed segments' plans",
+    )
     p = sub.add_parser("check", help="check entries against their oracles")
     p.add_argument("names", nargs="+", type=_entry)
     p.add_argument("--sf", default="0.01,0.1", help="comma-separated scale points")
