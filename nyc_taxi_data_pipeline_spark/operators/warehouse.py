@@ -206,8 +206,10 @@ def fact_trip(
 
 
 def star_dims(staging: DataFrame) -> dict[str, DataFrame]:
-    """The star's 6 dims, in dbt-DAG order (dims before the fact —
-    SURVEY.md §3.3); the fact is `fact_trip` over the same staging."""
+    """The star's 6 dims (SURVEY.md §3.3); the fact is `fact_trip` over
+    the same staging. None of the seven reads another (the fact derives
+    its dim keys in place), so they can be built in any order or all at
+    once; the dict order is only the order they are reported in."""
     return {
         "dim_vendor": dim_vendor(staging),
         "dim_rate_code": dim_rate_code(staging),

@@ -3,7 +3,7 @@ with real zone writes:
 
     raw trips → processed zone (normalize, partitioned parquet)
               → staging zone  (time dims + A1/A2 aggregate)
-              → warehouse zone (6 dims + fact, dbt-DAG order)
+              → warehouse zone (6 dims + fact, written concurrently)
               → quality gate on staging
 
 The reference runs this as four processes (python → pandas → Spark → dbt)
@@ -18,15 +18,25 @@ observe_quality) instead of reading each zone back to count it: the
 processed zone is counted as it feeds the staging write, the staging zone
 is counted and quality-gated as it feeds the fact write, and each star
 table is counted on its own write. On 20k trips that takes a run from
-65 Spark jobs to 24: at that size the cost is per job, not per row.
+65 Spark jobs to 22: at that size the cost is per job, not per row.
+
+What is left of that fixed cost runs side by side instead of in turn.
+The seven star tables share no data dependency (the fact derives its dim
+keys in place, joining no dim), so, like dbt's concurrent models, their
+writes go out together from a thread pool; each pool target inherits the
+caller's job group, local properties and job tags through
+`inheritable_thread_target`. Each partitioned zone is written by up to
+one task per core instead of one task for the whole zone.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from nyc_taxi_data_pipeline_spark.operators.aggregate import (
     derive_time_dims,
@@ -74,13 +84,16 @@ def run_batch_pipeline(
     zones = {z: os.path.join(lake_dir, z) for z in ("processed", "staging", "warehouse")}
 
     # raw → processed (P1-P6) — month-grain partitions: coarse enough to
-    # avoid small-file explosion, fine enough for pruning; repartition on
-    # the partition key so each partition lands as one file instead of one
-    # per task (at cluster scale: repartition(n, key) for n files each)
+    # avoid small-file explosion, fine enough for pruning. Hashing on the
+    # partition key sends each partition to exactly one task, so it lands
+    # as one file; the explicit count (one bucket per core) keeps AQE from
+    # coalescing the exchange into a single task that writes every
+    # partition in turn. Empty buckets write no file
+    tasks = spark.sparkContext.defaultParallelism
     processed = normalize(raw_trips, coerce_null_to_zero=coerce_null_to_zero)
     processed = processed.withColumn(
         "pickup_month", F.date_format("pickup_datetime", "yyyy-MM")
-    ).repartition("pickup_month")
+    ).repartition(tasks, "pickup_month")
     write_parquet_idempotent(processed, zones["processed"], ["pickup_month"])
 
     # processed → staging (F1-F3 + A1/A2) — partitioned by year. The read
@@ -95,13 +108,12 @@ def run_batch_pipeline(
     )
     staging = staging_aggregate(
         derive_time_dims(processed_back, "pickup_datetime")
-    ).repartition("year")
+    ).repartition(tasks, "year")
     write_parquet_idempotent(staging, zones["staging"], ["year"])
 
-    # staging → star (dims before fact, like the dbt DAG). The fact write
-    # reads every staging row before its dim predicates filter them, so
-    # the staging count and the quality gate (the GX checkpoint, §2.11)
-    # ride it
+    # staging → star. The fact write reads every staging row before its
+    # dim predicates filter them, so the staging count and the quality
+    # gate (the GX checkpoint, §2.11) ride it
     staging_back = (
         spark.read.schema(staging.schema)
         .parquet(zones["staging"])
@@ -111,9 +123,22 @@ def run_batch_pipeline(
     gated, staging_obs = observe_quality(staging_back, rules)
     star = {**star_dims(staging_back), "fact_trip": fact_trip(gated)}
     star_obs = {}
-    for name, table in star.items():
-        observed, star_obs[name] = observe_quality(table, [])
-        write_parquet(observed, os.path.join(zones["warehouse"], name))
+    # one worker per table: the seven writes are independent, and each is
+    # a few small jobs, so they overlap instead of queueing. The wrapper
+    # carries this thread's job group, local properties and job tags into
+    # the pool thread. Wrap once per write: each wrap copies the properties
+    # once, and writes sharing one copy would overwrite each other's SQL
+    # execution id in it. Leaving the pool joins every worker, so a failed
+    # write never outlives the call
+    with ThreadPoolExecutor(len(star), thread_name_prefix="star-write") as pool:
+        futures = []
+        for name, table in star.items():
+            observed, star_obs[name] = observe_quality(table, [])
+            write = inheritable_thread_target(spark)(write_parquet)
+            path = os.path.join(zones["warehouse"], name)
+            futures.append(pool.submit(write, observed, path))
+        for future in futures:  # table order: the first error is re-raised
+            future.result()
 
     gate = staging_obs.get
     counts = {

@@ -1168,14 +1168,20 @@ WITH d AS (
                        i -> array_to_string(t[i:i+2], ' '))) AS sh
   FROM (SELECT doc_id, regexp_split_to_array(trim(lower(text)), '\s+') AS t
         FROM documents)
+),
+posting AS (SELECT doc_id, unnest(sh) AS s FROM d),
+shared AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS k
+  FROM posting a JOIN posting b ON a.s = b.s AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
 )
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       round(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-             CAST(len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))
-                  AS DOUBLE), 6) AS jaccard
-FROM d a JOIN d b ON a.doc_id < b.doc_id
-WHERE 5 * len(list_intersect(a.sh, b.sh))
-      >= 4 * (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
+SELECT x.id_a, x.id_b,
+       round(CAST(x.k AS DOUBLE) /
+             CAST(len(da.sh) + len(db.sh) - x.k AS DOUBLE), 6) AS jaccard
+FROM shared x
+JOIN d da ON da.doc_id = x.id_a
+JOIN d db ON db.doc_id = x.id_b
+WHERE 5 * x.k >= 4 * (len(da.sh) + len(db.sh) - x.k)
 ORDER BY id_a, id_b
 """
 
@@ -1190,7 +1196,9 @@ def jaccard_prefix_filter_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot shingles never enter the candidate join and postings shrink by
     ~τ; an exact intersect verifies candidates with an integer
     cross-multiplied threshold (5·∩ ≥ 4·∪). The oracle recomputes the
-    answer quadratically — two independent algorithms, identical pairs
+    answer from a full inverted index over every shingle, with no prefix
+    filter: a pair sharing no shingle cannot pass, since every doc has at
+    least one. Two independent algorithms, identical pairs
     (operators/dedup.prefix_filter_jaccard)."""
     from nyc_taxi_data_pipeline_spark.operators.dedup import (
         prefix_filter_jaccard,

@@ -5,6 +5,11 @@ dynamic partition overwrite semantics.
 
 from __future__ import annotations
 
+import os
+import threading
+from pathlib import Path
+
+import pytest
 from pyspark.sql import functions as F
 
 from nyc_taxi_data_pipeline_spark.plans.pipeline import (
@@ -46,9 +51,26 @@ def test_batch_pipeline_end_to_end(spark, tmp_path):
     assert list(report["quality"]) == [r.name for r in staging_rules()]
     assert all(v == 0 for v in report["quality"].values()), report["quality"]
 
+    _assert_one_file_per_partition(lake)
+
     # idempotency: the exact same run converges to the same lake
     report2 = run_batch_pipeline(spark, raw, lake)
     assert report2["counts"] == counts
+    _assert_one_file_per_partition(lake)
+
+
+def _assert_one_file_per_partition(lake: str) -> None:
+    """Each zone is written by one task per core and the partition key
+    hashes to exactly one of them, so every partition directory of the
+    processed and staging zones holds exactly one parquet file."""
+    for zone, key in (("processed", "pickup_month"), ("staging", "year")):
+        files = {
+            d.name: sum(1 for f in d.iterdir() if f.name.endswith(".parquet"))
+            for d in Path(lake, zone).iterdir()
+            if d.is_dir() and d.name.startswith(f"{key}=")
+        }
+        assert len(files) > 1, f"{zone}: need several partitions"
+        assert set(files.values()) == {1}, f"{zone}: {files}"
 
 
 def test_dynamic_partition_overwrite_preserves_other_partitions(spark, tmp_path):
@@ -104,6 +126,86 @@ def test_batch_pipeline_job_budget(spark, tmp_path):
             sc.setLocalProperty("spark.job.description", None)
         jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
     assert max(jobs) <= PIPELINE_JOB_BUDGET, f"jobs per run: {jobs}"
+
+
+def _marker_job(spark, group: str) -> int:
+    """Run one single-task job in `group` and return its job id."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    (job,) = sc.statusTracker().getJobIdsForGroup(group)
+    return job
+
+
+def test_pipeline_jobs_stay_in_caller_job_group(spark, tmp_path, monkeypatch):
+    """The star writes run on pool threads. Job groups are thread-local
+    properties, so every job those threads launch must still carry the
+    caller's group: none may fall into the ungrouped set, and the group
+    must hold every job launched between two marker jobs. Otherwise the
+    job budget above and per-layer attribution undercount.
+
+    Each write must also run on its own copy of those properties: Spark
+    keeps a query's SQL execution id in them while it runs, so concurrent
+    writes sharing one copy overwrite each other's id, and their jobs and
+    file counts land on the wrong execution though every job keeps the
+    group."""
+    from nyc_taxi_data_pipeline_spark.plans import pipeline
+
+    sc = spark.sparkContext
+    write = pipeline.write_parquet
+    seen = {}
+
+    def recording_write(df, path, *args, **kwargs):
+        props = sc._jsc.sc().getLocalProperties()
+        seen[os.path.basename(path)] = (
+            sc._jvm.System.identityHashCode(props),
+            props.getProperty("spark.jobGroup.id"),
+        )
+        write(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "write_parquet", recording_write)
+    raw = _raw_trips(spark, SF)
+    tracker = sc.statusTracker()
+    before = _marker_job(spark, "pipeline-group-before")
+    group = "pipeline-group-run"
+    sc.setJobGroup(group, group)
+    try:
+        run_batch_pipeline(spark, raw, str(tmp_path / "lake"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    after = _marker_job(spark, "pipeline-group-after")
+
+    ungrouped = [j for j in tracker.getJobIdsForGroup(None) if before < j < after]
+    assert ungrouped == [], f"jobs outside the caller's group: {ungrouped}"
+    launched = set(range(before + 1, after))
+    assert launched and set(tracker.getJobIdsForGroup(group)) == launched
+    assert len(seen) == 7 and {g for _, g in seen.values()} == {group}, seen
+    assert len({i for i, _ in seen.values()}) == 7, f"shared properties: {seen}"
+
+
+def test_star_write_failure_propagates(spark, tmp_path, monkeypatch):
+    """A failed star write raises out of run_batch_pipeline, and the call
+    returns only after every pool thread is done."""
+    from nyc_taxi_data_pipeline_spark.plans import pipeline
+
+    write = pipeline.write_parquet
+
+    def failing_write(df, path, *args, **kwargs):
+        if os.path.basename(path) == "dim_payment":
+            raise RuntimeError("dim_payment write failed")
+        write(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "write_parquet", failing_write)
+    raw = _raw_trips(spark, SF)
+    with pytest.raises(RuntimeError, match="dim_payment write failed"):
+        run_batch_pipeline(spark, raw, str(tmp_path / "lake"))
+    pool = [t.name for t in threading.enumerate() if t.name.startswith("star-write")]
+    assert pool == [], f"pool threads still running: {pool}"
 
 
 def test_fact_trip_matches_dim_join_form(spark):
