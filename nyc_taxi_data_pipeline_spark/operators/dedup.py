@@ -770,13 +770,16 @@ def semantic_dedup_stats(
     This implementation keeps every stage in exact integer arithmetic so
     the whole pipeline is reproducible cross-engine (full value oracle):
 
-      1. int8-quantize vectors (corpus max-|x| scale, one 1-row broadcast);
+      1. int8-quantize vectors (`similarity.int8_quantize`: corpus
+         max-|x| scale, one 1-row broadcast);
       2. assign each vector to its nearest of the k data-derived centroids
          (ids ≡ 0 mod `centroid_stride`) by integer L2², ties to the
-         lowest centroid id — same recipe as `centroid_assign_quantized`,
-         so k GROWS with the corpus and cluster sizes stay bounded;
+         lowest centroid id (`similarity.nearest_centroid`, the step
+         `centroid_assign_quantized` runs), so k GROWS with the corpus and
+         cluster sizes stay bounded;
       3. within each cluster, self-join on centroid_id (a.id < b.id) and
-         keep pairs with cosine ≥ tau_num/tau_den, tested WITHOUT floats:
+         keep pairs with cosine ≥ tau_num/tau_den, tested WITHOUT floats
+         (`vector.int_dot`):
          dot > 0  ∧  tau_den²·dot² ≥ tau_num²·‖a‖²·‖b‖²
          (|dot| ≤ dim·127² so the squared products stay far inside int64);
       4. a row is dropped when any smaller-id cluster-mate is that close —
@@ -786,66 +789,39 @@ def semantic_dedup_stats(
     pass, one shuffle on centroid_id for the pair join (cluster-bounded),
     and a tiny rollup. No stage is corpus-quadratic."""
     from nyc_taxi_data_pipeline_spark.operators.similarity import (
-        _quantize,
-        int8_scale,
+        int8_quantize,
+        nearest_centroid,
     )
 
-    scale = F.broadcast(int8_scale(df, vec_col))
-    qz = (
-        df.join(scale)
-        .select(
-            F.col(id_col).alias("vid"),
-            _quantize(F.col(vec_col), F.col("q_scale")).alias("qv"),
-        )
-        .localCheckpoint(eager=False)
+    qz = int8_quantize(df, id_col, vec_col).localCheckpoint(eager=False)
+    cents = qz.filter(F.col("vec_id") % centroid_stride == 0).select(
+        F.col("vec_id").alias("centroid_id"), F.col("qv").alias("cv")
     )
-    cents = qz.filter(F.col("vid") % centroid_stride == 0).select(
-        F.col("vid").alias("centroid_id"), F.col("qv").alias("cv")
-    )
-    l2 = F.aggregate(
-        F.zip_with("qv", "cv", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    w = W.partitionBy("vid").orderBy("d2", "centroid_id")
     best = (
-        qz.crossJoin(F.broadcast(cents))
-        .select("vid", "qv", "centroid_id", l2.alias("d2"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vid", "qv", "centroid_id")
+        nearest_centroid(qz, cents)
+        .select("vec_id", "qv", "centroid_id")
         .localCheckpoint(eager=False)
     )
     # squared norms computed ONCE per vector (O(n·dim)) and carried into
     # the pair join — recomputing them per candidate pair would redo the
     # array fold up to cluster-size times per vector
-    n2 = F.aggregate(
-        F.transform(F.col("qv"), lambda x: x * x),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    normed = best.withColumn("n2", n2)
+    normed = best.withColumn("n2", vecfn.int_dot("qv", "qv"))
     a = normed.select(
         "centroid_id",
-        F.col("vid").alias("id_a"),
+        F.col("vec_id").alias("id_a"),
         F.col("qv").alias("qa"),
         F.col("n2").alias("na"),
     )
     b = normed.select(
         "centroid_id",
-        F.col("vid").alias("id_b"),
+        F.col("vec_id").alias("id_b"),
         F.col("qv").alias("qb"),
         F.col("n2").alias("nb"),
-    )
-    dot = F.aggregate(
-        F.zip_with("qa", "qb", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
     )
     pairs = (
         a.join(b, ["centroid_id"])
         .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_b", dot.alias("dot"), "na", "nb")
+        .select("id_b", vecfn.int_dot("qa", "qb").alias("dot"), "na", "nb")
     )
     dropped = (
         pairs.filter(
@@ -859,7 +835,7 @@ def semantic_dedup_stats(
         .distinct()
     )
     return (
-        best.join(dropped, best["vid"] == dropped["dup_id"], "left")
+        best.join(dropped, best["vec_id"] == dropped["dup_id"], "left")
         .groupBy("centroid_id")
         .agg(
             F.count(F.lit(1)).alias("n_members"),

@@ -3,9 +3,9 @@ with typed metadata (BASELINE.json north star).
 
 The Spark-side machinery — schemas, partitioning, Arrow-batched UDF
 signatures, batch shapes — is real and tested. Decode comes in two tiers:
-`decode_features` STUBS the general case (this container has no
-PIL/librosa/ffmpeg; it raises NotImplementedError unless `fake=True`),
-while `decode_ppm_features` and `decode_wav_features` below run REAL
+`decode_features` STUBS the general case with a deterministic byte-fold
+feature (no image/audio decode library is a dependency), while
+`decode_ppm_features` and `decode_wav_features` below run REAL
 container parsers for the two production formats that need only
 numpy + stdlib — PPM P6 images and RIFF/WAV PCM audio — proving the same
 mapInPandas plumbing carries an actual codec.
@@ -65,21 +65,13 @@ def decode_features(
     payload_col: str = "payload",
     id_col: str = "media_id",
     mime_col: str = "mime_type",
-    fake: bool = False,
 ) -> DataFrame:
-    """mapInPandas decode/feature-extract stage.
+    """mapInPandas decode/feature-extract stage with a deterministic
+    stand-in decoder: position-weighted byte sums, FEATURE_DIM lanes.
 
-    With a real decoder this is where PIL/librosa/ffmpeg would run per
-    Arrow batch; those libraries are absent here, so fake=False raises and
-    fake=True uses the deterministic stand-in. Either way the distributed
-    shape — batch iterator in, batch iterator out, fixed output schema —
-    is the production shape."""
-    if not fake:
-        raise NotImplementedError(
-            "media decoding requires image/audio libraries not present in "
-            "this environment; pass fake=True for the deterministic stub"
-        )
-
+    A real decoder (PIL/librosa/ffmpeg) would run here per Arrow batch;
+    the distributed shape — batch iterator in, batch iterator out, fixed
+    output schema — is the production shape."""
     # the closure must be SELF-CONTAINED: executors don't necessarily have
     # this package importable (driver-side sys.path doesn't propagate), and
     # cloudpickle serializes module-level helpers by reference — so the fake

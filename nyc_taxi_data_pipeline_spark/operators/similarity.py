@@ -1,6 +1,7 @@
 """Similarity search over embedding columns (array<float>).
 
-Extension surface (BASELINE.json north star). Two tiers:
+Extension surface (BASELINE.json north star). Four top-k tiers, all
+ending in the one per-query rank tail `_top_k`:
 
   brute_force_topk   exact cosine top-k: broadcast the (small) query set,
                      one pass over the corpus, per-query heap via window
@@ -10,9 +11,20 @@ Extension surface (BASELINE.json north star). Two tiers:
                      sign bits; only same-bucket candidates scored. The
                      100 TB path — the self-join degenerates from O(n·q) to
                      O(collisions).
+  ivf_topk           inverted file: sampled centroids, each vector in its
+                     nearest cell, each query probing its nearest cells —
+                     one index/probe/score path, in memory or over a zone
+                     persisted by write_ivf_zone (ivf_topk_via_zone).
+  quantized_topk     int8 scalar quantization ranked by exact integer dot.
+
+The int8 building blocks are shared by every exact-integer vector entry:
+`int8_quantize` (corpus lanes on the corpus-wide `int8_scale`),
+`nearest_centroid` (one exact k-means assignment step) and the
+mapInArrow twin `quantize_embeddings_arrow`.
 
 All vector math is JVM-side (functions.vector) — zip_with/aggregate inside
-whole-stage codegen, no Python UDFs.
+whole-stage codegen, no Python UDFs (except the Arrow quantizer, whose
+purpose is the Arrow lane).
 """
 
 from __future__ import annotations
@@ -57,6 +69,18 @@ def hyperplane_bucket(vec: Column, n_planes: int = 8, dim: int = 64) -> Column:
     return bucket
 
 
+def _top_k(scored: DataFrame, k: int, score: str) -> DataFrame:
+    """The per-query tail of every top-k here: (query_id, neighbor_id,
+    rank, score), the k highest `score` rows of each query, ties to the
+    lower neighbor_id."""
+    w = W.partitionBy("query_id").orderBy(F.col(score).desc(), F.col("neighbor_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "rank", score)
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -82,12 +106,67 @@ def brute_force_topk(
         "neighbor_id",
         F.round(vecfn.cosine(F.col("qv"), F.col("cv")), round_digits).alias("cosine"),
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
+    return _top_k(scored, k, "cosine")
+
+
+def _ivf_index(
+    corpus: DataFrame, centroid_stride: int, corpus_id: str, corpus_vec: str
+) -> tuple[DataFrame, DataFrame]:
+    """The IVF index of a corpus: its centroids (cent_id, cent_vec), every
+    `centroid_stride`-th vector by id, and its cells (neighbor_id, cell,
+    cv), each vector assigned to its nearest centroid by L2, ties to the
+    lowest centroid id (broadcast centroids, argmin via min(struct))."""
+    cents = corpus.filter(F.col(corpus_id) % centroid_stride == 0).select(
+        F.col(corpus_id).alias("cent_id"), F.col(corpus_vec).alias("cent_vec")
     )
+    assigned = (
+        corpus.select(F.col(corpus_id).alias("neighbor_id"), F.col(corpus_vec).alias("cv"))
+        .crossJoin(F.broadcast(cents))
+        .groupBy("neighbor_id")
+        .agg(
+            F.min(
+                F.struct(
+                    vecfn.l2_distance(F.col("cv"), F.col("cent_vec")).alias("d"),
+                    F.col("cent_id").alias("cell"),
+                )
+            )["cell"].alias("cell"),
+            F.first("cv").alias("cv"),
+        )
+    )
+    return cents, assigned
+
+
+def _ivf_probes(
+    queries: DataFrame, cents: DataFrame, n_probe: int, query_id: str, query_vec: str
+) -> DataFrame:
+    """(query_id, qv, cell) for each query's `n_probe` nearest cells by L2,
+    ties to the lowest cell id; broadcast, it is |queries| · n_probe rows."""
+    q_scored = (
+        queries.select(F.col(query_id).alias("query_id"), F.col(query_vec).alias("qv"))
+        .crossJoin(F.broadcast(cents))
+        .select(
+            "query_id",
+            "qv",
+            F.col("cent_id").alias("cell"),
+            vecfn.l2_distance(F.col("qv"), F.col("cent_vec")).alias("d"),
+        )
+    )
+    wq = W.partitionBy("query_id").orderBy(F.col("d").asc(), F.col("cell"))
+    return F.broadcast(
+        q_scored.withColumn("pr", F.row_number().over(wq))
+        .filter(F.col("pr") <= n_probe)
+        .select("query_id", "qv", "cell")
+    )
+
+
+def _ivf_search(assigned: DataFrame, probes: DataFrame, k: int) -> DataFrame:
+    """Score only the probed cells' vectors (equi-join on cell) and rank."""
+    scored = assigned.join(probes, "cell").select(
+        "query_id",
+        "neighbor_id",
+        F.round(vecfn.cosine(F.col("qv"), F.col("cv")), 6).alias("cosine"),
+    )
+    return _top_k(scored, k, "cosine")
 
 
 def ivf_topk(
@@ -113,56 +192,12 @@ def ivf_topk(
     Scale shape: assignment is a map-side broadcast pass; the probe join is
     equi on cell id (hash shuffle, AQE-skewable); scored candidates are
     |corpus| * n_probe / n_cells per query instead of |corpus|. At 100 TB
-    the cell assignment would be computed once and persisted alongside the
-    embeddings (it's a property of the corpus, not the query)."""
-    cents = F.broadcast(
-        corpus.filter(F.col(corpus_id) % centroid_stride == 0).select(
-            F.col(corpus_id).alias("cent_id"), F.col(corpus_vec).alias("cent_vec")
-        )
-    )
-    # corpus → cell: argmin_{centroid} l2(vec, centroid), ties to lowest id
-    assigned = (
-        corpus.select(F.col(corpus_id).alias("neighbor_id"), F.col(corpus_vec).alias("cv"))
-        .crossJoin(cents)
-        .groupBy("neighbor_id")
-        .agg(
-            F.min(
-                F.struct(
-                    vecfn.l2_distance(F.col("cv"), F.col("cent_vec")).alias("d"),
-                    F.col("cent_id").alias("cell"),
-                )
-            )["cell"].alias("cell"),
-            F.first("cv").alias("cv"),
-        )
-    )
-    # query → n_probe nearest cells
-    q_scored = (
-        queries.select(F.col(query_id).alias("query_id"), F.col(query_vec).alias("qv"))
-        .crossJoin(cents)
-        .select(
-            "query_id",
-            "qv",
-            F.col("cent_id").alias("cell"),
-            vecfn.l2_distance(F.col("qv"), F.col("cent_vec")).alias("d"),
-        )
-    )
-    wq = W.partitionBy("query_id").orderBy(F.col("d").asc(), F.col("cell"))
-    probes = F.broadcast(
-        q_scored.withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= n_probe)
-        .select("query_id", "qv", "cell")
-    )
-    scored = assigned.join(probes, "cell").select(
-        "query_id",
-        "neighbor_id",
-        F.round(vecfn.cosine(F.col("qv"), F.col("cv")), 6).alias("cosine"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    the cell assignment is computed once and persisted alongside the
+    embeddings (write_ivf_zone / ivf_topk_via_zone run the same index,
+    probe and rank)."""
+    cents, assigned = _ivf_index(corpus, centroid_stride, corpus_id, corpus_vec)
+    probes = _ivf_probes(queries, cents, n_probe, query_id, query_vec)
+    return _ivf_search(assigned, probes, k)
 
 
 def write_ivf_zone(
@@ -178,24 +213,8 @@ def write_ivf_zone(
     corpus, not the query — at 100 TB it's computed once here and every
     query run afterwards reads only the probed cells' partitions
     (partition pruning on `cell=`), never the full corpus."""
-    cents = corpus.filter(F.col(corpus_id) % centroid_stride == 0).select(
-        F.col(corpus_id).alias("cent_id"), F.col(corpus_vec).alias("cent_vec")
-    )
+    cents, assigned = _ivf_index(corpus, centroid_stride, corpus_id, corpus_vec)
     cents.write.mode("overwrite").parquet(f"{path}/centroids")
-    assigned = (
-        corpus.select(F.col(corpus_id).alias("neighbor_id"), F.col(corpus_vec).alias("cv"))
-        .crossJoin(F.broadcast(cents))
-        .groupBy("neighbor_id")
-        .agg(
-            F.min(
-                F.struct(
-                    vecfn.l2_distance(F.col("cv"), F.col("cent_vec")).alias("d"),
-                    F.col("cent_id").alias("cell"),
-                )
-            )["cell"].alias("cell"),
-            F.first("cv").alias("cv"),
-        )
-    )
     assigned.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/cells")
 
 
@@ -206,66 +225,33 @@ def ivf_topk_via_zone(
     n_probe: int = 3,
     query_id: str = "query_id",
     query_vec: str = "query_vec",
-    prune_files: bool = True,
     max_pruned_cells: int = 4096,
 ) -> DataFrame:
     """`ivf_topk` against a persisted IVF zone (see `write_ivf_zone`):
     centroids load (tiny, broadcast), each query picks its n_probe nearest
     cells, and only those cells' partitions are read.
 
-    prune_files=True collects the probed cell ids to the driver first —
-    a deliberately tiny collect (≤ distinct cells probed, itself ≤ the
+    The probed cell ids are collected to the driver first — a
+    deliberately tiny collect (≤ distinct cells probed, itself ≤ the
     zone's cell count, which is ~sqrt(corpus) by construction) — and
-    applies them as a literal `isin` filter, which Catalyst turns into
+    applied as a literal `isin` filter, which Catalyst turns into
     PartitionFilters on the zone's `cell=` directories: unprobed cells
     are never opened, the file-level analog of an inverted-file index
     seek. The collect is HARD-BOUNDED by `max_pruned_cells`: if the probe
     set exceeds it (a huge query frame probing most of the zone), the
-    literal filter would stop paying for itself, so the operator falls
-    back to the broadcast-join path automatically instead of growing an
-    unbounded driver-side list. With prune_files=False the probe set
-    stays a broadcast join and the scan reads all cell partitions
-    (correct, but full-width). Results are identical to the in-memory
-    ivf_topk given the same corpus/stride."""
+    literal filter would stop paying for itself, so the operator keeps
+    the broadcast probe join as the only pruning (correct, but the scan
+    reads every cell partition) instead of growing an unbounded
+    driver-side list. Results are identical to the in-memory ivf_topk
+    given the same corpus/stride."""
     spark = queries.sparkSession
-    cents = F.broadcast(spark.read.parquet(f"{zone_path}/centroids"))
+    cents = spark.read.parquet(f"{zone_path}/centroids")
     assigned = spark.read.parquet(f"{zone_path}/cells")
-    q_scored = (
-        queries.select(F.col(query_id).alias("query_id"), F.col(query_vec).alias("qv"))
-        .crossJoin(cents)
-        .select(
-            "query_id",
-            "qv",
-            F.col("cent_id").alias("cell"),
-            vecfn.l2_distance(F.col("qv"), F.col("cent_vec")).alias("d"),
-        )
-    )
-    wq = W.partitionBy("query_id").orderBy(F.col("d").asc(), F.col("cell"))
-    probes = F.broadcast(
-        q_scored.withColumn("pr", F.row_number().over(wq))
-        .filter(F.col("pr") <= n_probe)
-        .select("query_id", "qv", "cell")
-    )
-    if prune_files:
-        limited = (
-            probes.select("cell").distinct().limit(max_pruned_cells + 1).collect()
-        )
-        if len(limited) <= max_pruned_cells:
-            probed_cells = [r["cell"] for r in limited]
-            assigned = assigned.filter(F.col("cell").isin(probed_cells))
-        # else: probe set too wide for a literal partition filter — keep
-        # the broadcast join below as the only (scan-wide) pruning
-    scored = assigned.join(probes, "cell").select(
-        "query_id",
-        "neighbor_id",
-        F.round(vecfn.cosine(F.col("qv"), F.col("cv")), 6).alias("cosine"),
-    )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    probes = _ivf_probes(queries, cents, n_probe, query_id, query_vec)
+    limited = probes.select("cell").distinct().limit(max_pruned_cells + 1).collect()
+    if len(limited) <= max_pruned_cells:
+        assigned = assigned.filter(F.col("cell").isin([r["cell"] for r in limited]))
+    return _ivf_search(assigned, probes, k)
 
 
 def lsh_topk(
@@ -329,12 +315,7 @@ def lsh_topk(
         "neighbor_id",
         F.round(vecfn.cosine(F.col("qv"), F.col("cv")), 6).alias("cosine"),
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "cosine")
-    )
+    return _top_k(scored, k, "cosine")
 
 
 def int8_scale(corpus: DataFrame, corpus_vec: str = "embedding") -> DataFrame:
@@ -357,6 +338,35 @@ def _quantize(vec, scale) -> "Column":
     )
 
 
+def int8_quantize(
+    corpus: DataFrame, corpus_id: str = "vec_id", corpus_vec: str = "embedding"
+) -> DataFrame:
+    """(vec_id, qv): every corpus vector int8-quantized on the corpus-wide
+    scale (`int8_scale`, one 1-row broadcast; `_quantize` per lane) — one
+    narrow map pass, no shuffle over the corpus. Nothing is checkpointed:
+    a caller that reads the lanes twice checkpoints them itself."""
+    return corpus.crossJoin(F.broadcast(int8_scale(corpus, corpus_vec))).select(
+        F.col(corpus_id).alias("vec_id"),
+        _quantize(F.col(corpus_vec), F.col("q_scale")).alias("qv"),
+    )
+
+
+def nearest_centroid(points: DataFrame, cents: DataFrame) -> DataFrame:
+    """(vec_id, qv, centroid_id, d2): each point (vec_id, qv) with its
+    nearest centroid (centroid_id, cv) by exact integer L2², ties to the
+    lowest centroid id — one k-means assignment step, bit-stable in any
+    engine. Centroids broadcast (k × dim), so scoring is a map-side pass
+    and the per-point argmin window partitions by vec_id."""
+    w = W.partitionBy("vec_id").orderBy("d2", "centroid_id")
+    return (
+        points.crossJoin(F.broadcast(cents))
+        .select("vec_id", "qv", "centroid_id", vecfn.int_l2sq("qv", "cv").alias("d2"))
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .drop("rn")
+    )
+
+
 def quantized_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -374,45 +384,28 @@ def quantized_topk(
     so results are reproducible across engines, partitionings, and
     hardware — the property float cosine only gets after rounding. Max
     |qdot| ≤ dim·127² ≪ 2⁶³, so ANSI mode can't overflow. Quantization is
-    a narrow map pass; ranking is the same broadcast-queries + per-query
-    window as brute force."""
-    scale = F.broadcast(int8_scale(corpus, corpus_vec))
-    c = (
-        corpus.join(scale)
-        .select(
-            F.col(corpus_id).alias("neighbor_id"),
-            _quantize(F.col(corpus_vec), F.col("q_scale")).alias("cq"),
-        )
+    a narrow map pass (queries on the corpus scale); ranking is the same
+    broadcast-queries + per-query window as brute force."""
+    c = int8_quantize(corpus, corpus_id, corpus_vec).select(
+        F.col("vec_id").alias("neighbor_id"), F.col("qv").alias("cq")
     )
     q = F.broadcast(
-        queries.join(scale).select(
+        queries.crossJoin(F.broadcast(int8_scale(corpus, corpus_vec))).select(
             F.col(query_id).alias("query_id"),
             _quantize(F.col(query_vec), F.col("q_scale")).alias("qq"),
         )
     )
     scored = c.crossJoin(q).select(
-        "query_id",
-        "neighbor_id",
-        F.aggregate(
-            F.zip_with(F.col("qq"), F.col("cq"), lambda a, b: a * b),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).alias("qdot"),
+        "query_id", "neighbor_id", vecfn.int_dot("qq", "cq").alias("qdot")
     )
-    w = W.partitionBy("query_id").orderBy(F.col("qdot").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "qdot")
-    )
+    return _top_k(scored, k, "qdot")
 
 
 def quantize_embeddings_arrow(
     df: DataFrame,
-    scale: float | None = None,
+    scale_col: str,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    scale_col: str | None = None,
 ) -> DataFrame:
     """(id, qvec array<bigint>) — int8 symmetric quantization computed in
     a mapInArrow pass: zero-copy Arrow batches in and out, vectorized
@@ -421,20 +414,15 @@ def quantize_embeddings_arrow(
     per-row Python). This is the §2.10 Arrow-level lane, one step below
     pandas UDFs: no pandas conversion, list offsets reused as-is.
 
-    The corpus max |x| (see int8_scale) can be supplied two ways:
-      * `scale` — a Python float shipped as a closure scalar (the
-        per-ingest pattern where the scale is a persisted zone constant);
-      * `scale_col` — the name of a constant column on `df`, e.g. from
-        crossJoin(broadcast(int8_scale(df))): the whole quantization is
-        then ONE Spark action with no driver-side collect — the Arrow
-        kernel reads the scale from the first row of each batch.
+    The corpus max |x| (see int8_scale) is `scale_col`, a constant column
+    on `df`, e.g. from crossJoin(broadcast(int8_scale(df))): the whole
+    quantization is ONE Spark action with no driver-side collect — the
+    Arrow kernel reads the scale from the first row of each batch.
     Arithmetic is pinned to (x * 127.0) / scale with round
     half-away-from-zero (pyarrow round_mode='half_towards_infinity' ==
     Spark/DuckDB round), so the quantized lanes are bit-identical to the
     JVM _quantize recipe and any SQL oracle. Null embedding rows stay
     null (the input validity bitmap is carried onto qvec)."""
-    if (scale is None) == (scale_col is None):
-        raise ValueError("pass exactly one of scale / scale_col")
     out_schema = f"{id_col} bigint, qvec array<bigint>"
 
     def quantize_batches(batches):
@@ -448,12 +436,9 @@ def quantize_embeddings_arrow(
             emb = batch.column(1)
             if isinstance(emb, pa.ChunkedArray):
                 emb = emb.combine_chunks()
-            if scale is not None:
-                s = scale
-            else:
-                # scale_col is a broadcast corpus constant — identical on
-                # every row of every batch
-                s = batch.column(2)[0].as_py()
+            # scale_col is a broadcast corpus constant — identical on
+            # every row of every batch
+            s = batch.column(2)[0].as_py()
             flat = pc.cast(emb.values, "float64")
             scaled = pc.divide(pc.multiply(flat, 127.0), s)
             q = pc.cast(
@@ -469,5 +454,6 @@ def quantize_embeddings_arrow(
                 qvec = pa.ListArray.from_arrays(emb.offsets, q)
             yield pa.RecordBatch.from_arrays([ids, qvec], [id_col, "qvec"])
 
-    cols = [id_col, vec_col] + ([scale_col] if scale_col else [])
-    return df.select(*cols).mapInArrow(quantize_batches, out_schema)
+    return df.select(id_col, vec_col, scale_col).mapInArrow(
+        quantize_batches, out_schema
+    )

@@ -26,7 +26,8 @@ from nyc_taxi_data_pipeline_spark.sources.catalog import load_table
 
 @dataclass(frozen=True)
 class Query:
-    """A catalog entry: Spark plan builder + optional DuckDB oracle SQL.
+    """A catalog entry: Spark plan builder + the DuckDB oracle SQL that
+    pins its values.
 
     Every builder leaves the session's conf, temp views and functions as
     it found them. `stream` marks a builder that drains a streaming query
@@ -36,7 +37,7 @@ class Query:
 
     name: str
     spark: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None
+    oracle: str
     doc: str
     stream: bool = False
 
@@ -44,7 +45,7 @@ class Query:
 REGISTRY: dict[str, Query] = {}
 
 
-def _register(name: str, oracle: str | None, stream: bool = False):
+def _register(name: str, oracle: str, stream: bool = False):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
         if name in REGISTRY:
             raise ValueError(f"duplicate catalog entry name: {name!r}")

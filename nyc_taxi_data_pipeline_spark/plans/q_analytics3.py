@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from nyc_taxi_data_pipeline_spark.functions import scalar
+from nyc_taxi_data_pipeline_spark.functions import scalar, vector
 from nyc_taxi_data_pipeline_spark.plans._base import (
     Query,
     REGISTRY,
@@ -3668,67 +3668,41 @@ def davies_bouldin_medoid_index(
     assignment is the broadcast-medoid scoring pass; scatters are
     mergeable per-cluster means (milli lanes); the ratio matrix is
     at most 32x32."""
-    emb = _t(spark, sf_dir, "embeddings")
-    dbl = F.col("embedding").cast("array<double>")
-    scale = emb.agg(
-        F.max(F.array_max(F.transform(dbl, lambda x: F.abs(x)))).alias(
-            "q_scale"
-        )
+    from nyc_taxi_data_pipeline_spark.operators.similarity import (
+        int8_quantize,
+        nearest_centroid,
     )
-    qz = (
-        emb.crossJoin(F.broadcast(scale))
-        .select(
-            "vec_id",
-            F.transform(
-                dbl,
-                lambda x: F.round(x * 127.0 / F.col("q_scale")).cast(
-                    "long"
-                ),
-            ).alias("qv"),
-        )
-        .localCheckpoint(eager=False)
+
+    qz = int8_quantize(_t(spark, sf_dir, "embeddings")).localCheckpoint(
+        eager=False
     )
     cents = qz.filter(
         (F.col("vec_id") % 64 == 0) & (F.col("vec_id") < 2048)
     ).select(
-        F.col("vec_id").alias("cid"), F.col("qv").alias("cv")
+        F.col("vec_id").alias("centroid_id"), F.col("qv").alias("cv")
     ).localCheckpoint(eager=False)
-    d2 = (
-        "aggregate(zip_with(qv, cv, (x, y) -> (x - y) * (x - y)),"
-        " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
-    )
-    assign = (
-        qz.crossJoin(F.broadcast(cents))
-        .select("vec_id", "cid", F.expr(d2).alias("d2"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("vec_id").orderBy("d2", "cid")
-            ),
-        )
-        .filter(F.col("rn") == 1)
-    )
-    scatter = assign.groupBy("cid").agg(
+    assign = nearest_centroid(qz, cents)
+    scatter = assign.groupBy("centroid_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_members"),
         F.expr("CAST(sum(d2) * 1000 div count(*) AS BIGINT)").alias(
             "s_milli"
         ),
     ).localCheckpoint(eager=False)
     cd = (
-        cents.select(F.col("cid").alias("ci"), F.col("cv").alias("qv"))
+        cents.select(F.col("centroid_id").alias("ci"), F.col("cv").alias("qv"))
         .crossJoin(
             F.broadcast(
-                cents.select(F.col("cid").alias("cj"), "cv")
+                cents.select(F.col("centroid_id").alias("cj"), "cv")
             )
         )
         .filter(F.col("cj") != F.col("ci"))
-        .select("ci", "cj", F.expr(d2).alias("d2"))
+        .select("ci", "cj", vector.int_l2sq("qv", "cv").alias("d2"))
     )
     ratio = (
         cd.join(
             F.broadcast(
                 scatter.select(
-                    F.col("cid").alias("ci"),
+                    F.col("centroid_id").alias("ci"),
                     F.col("s_milli").alias("si"),
                 )
             ),
@@ -3737,7 +3711,7 @@ def davies_bouldin_medoid_index(
         .join(
             F.broadcast(
                 scatter.select(
-                    F.col("cid").alias("cj"),
+                    F.col("centroid_id").alias("cj"),
                     F.col("s_milli").alias("sj"),
                 )
             ),
@@ -3758,7 +3732,7 @@ def davies_bouldin_medoid_index(
     )
     return (
         ratio.join(
-            scatter.select(F.col("cid").alias("ci"), "n_members",
+            scatter.select(F.col("centroid_id").alias("ci"), "n_members",
                            "s_milli"),
             "ci",
         )
@@ -3951,25 +3925,11 @@ def power_iteration_top_eigen(spark: SparkSession, sf_dir: str) -> DataFrame:
     same trick as the PageRank entry. Scale shape: the moment build is
     one (d1, d2)-keyed mergeable agg over the capped panel; every
     iteration is a broadcast join on the 4096-cell matrix frame."""
-    emb = _t(spark, sf_dir, "embeddings")
-    dbl = F.col("embedding").cast("array<double>")
-    scale = emb.agg(
-        F.max(F.array_max(F.transform(dbl, lambda x: F.abs(x)))).alias(
-            "q_scale"
-        )
-    )
-    qz = (
-        emb.filter(F.col("vec_id") < 2000)
-        .crossJoin(F.broadcast(scale))
-        .select(
-            "vec_id",
-            F.transform(
-                dbl,
-                lambda x: F.round(x * 127.0 / F.col("q_scale")).cast(
-                    "long"
-                ),
-            ).alias("qv"),
-        )
+    from nyc_taxi_data_pipeline_spark.operators.similarity import int8_quantize
+
+    # the scale is the whole-corpus max |x|; only the panel is kept
+    qz = int8_quantize(_t(spark, sf_dir, "embeddings")).filter(
+        F.col("vec_id") < 2000
     )
     long = qz.select(
         "vec_id",
@@ -4150,26 +4110,11 @@ def diag_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     posexplode, one per-dimension moment rollup broadcast back, one
     per-vector sum -- fully mergeable, top-15 is a
     TakeOrderedAndProject."""
-    emb = _t(spark, sf_dir, "embeddings")
-    dbl = F.col("embedding").cast("array<double>")
-    scale = emb.agg(
-        F.max(F.array_max(F.transform(dbl, lambda x: F.abs(x)))).alias(
-            "q_scale"
-        )
-    )
+    from nyc_taxi_data_pipeline_spark.operators.similarity import int8_quantize
+
     long = (
-        emb.crossJoin(F.broadcast(scale))
-        .select(
-            "vec_id",
-            F.posexplode(
-                F.transform(
-                    dbl,
-                    lambda x: F.round(
-                        x * 127.0 / F.col("q_scale")
-                    ).cast("long"),
-                )
-            ).alias("d0", "x"),
-        )
+        int8_quantize(_t(spark, sf_dir, "embeddings"))
+        .select("vec_id", F.posexplode("qv").alias("d0", "x"))
         .select("vec_id", (F.col("d0") + 1).alias("d"), "x")
         .localCheckpoint(eager=False)
     )

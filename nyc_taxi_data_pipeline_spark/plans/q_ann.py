@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from nyc_taxi_data_pipeline_spark.functions import vector
 from nyc_taxi_data_pipeline_spark.plans._base import (
     _register,
     _t,
@@ -170,9 +171,7 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     out = brute_force_topk(emb, queries, k=5)
-    return out.withColumn("rank", F.col("rank").cast("int")).orderBy(
-        "query_id", "rank"
-    )
+    return out.orderBy("query_id", "rank")
 
 
 def _lsh_oracle(
@@ -234,9 +233,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     out = lsh_topk(emb, queries, k=5, n_planes=4)
-    return out.withColumn("rank", F.col("rank").cast("int")).orderBy(
-        "query_id", "rank"
-    )
+    return out.orderBy("query_id", "rank")
 
 
 @_register("ann_lsh_multiprobe_exact", _ANN_ORACLE)
@@ -262,9 +259,7 @@ def ann_lsh_multiprobe_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     out = lsh_topk(emb, queries, k=5, n_planes=4, multiprobe=4)
-    return out.withColumn("rank", F.col("rank").cast("int")).orderBy(
-        "query_id", "rank"
-    )
+    return out.orderBy("query_id", "rank")
 
 
 _NEARDUP_EMB_ORACLE = """
@@ -342,9 +337,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     out = ivf_topk(emb, queries, k=5, centroid_stride=40, n_probe=3)
-    return out.withColumn("rank", F.col("rank").cast("int")).orderBy(
-        "query_id", "rank"
-    )
+    return out.orderBy("query_id", "rank")
 
 
 _ANN_QUANT_ORACLE = """
@@ -391,9 +384,7 @@ def ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     out = quantized_topk(emb, queries, k=5)
-    return out.withColumn("rank", F.col("rank").cast("int")).orderBy(
-        "query_id", "rank"
-    )
+    return out.orderBy("query_id", "rank")
 
 
 _CENTROID_ORACLE = """
@@ -442,35 +433,19 @@ def centroid_assign_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: centroids are always broadcast-size (k × dim), scoring is
     embarrassingly parallel, and the integer arithmetic stays inside
     whole-stage codegen."""
-    emb = _t(spark, sf_dir, "embeddings")
-    dbl = F.col("embedding").cast("array<double>")
-    scale = emb.agg(
-        F.max(F.array_max(F.transform(dbl, lambda x: F.abs(x)))).alias("q_scale")
+    from nyc_taxi_data_pipeline_spark.operators.similarity import (
+        int8_quantize,
+        nearest_centroid,
     )
-    qz = (
-        emb.crossJoin(F.broadcast(scale))
-        .select(
-            "vec_id",
-            F.transform(
-                dbl, lambda x: F.round(x * 127.0 / F.col("q_scale")).cast("long")
-            ).alias("qv"),
-        )
-        .localCheckpoint(eager=False)
+
+    qz = int8_quantize(_t(spark, sf_dir, "embeddings")).localCheckpoint(
+        eager=False
     )
     cents = qz.filter(F.col("vec_id") % 64 == 0).select(
         F.col("vec_id").alias("centroid_id"), F.col("qv").alias("cv")
     )
-    d2 = F.aggregate(
-        F.zip_with("qv", "cv", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    w = W.partitionBy("vec_id").orderBy("d2", "centroid_id")
     return (
-        qz.crossJoin(F.broadcast(cents))
-        .select("vec_id", "centroid_id", d2.alias("d2"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
+        nearest_centroid(qz, cents)
         .groupBy("centroid_id")
         .agg(
             F.count(F.lit(1)).alias("n_assigned"),
@@ -1027,13 +1002,6 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=False)
     sub_ids = F.explode(F.array([F.lit(s) for s in range(8)])).alias("sub_id")
 
-    def _d2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
     cb = (
         qemb.filter(F.col("vec_id") < 16)
         .select(F.col("vec_id").alias("code_id"), "qv", sub_ids)
@@ -1056,7 +1024,7 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.transform(
                     F.col("codes"),
                     lambda c: F.struct(
-                        _d2(F.col("sv"), c["cv"]).alias("d2"),
+                        vector.int_l2sq("sv", c["cv"]).alias("d2"),
                         c["code_id"].alias("code_id"),
                     ),
                 )
@@ -1075,7 +1043,7 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "sub_id",
             F.col("c.code_id").alias("code_id"),
-            _d2(F.col("qsv"), F.col("c.cv")).alias("pdist"),
+            vector.int_l2sq("qsv", "c.cv").alias("pdist"),
         )
     )
     w = W.partitionBy("query_id").orderBy("adc_d2", "neighbor_id")
@@ -1098,7 +1066,7 @@ def pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rank",
             "neighbor_id",
             "adc_d2",
-            _d2(F.col("a_qv"), F.col("b_qv")).cast("long").alias("exact_d2"),
+            vector.int_l2sq("a_qv", "b_qv").cast("long").alias("exact_d2"),
         )
         .orderBy("query_id", "rank")
     )
@@ -1225,13 +1193,6 @@ def jl_projection_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
 
-    def _d2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
     queries = pvec.filter(
         (F.col("vec_id") % 100 == 0) & (F.col("vec_id") < 2000)
     ).select(
@@ -1243,7 +1204,7 @@ def jl_projection_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            _d2(F.col("qpv"), F.col("pv")).alias("pd2"),
+            vector.int_l2sq("qpv", "pv").alias("pd2"),
         )
         .withColumn("rn", F.row_number().over(wq))
         .filter(F.col("rn") <= 5)
@@ -1260,7 +1221,7 @@ def jl_projection_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             F.col("vec_id").alias("neighbor_id"),
-            _d2(F.col("a_qv"), F.col("qv")).alias("ed2"),
+            vector.int_l2sq("a_qv", "qv").alias("ed2"),
         )
         .withColumn("rn", F.row_number().over(we))
         .filter(F.col("rn") <= 5)
@@ -1611,36 +1572,17 @@ def kcenter_greedy_seeding(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-join + one max-agg (the incremental min-distance column
     carries forward, so pass k rescans only against the SINGLE new
     center, not all k)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    dbl = F.col("embedding").cast("array<double>")
-    scale = emb.agg(
-        F.max(F.array_max(F.transform(dbl, lambda x: F.abs(x)))).alias(
-            "q_scale"
-        )
-    )
-    qz = (
-        emb.crossJoin(F.broadcast(scale))
-        .select(
-            "vec_id",
-            F.transform(
-                dbl,
-                lambda x: F.round(x * 127.0 / F.col("q_scale")).cast(
-                    "long"
-                ),
-            ).alias("qv"),
-        )
-        .localCheckpoint(eager=False)
-    )
-    d2_expr = (
-        "aggregate(zip_with(qv, cv, (x, y) -> (x - y) * (x - y)),"
-        " CAST(0 AS BIGINT), (acc, x) -> acc + x)"
+    from nyc_taxi_data_pipeline_spark.operators.similarity import int8_quantize
+
+    qz = int8_quantize(_t(spark, sf_dir, "embeddings")).localCheckpoint(
+        eager=False
     )
     c1 = qz.orderBy("vec_id").limit(1)
     cur = (
         qz.crossJoin(
             F.broadcast(c1.select(F.col("qv").alias("cv")))
         )
-        .select("vec_id", "qv", F.expr(d2_expr).alias("md"))
+        .select("vec_id", "qv", vector.int_l2sq("qv", "cv").alias("md"))
         .localCheckpoint(eager=False)
     )
     seeds = [
@@ -1667,7 +1609,7 @@ def kcenter_greedy_seeding(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(
                 "vec_id",
                 "qv",
-                F.expr(f"least(md, {d2_expr})").alias("md"),
+                F.least("md", vector.int_l2sq("qv", "cv")).alias("md"),
             )
             .localCheckpoint(eager=False)
         )
@@ -1983,10 +1925,7 @@ def silhouette_medoid_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     d2 = q.crossJoin(F.broadcast(med)).select(
         "vec_id",
         "mid",
-        F.expr(
-            "aggregate(zip_with(qv, mv, (a, b) -> (a - b) * (a - b)),"
-            " CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-        ).alias("d2"),
+        vector.int_l2sq("qv", "mv").alias("d2"),
     )
     rk = d2.select(
         "vec_id",

@@ -2026,19 +2026,16 @@ def delta_read_snapshot_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import json
     import os
-    import shutil
     import tempfile
-    import uuid
 
     from nyc_taxi_data_pipeline_spark.sources.io import read_delta_snapshot
 
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    root = os.path.join(
-        tempfile.gettempdir(), f"delta_entry_{uuid.uuid4().hex[:12]}"
-    )
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="delta_entry_", ignore_cleanup_errors=True
+    ) as root:
         def one_file(df, sub):
             tmp = f"{root}/__tmp"
             df.coalesce(1).write.mode("overwrite").parquet(tmp)
@@ -2046,7 +2043,6 @@ def delta_read_snapshot_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.replace(src, f"{root}/{sub}")
             return sub
 
-        os.makedirs(root, exist_ok=True)
         f0 = one_file(docs.filter("doc_id < 200"), "f0.parquet")
         f1 = one_file(
             docs.filter("doc_id >= 200 AND doc_id < 400"), "f1.parquet"
@@ -2087,8 +2083,6 @@ def delta_read_snapshot_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("lang")
         )
         out = local_frame(out)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
     return out
 
 
@@ -2120,10 +2114,7 @@ def zone_occ_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
     winner ordering is forced (sequential calls with stale
     expected_version), so the result is deterministic
     (sources/io.publish_zone_partitions_cas)."""
-    import os
-    import shutil
     import tempfile
-    import uuid
 
     from nyc_taxi_data_pipeline_spark.sources.io import (
         publish_zone_partitions_cas,
@@ -2131,10 +2122,9 @@ def zone_occ_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "source")
-    zone = os.path.join(
-        tempfile.gettempdir(), f"occ_entry_{uuid.uuid4().hex[:12]}"
-    )
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="occ_entry_", ignore_cleanup_errors=True
+    ) as zone:
         base = docs.filter("doc_id < 300")
         publish_zone_partitions_cas(spark, zone, base, "source", -1)
         upd_a = docs.filter(
@@ -2161,8 +2151,6 @@ def zone_occ_protocol(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("source")
         )
         out = local_frame(final)
-    finally:
-        shutil.rmtree(zone, ignore_errors=True)
     return out
 
 
@@ -2311,10 +2299,7 @@ def bitemporal_zone_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan predicate; the final reconciliation is a tiny full-outer join on
     state (sources/io.publish_zone_version, read_zone_snapshot; reference
     lakehouse intent: scripts/convert_to_delta.py)."""
-    import os
-    import shutil
     import tempfile
-    import uuid
 
     from nyc_taxi_data_pipeline_spark.operators.warehouse import (
         scd2_from_changelog,
@@ -2342,10 +2327,9 @@ def bitemporal_zone_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             "valid_to",
         )
 
-    zone = os.path.join(
-        tempfile.gettempdir(), f"bitemporal_{uuid.uuid4().hex[:12]}"
-    )
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="bitemporal_", ignore_cleanup_errors=True
+    ) as zone:
         v0 = publish_zone_version(
             scd(e.filter(F.col("event_type") != "purchase")), zone, -1
         )
@@ -2378,8 +2362,6 @@ def bitemporal_zone_query(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("state")
         )
         out = local_frame(merged)
-    finally:
-        shutil.rmtree(zone, ignore_errors=True)
     return out
 
 

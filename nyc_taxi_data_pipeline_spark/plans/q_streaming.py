@@ -214,7 +214,6 @@ def streaming_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated per partition — proving partition layout AND content. The
     per-date aggregate is collected before the sink directory is removed,
     so the build leaves no files behind."""
-    import shutil
     import tempfile
 
     from nyc_taxi_data_pipeline_spark.streaming.sinks import run_stream_to_parquet
@@ -222,8 +221,9 @@ def streaming_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _events_stream(spark, sf_dir).withColumn(
         "date_partition", F.date_format("ts", "yyyy-MM-dd")
     )
-    base = tempfile.mkdtemp(prefix="stream_sink_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_sink_", ignore_cleanup_errors=True
+    ) as base:
         written = run_stream_to_parquet(
             stream,
             f"{base}/data",
@@ -242,8 +242,6 @@ def streaming_partitioned_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .orderBy("date_partition")
         )
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
     return out
 
 
@@ -354,7 +352,7 @@ def multimodal_decode_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("mime_type"),
         F.col("text").cast("binary").alias("payload"),
     )
-    feats = decode_features(media, fake=True)
+    feats = decode_features(media)
     return (
         feats.groupBy("mime_type")
         .agg(
@@ -472,14 +470,14 @@ def streaming_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's append-only sink never does. The returned frame is the
     final committed version (streaming/sinks.run_stream_upsert_parquet),
     collected before the zone directory is removed."""
-    import shutil
     import tempfile
 
     from nyc_taxi_data_pipeline_spark.streaming.sinks import run_stream_upsert_parquet
 
     stream = _events_stream(spark, sf_dir)
-    zone = tempfile.mkdtemp(prefix="upsert_zone_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="upsert_zone_", ignore_cleanup_errors=True
+    ) as zone:
         final = run_stream_upsert_parquet(
             stream, zone, key_cols=["user_id"], order_col="ts", tiebreak_col="event_id"
         )
@@ -491,8 +489,6 @@ def streaming_upsert_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("ts").alias("last_ts"),
             ).orderBy("user_id")
         )
-    finally:
-        shutil.rmtree(zone, ignore_errors=True)
     return out
 
 

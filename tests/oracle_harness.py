@@ -22,12 +22,37 @@ from __future__ import annotations
 import math
 import re
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 import duckdb
 
 from nyc_taxi_data_pipeline_spark.sources.catalog import TABLES, table_path
 
 SF_DIR = "/root/testdata/sf0.01"
+
+
+def run_catalog(queries, one) -> dict:
+    """{name: one(query), or the exception it raised} for every query.
+
+    Batch entries run on a pool of 8 threads: Spark schedules concurrent
+    jobs from one session (guide §2.6), and every batch builder leaves the
+    session's conf, temp views and functions as it found them
+    (tests/test_plans.py checks it). Stream entries (`Query.stream`) pin
+    shuffle.partitions while their query starts, so a stream entry never
+    builds beside another builder: they run one at a time, in order,
+    after the pool drains."""
+
+    def safe(q):
+        try:
+            return one(q)
+        except Exception as e:  # noqa: BLE001 — the caller decides
+            return e
+
+    batch = [q for q in queries if not q.stream]
+    with ThreadPoolExecutor(max_workers=8) as pool:
+        out = dict(zip([q.name for q in batch], pool.map(safe, batch)))
+    out.update((q.name, safe(q)) for q in queries if q.stream)
+    return out
 
 # --- canonical dtype lattice -----------------------------------------------
 

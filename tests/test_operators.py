@@ -176,25 +176,11 @@ def test_decode_features_partition_invariant(spark):
         F.lit("text/plain").alias("mime_type"),
         F.col("text").cast("binary").alias("payload"),
     )
-    one = decode_features(d.repartition(1), fake=True).collect()
-    many = decode_features(d.repartition(8), fake=True).collect()
+    one = decode_features(d.repartition(1)).collect()
+    many = decode_features(d.repartition(8)).collect()
     key = lambda rows: sorted((r["media_id"], tuple(r["feature"])) for r in rows)
     assert key(one) == key(many)
     assert all(len(r["feature"]) == FEATURE_DIM for r in one)
-
-
-def test_decode_features_without_libs_raises(spark):
-    import pytest
-
-    from nyc_taxi_data_pipeline_spark.operators.multimodal import decode_features
-
-    d = load_table(spark, SF, "documents").select(
-        F.col("doc_id").alias("media_id"),
-        F.lit("image/png").alias("mime_type"),
-        F.col("text").cast("binary").alias("payload"),
-    )
-    with pytest.raises(NotImplementedError):
-        decode_features(d, fake=False)
 
 
 def test_compact_parquet_zone(spark, tmp_path):

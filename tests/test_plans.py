@@ -48,16 +48,15 @@ def _build_plan(spark, name: str) -> str:
 # EXECUTES its exchange stages, so the two parametrized sweeps cost two
 # extra suite passes (r9: 154 s + 151 s of the pytest wall; the driver's
 # verify window truncated at 68% in r8). Plan builders are deterministic,
-# so ONE build per entry serves every needle check. The cache is warmed
-# from a small thread pool (Spark schedules concurrent jobs from one
-# session, guide §2.6). Every batch builder leaves the session as it found
-# it, so all of them share the pool; stream entries (`Query.stream`) pin
-# shuffle.partitions while their query starts, so each builds inline,
-# alone, the first time a test asks. Both paths record what the builds did
-# to the session, for test_builders_leave_session_as_found.
+# so ONE build per entry serves every needle check. The whole catalog is
+# built once through oracle_harness.run_catalog (batch entries pooled,
+# stream entries one at a time after the pool drains). The warm records
+# what the builds did to the session, and each stream entry's build —
+# alone on the session — records its own, for
+# test_builders_leave_session_as_found.
 _PLAN_CACHE: dict[str, object] = {}
-# (streaming-query starts, session diff) of each pooled warm
-_POOL_EFFECTS: list[tuple[int, dict]] = []
+# (streaming-query starts, session diff) of the whole warm
+_WARM_EFFECT: list[tuple[int, dict]] = []
 # stream entry name -> (streaming-query starts, session diff) of its build
 _STREAM_EFFECTS: dict[str, tuple[int, dict]] = {}
 _QUERY_STARTS: list[str] = []
@@ -123,63 +122,49 @@ def _recorded_build(spark, build) -> tuple[object, int, dict]:
 
 
 def _warm_plan_cache(spark) -> None:
-    from concurrent.futures import ThreadPoolExecutor
+    from tests.oracle_harness import run_catalog
 
-    pooled = [
-        n for n, q in REGISTRY.items() if n not in _PLAN_CACHE and not q.stream
-    ]
-    if not pooled:
+    if _PLAN_CACHE:
         return
 
-    def one(n):
-        try:
-            return n, _build_plan(spark, n)
-        except Exception as e:  # noqa: BLE001 — re-raised by the owning test
-            return n, e
+    def build(q):
+        if not q.stream:
+            return _build_plan(spark, q.name)
+        plan, starts, diff = _recorded_build(spark, lambda: _build_plan(spark, q.name))
+        _STREAM_EFFECTS[q.name] = (starts, diff)
+        return plan
 
-    def build_all():
-        with ThreadPoolExecutor(max_workers=8) as pool:
-            return list(pool.map(one, pooled))
-
-    built, starts, diff = _recorded_build(spark, build_all)
+    built, starts, diff = _recorded_build(
+        spark, lambda: run_catalog(list(REGISTRY.values()), build)
+    )
     _PLAN_CACHE.update(built)
-    _POOL_EFFECTS.append((starts, diff))
+    _WARM_EFFECT.append((starts, diff))
 
 
 def _plan(spark, name: str) -> str:
-    plan = _PLAN_CACHE.get(name)
-    if plan is None and not REGISTRY[name].stream:
-        _warm_plan_cache(spark)
-        plan = _PLAN_CACHE.get(name)
-    if plan is None:  # stream entries: never pooled, build inline
-        plan, starts, diff = _recorded_build(spark, lambda: _build_plan(spark, name))
-        _PLAN_CACHE[name] = plan
-        _STREAM_EFFECTS[name] = (starts, diff)
+    _warm_plan_cache(spark)
+    plan = _PLAN_CACHE[name]
     if isinstance(plan, Exception):
         raise plan
     return plan
 
 
 def test_builders_leave_session_as_found(spark):
-    """The pooled warm of every batch builder starts no streaming query and
-    leaves the session's conf map, temp views and temporary functions as
-    it found them — which is what makes pooling them safe. Each stream
-    entry, built inline, starts at least one query and leaves the same
-    three unchanged. Recorded during the plan-cache builds, so no entry is
-    built twice."""
+    """The warm of every builder leaves the session's conf map, temp views
+    and temporary functions as it found them, and every streaming query it
+    started belongs to a stream entry's build — so the pooled batch
+    builders started none, which is what makes pooling them safe. Each
+    stream entry, built alone, starts at least one query and leaves the
+    same three unchanged. Recorded during the plan-cache builds, so no
+    entry is built twice."""
     _warm_plan_cache(spark)
-    assert _POOL_EFFECTS
-    assert all(effect == (0, {}) for effect in _POOL_EFFECTS), _POOL_EFFECTS
     streams = [n for n, q in REGISTRY.items() if q.stream]
     assert "stream_static_enrichment" in streams
-    for n in streams:
-        _plan(spark, n)
-    bad = {
-        n: _STREAM_EFFECTS[n]
-        for n in streams
-        if _STREAM_EFFECTS[n][0] < 1 or _STREAM_EFFECTS[n][1]
-    }
+    assert sorted(_STREAM_EFFECTS) == sorted(streams)
+    bad = {n: e for n, e in _STREAM_EFFECTS.items() if e[0] < 1 or e[1]}
     assert not bad, bad
+    stream_starts = sum(e[0] for e in _STREAM_EFFECTS.values())
+    assert _WARM_EFFECT == [(stream_starts, {})], _WARM_EFFECT
 
 
 def test_q01_scan_pushdown_and_pruning(spark):
@@ -271,8 +256,6 @@ _PYTHON_BY_DESIGN = {
 def test_no_python_in_hot_path(spark, name):
     """Every operator except the explicit Python-surface entries must stay
     JVM-side — no row-at-a-time or vectorized Python eval in the plan."""
-    if name.startswith("streaming_"):
-        pytest.skip("streaming queries materialize sinks; plan is the sink read")
     plan = _plan(spark, name)
     for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas"):
         assert marker not in plan, f"{name} has Python stage {marker}"
@@ -384,8 +367,6 @@ def test_no_unbroadcast_cartesian_anywhere(spark, name):
     O(n·m) without even a broadcast bound) must never appear. Intentional
     cross joins in the catalog are all broadcast-bounded (1-row scalar
     frames, small probe sets) and plan as BroadcastNestedLoopJoin."""
-    if name.startswith("streaming_") or name.startswith("stream_stream"):
-        pytest.skip("streaming queries materialize sinks; plan is the sink read")
     plan = _plan(spark, name)
     assert "CartesianProduct" not in plan, f"{name} has a shuffled cartesian"
 

@@ -7,35 +7,20 @@ from __future__ import annotations
 import pytest
 
 from nyc_taxi_data_pipeline_spark.plans.queries import REGISTRY
-from tests.oracle_harness import compare_query
-
-ORACLE_QUERIES = [q for q in REGISTRY.values() if q.oracle is not None]
-ROWS_ONLY_QUERIES = [q for q in REGISTRY.values() if q.oracle is None]
-
-
-@pytest.mark.parametrize("query", ROWS_ONLY_QUERIES, ids=lambda q: q.name)
-def test_rows_only_query_runs(spark, query):
-    """Queries without a SQL oracle (hash-seeded / probabilistic / streaming)
-    still must run and produce a stable non-empty schema at sf0.01."""
-    df = query.spark(spark, "/root/testdata/sf0.01")
-    assert df.columns
-    assert df.count() >= 0
+from tests.oracle_harness import compare_query, duck_connection, run_catalog
 
 
 # The 562 oracle replays are mutually independent Spark+DuckDB runs; run
 # serially they were 530 s of the r9 pytest wall (the driver's verify
 # window truncated at 68% in r8 before the suite finished). Spark happily
 # runs concurrent jobs from one session (guide §2.6) and DuckDB runs one
-# connection per thread, so the reports are precomputed once from a small
-# thread pool and each parametrized test asserts its own entry's report —
-# same comparisons, same per-test attribution. Under -x the run still
+# connection per thread, so the reports are precomputed once through
+# oracle_harness.run_catalog (batch entries pooled, stream entries one at
+# a time after) and each parametrized test asserts its own entry's report
+# — same comparisons, same per-test attribution. Under -x the run still
 # stops at the first failing entry, but only after the first test has
 # computed the report of every collected entry (so `-k` replays only what
-# it selects). Every batch builder leaves the session's conf, temp views
-# and functions as it found them (tests/test_plans.py checks it), so all of
-# them share the pool; stream entries (`Query.stream`) pin
-# shuffle.partitions while their query starts, so they run one at a time
-# after the pool drains.
+# it selects).
 _REPORTS: dict[str, object] = {}
 
 
@@ -51,9 +36,6 @@ def _collected_oracle_queries(session) -> list:
 
 def _compute_reports(spark, queries) -> None:
     import threading
-    from concurrent.futures import ThreadPoolExecutor
-
-    from tests.oracle_harness import duck_connection
 
     tl = threading.local()
 
@@ -61,21 +43,12 @@ def _compute_reports(spark, queries) -> None:
         con = getattr(tl, "con", None)
         if con is None:
             con = tl.con = duck_connection()
-        try:
-            return q.name, compare_query(spark, con, q)
-        except Exception as e:  # noqa: BLE001 — re-raised by the owning test
-            return q.name, e
+        return compare_query(spark, con, q)
 
-    pooled = [q for q in queries if not q.stream]
-    serial = [q for q in queries if q.stream]
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        for name, rep in pool.map(one, pooled):
-            _REPORTS[name] = rep
-    for q in serial:
-        _REPORTS[q.name] = one(q)[1]
+    _REPORTS.update(run_catalog(queries, one))
 
 
-@pytest.mark.parametrize("query", ORACLE_QUERIES, ids=lambda q: q.name)
+@pytest.mark.parametrize("query", list(REGISTRY.values()), ids=lambda q: q.name)
 def test_query_matches_oracle(spark, request, query):
     if not _REPORTS:
         _compute_reports(spark, _collected_oracle_queries(request.session))

@@ -303,22 +303,29 @@ def test_ivf_zone_matches_in_memory(spark, tmp_path):
         (r["query_id"], r["rank"], r["neighbor_id"], r["cosine"])
         for r in ivf_topk(emb, queries, k=5, centroid_stride=40, n_probe=3).collect()
     )
-    for prune in (False, True):
-        df = ivf_topk_via_zone(queries, zone, k=5, n_probe=3, prune_files=prune)
+    # max_pruned_cells=0 takes the bounded fallback (broadcast probe join
+    # over every cell partition), the default the literal partition filter
+    plans = {}
+    for cap in (0, 4096):
+        df = ivf_topk_via_zone(queries, zone, k=5, n_probe=3, max_pruned_cells=cap)
         via_zone = sorted(
             (r["query_id"], r["rank"], r["neighbor_id"], r["cosine"])
             for r in df.collect()
         )
-        assert via_zone == in_mem, f"prune_files={prune} diverged"
+        assert via_zone == in_mem, f"max_pruned_cells={cap} diverged"
+        plans[cap] = [
+            l
+            for l in df._jdf.queryExecution().executedPlan().toString().splitlines()  # noqa: SLF001
+            if "PartitionFilters" in l
+        ]
     # the zone is laid out for partition pruning on cell...
     import os
 
     assert any(d.startswith("cell=") for d in os.listdir(f"{zone}/cells"))
-    # ...and the pruned path actually lands the probe set as PartitionFilters
-    pruned = ivf_topk_via_zone(queries, zone, k=5, n_probe=3, prune_files=True)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
-    scan_lines = [l for l in plan.splitlines() if "PartitionFilters" in l]
-    assert any("cell" in l and "IN" in l.upper() for l in scan_lines), scan_lines
+    # ...the pruned path lands the probe set as PartitionFilters, and the
+    # fallback does not
+    assert any("cell" in l and "IN" in l.upper() for l in plans[4096]), plans[4096]
+    assert not any(" INSET " in l or " IN (" in l for l in plans[0]), plans[0]
 
 
 def test_quantized_topk_recall_vs_brute(spark):
@@ -489,45 +496,29 @@ def test_arrow_quantize_matches_jvm_recipe(spark):
     )
 
     emb = load_table(spark, SF, "embeddings")
-    scale = float(int8_scale(emb).collect()[0][0])
+    emb = emb.crossJoin(F.broadcast(int8_scale(emb)))
     arrow = {
         r["vec_id"]: r["qvec"]
-        for r in quantize_embeddings_arrow(emb, scale).collect()
+        for r in quantize_embeddings_arrow(emb, "q_scale").collect()
     }
     jvm = {
         r["vec_id"]: r["qvec"]
         for r in emb.select(
-            "vec_id", _quantize(F.col("embedding"), F.lit(scale)).alias("qvec")
+            "vec_id", _quantize(F.col("embedding"), F.col("q_scale")).alias("qvec")
         ).collect()
     }
     assert arrow == jvm
 
 
 def test_arrow_quantize_scale_col_lane_and_null_mask(spark):
-    """The scale_col lane (broadcast corpus constant, zero driver collect)
-    must match the closure-scalar lane bit-for-bit, and a NULL embedding
-    row must stay NULL in qvec (validity bitmap carried through the Arrow
-    kernel, not collapsed to an empty list)."""
+    """Through the scale_col lane, a NULL embedding row must stay NULL in
+    qvec (validity bitmap carried through the Arrow kernel, not collapsed
+    to an empty list)."""
     from pyspark.sql import types as T
 
     from nyc_taxi_data_pipeline_spark.operators.similarity import (
-        int8_scale,
         quantize_embeddings_arrow,
     )
-
-    emb = load_table(spark, SF, "embeddings")
-    scale = float(int8_scale(emb).collect()[0][0])
-    scalar_lane = {
-        r["vec_id"]: r["qvec"]
-        for r in quantize_embeddings_arrow(emb, scale).collect()
-    }
-    col_lane = {
-        r["vec_id"]: r["qvec"]
-        for r in quantize_embeddings_arrow(
-            emb.crossJoin(F.broadcast(int8_scale(emb))), scale_col="q_scale"
-        ).collect()
-    }
-    assert scalar_lane == col_lane
 
     schema = T.StructType(
         [
@@ -540,7 +531,9 @@ def test_arrow_quantize_scale_col_lane_and_null_mask(spark):
     )
     out = {
         r["vec_id"]: r["qvec"]
-        for r in quantize_embeddings_arrow(with_null, 2.0).collect()
+        for r in quantize_embeddings_arrow(
+            with_null.withColumn("q_scale", F.lit(2.0)), "q_scale"
+        ).collect()
     }
     assert out[2] is None
     assert out[1] == [64, -127] and out[3] == [32, 16]

@@ -53,11 +53,10 @@ import json
 import os
 import sys
 import threading
-from concurrent.futures import ThreadPoolExecutor
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tests.oracle_harness import SF_DIR  # noqa: E402
+from tests.oracle_harness import SF_DIR, run_catalog  # noqa: E402
 
 SF_SMALL = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
 SF_BIG = SF_DIR  # sf0.01
@@ -234,51 +233,43 @@ def _error(e) -> dict:
     return {"error": f"{type(e).__name__}: {e}"[:200]}
 
 
-def _sweep(items, spark, sf_dir, memo, lock, max_workers) -> dict:
+def _sweep(queries, spark, sf_dir, memo, lock) -> dict:
     """{name: (windows, hints, collects) or the exception} at one scale
-    point: pooled batch builders first, then the stream entries alone."""
-
-    def one(nq):
-        name, query = nq
-        try:
-            return name, _suspects(query, spark, sf_dir, memo, lock)
-        except Exception as e:  # noqa: BLE001 — record, don't abort the sweep
-            return name, e
-
-    with ThreadPoolExecutor(max_workers=max_workers) as pool:
-        out = dict(pool.map(one, [nq for nq in items if not nq[1].stream]))
-    out.update(one(nq) for nq in items if nq[1].stream)
-    return out
+    point (tests/oracle_harness.run_catalog: batch builders pooled, then
+    the stream entries alone)."""
+    return run_catalog(
+        queries, lambda q: _suspects(q, spark, sf_dir, memo, lock)
+    )
 
 
-def combined_audit_catalog(spark, names=None, max_workers=8):
+def combined_audit_catalog(spark, names=None):
     """Run both audits from one build pass; returns (window_report,
     broadcast_report), each {entry: {...}} for every entry with at least
     one suspect of its kind, with `flagged: True` where an input is
     data-sized."""
     from nyc_taxi_data_pipeline_spark.plans.queries import REGISTRY
 
-    items = [(n, q) for n, q in REGISTRY.items() if names is None or n in names]
+    queries = [q for n, q in REGISTRY.items() if names is None or n in names]
     memo: dict = {}
     lock = threading.Lock()
     win_report: dict[str, dict] = {}
     bc_report: dict[str, dict] = {}
     restore = _install_patches()
     try:
-        small = _sweep(items, spark, SF_SMALL, memo, lock, max_workers)
+        small = _sweep(queries, spark, SF_SMALL, memo, lock)
         need_big = []
-        for name, query in items:
-            res = small[name]
+        for query in queries:
+            res = small[query.name]
             if isinstance(res, Exception):
-                win_report[name] = _error(res)
-                bc_report[name] = _error(res)
+                win_report[query.name] = _error(res)
+                bc_report[query.name] = _error(res)
             elif any(res):
-                need_big.append((name, query))
-        big = _sweep(need_big, spark, SF_BIG, memo, lock, max_workers)
+                need_big.append(query)
+        big = _sweep(need_big, spark, SF_BIG, memo, lock)
     finally:
         restore()
 
-    for name, _ in need_big:
+    for name in (q.name for q in need_big):
         wins_s, hints_s, collects_s = small[name]
         res_b = big[name]
         if isinstance(res_b, Exception):

